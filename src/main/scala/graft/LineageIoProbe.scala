@@ -10,10 +10,11 @@ import graft.streaming.ContinuousIndexMaintenance
   * evidence that a continuous-loop boundary now writes O(DELTA) bytes,
   * not O(corpus), and that the vacuum bounds retained storage.
   *
-  * Method: run the composed IVFADC loop
-  * ([[ContinuousIndexMaintenance.IvfPqRetrainLoop]]) over `boundaries`
-  * micro-batches of a FIXED delta size at two corpus scales (1× and
-  * `scaleUp`×, ids offset by c·10⁷ — the ScaleProbe convention), and
+  * Method: run the composed IVFADC loop (a
+  * [[ContinuousIndexMaintenance.RetrainLoop]] with the IVF-PQ quantizer)
+  * over `boundaries` micro-batches of a FIXED delta size at two corpus
+  * scales (1× and `scaleUp`×, ids offset by c·10⁷ — the ScaleProbe
+  * convention), and
   * measure, per boundary, the bytes of the artifact each lineage dir
   * gained. The claims under test, printed as one JSON line per run:
   *
@@ -71,7 +72,7 @@ object LineageIoProbe {
       val root = java.nio.file.Files
         .createTempDirectory(s"graft_lineage_io_x$scaleUp").toString
       val pol = ContinuousIndexMaintenance.LineagePolicy(compactEvery = 4)
-      val loop = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+      val loop = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
         corpus, init, coarse, pq, 64, 8, 4, 8, 2, 1, 1000000L,
         "vec_id", "embedding", root, policy = pol)
       // fixed-size deltas: per boundary, `deltaRows` present ids get a

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.GraphRank
 
@@ -128,13 +127,7 @@ object ContinuousGraphMaintenance {
         .createTempDirectory("graft_cgm_accum").toString),
       ranksDir.getOrElse(java.nio.file.Files
         .createTempDirectory("graft_cgm_ranks").toString))
-    val w = linkStream.writeStream
-      .foreachBatch(loop.processBatch _)
-      .trigger(Trigger.AvailableNow())
-    val q = checkpointLocation
-      .fold(w)(cp => w.option("checkpointLocation", cp)).start()
-    q.awaitTermination()
-    loop.result
+    ContinuousIndexMaintenance.drain(linkStream, checkpointLocation, loop)
   }
 
   /** The per-boundary state machine, extracted from the foreachBatch
@@ -158,7 +151,8 @@ object ContinuousGraphMaintenance {
       oldEdges: DataFrame, warmFull: DataFrame, warmState: DataFrame,
       srcCol: String, dstCol: String, weightCol: String,
       resumeIterations: Int, dampNum: Long, dampDen: Long,
-      totalUnits: Long, accumDir: String, ranksDir: String) {
+      totalUnits: Long, accumDir: String, ranksDir: String)
+      extends ContinuousIndexMaintenance.StreamLoop[Run] {
     val boundaries = scala.collection.mutable.ArrayBuffer.empty[Boundary]
     // the graph the CURRENT published ranks were measured against —
     // oldEdges until the first increment lands

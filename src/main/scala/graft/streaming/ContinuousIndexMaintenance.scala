@@ -7,21 +7,33 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.operators.{Dedup, IndexMaintenance, Multimodal, Similarity}
 
 /** The continuous form of the [[graft.operators.IndexMaintenance]] seam
-  * — the q128 pattern for per-id derived state, one generic Loop with a
-  * per-family maintenance kernel: corpus version deltas stream in as
-  * micro-batches of (id, payload…, status) rows (the d14 snapshot-diff
-  * vocabulary: added / changed / removed, with the payload columns
-  * carrying the NEW value for added/changed and ignored for removed),
-  * and each batch boundary advances the persisted state with the
-  * family maintainer's movement (anti-join the touched ids, kernel the
-  * delta rows only — the unchanged corpus is never re-read at any
-  * boundary).
+  * — the q128 pattern for per-id derived state: corpus version deltas
+  * stream in as micro-batches of (id, payload…, status) rows (the d14
+  * snapshot-diff vocabulary: added / changed / removed, with the
+  * payload columns carrying the NEW value for added/changed and ignored
+  * for removed), and each batch boundary advances the persisted state
+  * with the family maintainer's movement (anti-join the touched ids,
+  * kernel the delta rows only — the unchanged corpus is never re-read
+  * at any boundary).
   *
-  * Families: [[continuousIndex]] (q129 — the d19 banded near-dup
-  * index), [[continuousPhash]] (m10 — the m09 media fingerprint
-  * table), [[continuousAssignments]] (s21 — the s18 ANN assignment
-  * state). All three share the Loop, its versioned-state restart
-  * rules, and their one-shot maintainer's rebuild oracle.
+  * Two per-boundary state machines, both drained by the one
+  * AvailableNow [[drain]] (which [[ContinuousGraphMaintenance]] shares):
+  *  - [[Loop]], for a FIXED kernel: [[continuousIndex]] (q129 — the d19
+  *    banded near-dup index), [[continuousPhash]] (m10 — the m09 media
+  *    fingerprint table), [[continuousAssignments]] (s21 — the s18 ANN
+  *    assignment state) and [[continuousIvfPq]] (s26 — the s24 IVFADC
+  *    index under fixed codebooks). One state lineage per loop.
+  *  - [[RetrainLoop]], for a kernel whose codebook the loop itself
+  *    retrains and cuts: [[continuousAssignmentsWithRetrain]] (s25) and
+  *    [[continuousIvfPqWithRetrain]] (s27). Five lineages per root
+  *    (corpus, state, codebooks, census, norm) and three monitors
+  *    (drift, census, norm). What differs between the two quantizer
+  *    families — encode kernel, retrain, census cut, state dir and
+  *    partitioning — is one [[Quantizer]] value with two instances;
+  *    the boundary itself exists once.
+  * Both machines share the [[Lineage]] versioning, the stats pass with
+  * its duplicate-id guard, and their one-shot maintainer's rebuild
+  * oracle.
   *
   * Contract (spec-asserted; the gates share the one-shot rebuild
   * oracles):
@@ -190,6 +202,22 @@ object ContinuousIndexMaintenance {
 
     def readBase(v: Long): DataFrame = spark.read.parquet(s"$dir/v$v")
 
+    /** Persist boundary `b` — the compact-or-delta step every lineage
+      * shares: a full `base` (partitioned by `partitionCols`) when
+      * `compact` is set or the chain below b already trails
+      * compactEvery − 1 deltas, else the O(batch) delta of the kernel's
+      * `rows` plus one tombstone per id in `diff`. The decision counts
+      * on-disk deltas strictly below b — a pure function of disk below
+      * b (a boundary's own writes never change it), so redelivery
+      * re-decides identically.
+      */
+    def writeBoundary(b: Long, policy: LineagePolicy, diff: DataFrame,
+        partitionCols: Seq[String] = Nil, compact: Boolean = false)(
+        base: => DataFrame, rows: => DataFrame): Unit =
+      if (compact || chainBelow(b)._2.size + 1 >= policy.compactEvery)
+        writeBase(base, b, partitionCols)
+      else writeDelta(deltaRows(rows, diff), b)
+
     /** The composed state strictly below boundary `b`: the latest base
       * (or `initial`) minus every id the trailing deltas touched, plus
       * each touched id's upsert rows from the LATEST delta touching it
@@ -215,13 +243,6 @@ object ContinuousIndexMaintenance {
             .drop(Lineage.Status, Lineage.Ver, Lineage.MaxVer))
       }
     }
-
-    /** Deltas the chain below `b` currently trails — the
-      * compact-or-delta decision input. Pure function of disk strictly
-      * below b (a boundary's own writes never change its decision), so
-      * redelivery re-decides identically.
-      */
-    def deltasBelow(b: Long): Int = chainBelow(b)._2.size
 
     /** The retention sweep: delete every lineage artifact strictly
       * below the latest BASE strictly below `b`. Preserves exactly the
@@ -277,17 +298,17 @@ object ContinuousIndexMaintenance {
   }
 
   /** [[monitorStats]] readers — Long.MinValue encodes "absent". */
-  private def statMoved(st: Array[(String, Long, Long, Long)]): (Long, Long) = {
-    val enc = st.filter { case (s, nw, _, _) =>
+  private def statEncoded(st: Array[(String, Long, Long, Long)]) =
+    st.filter { case (s, nw, _, _) =>
       (s == "added" || s == "changed") && nw != Long.MinValue }
+  private def statMoved(st: Array[(String, Long, Long, Long)]): (Long, Long) = {
+    val enc = statEncoded(st)
     (enc.collect { case (_, nw, old, n)
         if old != Long.MinValue && nw != old => n }.sum,
       enc.map(_._4).sum)
   }
   private def statLanded(st: Array[(String, Long, Long, Long)]): Array[(Long, Long)] =
-    st.filter { case (s, nw, _, _) =>
-        (s == "added" || s == "changed") && nw != Long.MinValue }
-      .groupBy(_._2).view.mapValues(_.map(_._4).sum).toArray
+    statEncoded(st).groupBy(_._2).view.mapValues(_.map(_._4).sum).toArray
   private def statVacated(st: Array[(String, Long, Long, Long)]): Array[(Long, Long)] =
     st.filter(_._3 != Long.MinValue)
       .groupBy(_._3).view.mapValues(_.map(_._4).sum).toArray
@@ -308,6 +329,47 @@ object ContinuousIndexMaintenance {
       .withColumn(Lineage.Status, lit("r"))
     kernelRows.withColumn(Lineage.Status, lit("u")).unionByName(tomb)
   }
+
+  /** ONE stats pass per boundary, shared by both state machines: the
+    * duplicate-id guard (one diff row per id per boundary —
+    * last-writer-wins applies ACROSS batches; within one batch two rows
+    * per id are order-ambiguous and would emit conflicting state rows,
+    * so fail loudly — the requireUniqueKeys convention) folds into the
+    * same aggregation as the boundary counts and the retrain-marker
+    * count, keeping the per-boundary job count at one action. Marker
+    * rows (`status = "retrain"`, null id) never count toward the guard.
+    * Returns (touched, signatured, markers).
+    */
+  private def boundaryCounts(batch: DataFrame, idCol: String,
+                             batchId: Long): (Long, Long, Long) = {
+    val marker = coalesce(col("status") === "retrain", lit(false))
+    def perId = batch.groupBy(col(idCol)).agg(
+      count(when(!marker, 1)).as("__n"), count(when(marker, 1)).as("__m"),
+      first(when(!marker, col("status")), ignoreNulls = true).as("__st"))
+    val s = perId.agg(max(col("__n")),
+      sum(when(col("__st").isin("removed", "changed"), 1L).otherwise(0L)),
+      sum(when(col("__st").isin("added", "changed"), 1L).otherwise(0L)),
+      sum(col("__m"))).head()
+    if (s.isNullAt(0)) return (0L, 0L, 0L) // an empty batch
+    require(s.getLong(0) <= 1L, {
+      // examples recomputed on the error path only
+      val dup = perId.where(col("__n") > 1).select(col(idCol), col("__n"))
+      s"continuous maintenance: batch $batchId carries duplicate rows " +
+        s"per '$idCol' — e.g. ${dup.take(3).mkString("; ")} — the " +
+        "boundary contract is one diff row per id; pre-aggregate " +
+        "the batch to its final per-id status upstream"
+    })
+    (s.getLong(1), s.getLong(2), s.getLong(3))
+  }
+
+  /** The d14 diff vocabulary arrives as rows; rebuild the two sides the
+    * maintenance seam expects: its (id, status) `diff` and the
+    * added∪changed delta docs with payload columns.
+    */
+  private def diffAndDocs(batch: DataFrame,
+                          idCol: String): (DataFrame, DataFrame) =
+    (batch.select(col(idCol).as("id"), col("status")),
+      batch.filter(col("status").isin("added", "changed")).drop("status"))
 
   /** Drain `deltaStream` of (idCol, textCol, status) rows through
     * [[Dedup.maintainMinhashIndex]] — q129. See [[drain]] for the
@@ -485,8 +547,9 @@ object ContinuousIndexMaintenance {
     * Subsequent batches maintain under the new codebook (delta-only
     * argmin upserts, s18's movement).
     *
-    * Restart contract = the Loop's, for all THREE states: corpus
-    * version, assignment version, and codebook version each land in
+    * Restart contract = the Loop's, for every state: corpus version,
+    * assignment version, and codebook version (plus the census and
+    * norm monitors' versions) each land in
     * batchId-keyed dirs under `stateRoot` with overwrite, and a batch's
     * bases are the latest ON-DISK versions strictly below its id — so a
     * redelivered uncommitted batch (even a retrain batch: training is a
@@ -560,7 +623,13 @@ object ContinuousIndexMaintenance {
     * normalized ingest 0.920 — RECALL.json `postRebalanceAdc`).
     * Monotone by design: removals never narrow the envelope, so the
     * tripwire stays tripped until the operator re-baselines a new
-    * lineage.
+    * lineage. `NormPolicy(recover = true)` is REJECTED here: this
+    * family has no normalized encode space to recover into, and a
+    * flag the loop would ignore must fail loudly — the s41 recovery
+    * lives on [[continuousIvfPqWithRetrain]].
+    *
+    * The boundary itself is [[RetrainLoop]]'s, shared with
+    * [[continuousIvfPqWithRetrain]] through an [[AssignQuantizer]].
     */
   def continuousAssignmentsWithRetrain(
       spark: SparkSession,
@@ -577,414 +646,11 @@ object ContinuousIndexMaintenance {
       rebalancePolicy: Option[Similarity.RebalancePolicy] = None,
       normPolicy: Option[Similarity.NormPolicy] = None,
       lineagePolicy: LineagePolicy = LineagePolicy())
-      : RetrainRun = {
-    val loop = new RetrainLoop(spark, initialCorpus, initialState,
-      initialCb, k, maxIter, scale, idCol, vecCol, resolve(stateRoot),
-      driftPolicy, rebalancePolicy, normPolicy, lineagePolicy)
-    val w = deltaStream.writeStream
-      .foreachBatch(loop.processBatch _)
-      .trigger(Trigger.AvailableNow())
-    val q = checkpointLocation
-      .fold(w)(cp => w.option("checkpointLocation", cp)).start()
-    q.awaitTermination()
-    loop.result
-  }
-
-  /** Run the AvailableNow drain. Production callers that need RESTART
-    * resumption must pass a stable `stateDir` AND a
-    * `checkpointLocation` (both default to fresh temp/none, the
-    * one-shot test shape): the checkpoint is what makes Structured
-    * Streaming redeliver only uncommitted batches, and the stable state
-    * dir is what the redelivered batch's base is resolved against. With
-    * the defaults a driver restart silently re-baselines from
-    * `initialState` — fine for a drain-once job, wrong for a service.
-    *
-    * A stateDir belongs to ONE stream lineage (the checkpoint that
-    * numbers its batches): served state is the HIGHEST on-disk version,
-    * which is correct for every restart of the same lineage but
-    * undefined if a stateDir is reused with a different source or a
-    * fresh checkpoint whose batch ids restart from 0 — stale
-    * higher-numbered versions from the old lineage would win. Start a
-    * new lineage in a new stateDir.
-    */
-  private def drain(deltaStream: DataFrame,
-                    checkpointLocation: Option[String], loop: Loop): Run = {
-    val w = deltaStream.writeStream
-      .foreachBatch(loop.processBatch _)
-      .trigger(Trigger.AvailableNow())
-    val q = checkpointLocation
-      .fold(w)(cp => w.option("checkpointLocation", cp)).start()
-    q.awaitTermination()
-    loop.result
-  }
-
-  /** The per-boundary state machine, extracted (the q128 Loop pattern)
-    * so the redelivery contract is spec-assertable, generic over the
-    * family KERNEL: `kernel(docs)` derives fresh state rows from a
-    * batch's added/changed rows with payload columns. Artifact k lands
-    * in a batchId-keyed directory with OVERWRITE, and — the
-    * load-bearing rule — batch k's BASE is always resolved from the
-    * on-disk chain strictly BELOW k (falling back to the initial
-    * state), never an in-memory pointer: after a failure, Structured
-    * Streaming redelivers only the uncommitted batch k, and a loop that
-    * resumed from memory (or from a half-written artifact k) would lose
-    * or double-apply deltas. Batch k fires only after k−1 committed, so
-    * every artifact below k is fully written; a partial directory can
-    * only be k itself, which the `< k` rule excludes and the overwrite
-    * rewrite repairs. Artifact k — a delta (kernel rows + tombstones),
-    * or a full base when [[LineagePolicy.compactEvery]] says so — is
-    * thus a pure function of (chain below k, batch k): redelivery
-    * REWRITES it byte-compatibly, including the compact-or-delta
-    * decision itself (it counts on-disk deltas strictly below k).
-    */
-  private[graft] final class Loop(spark: SparkSession,
-      initialState: DataFrame, idCol: String, val stateDir: String,
-      kernel: DataFrame => DataFrame,
-      partitionCols: Seq[String] = Nil,
-      policy: LineagePolicy = LineagePolicy()) {
-    val boundaries = scala.collection.mutable.ArrayBuffer.empty[Boundary]
-
-    private val lin = new Lineage(spark, stateDir)
-
-    def processBatch(batch: DataFrame, batchId: Long): Unit = {
-      // ONE stats pass per boundary: the duplicate-id guard (one diff
-      // row per id per boundary — last-writer-wins applies ACROSS
-      // batches; within one batch two rows per id are order-ambiguous
-      // and would emit conflicting state rows, so fail loudly — the
-      // requireUniqueKeys convention) folds into the same aggregation
-      // as the boundary counts, keeping the per-boundary job count at
-      // the class doc's contract (stats + the maintenance write)
-      val s = batch.groupBy(col(idCol))
-        .agg(count(lit(1)).as("__n"), first(col("status")).as("__st"))
-        .agg(max(col("__n")),
-          sum(when(col("__st").isin("removed", "changed"), 1L)
-            .otherwise(0L)),
-          sum(when(col("__st").isin("added", "changed"), 1L)
-            .otherwise(0L))).head()
-      val (maxn, touched, signatured) =
-        if (s.isNullAt(0)) (0L, 0L, 0L)
-        else (s.getLong(0), s.getLong(1), s.getLong(2))
-      require(maxn <= 1L, {
-        val dup = batch.groupBy(col(idCol)).agg(count(lit(1)).as("__n"))
-          .where(col("__n") > 1) // examples recomputed on the error path only
-        s"continuous maintenance: batch $batchId carries duplicate rows " +
-          s"per '$idCol' — e.g. ${dup.take(3).mkString("; ")} — the " +
-          "boundary contract is one diff row per id; pre-aggregate " +
-          "the batch to its final per-id status upstream"
-      })
-      // the d14 diff vocabulary arrives as rows; rebuild the two sides
-      // the maintenance seam expects (its `diff` and delta-docs views)
-      val diff = batch.select(col(idCol).as("id"), col("status"))
-      val docs = batch.filter(col("status").isin("added", "changed"))
-        .drop("status")
-      if (lin.deltasBelow(batchId) + 1 >= policy.compactEvery) {
-        // compaction boundary: fold the chain + this batch into a full
-        // base — the identical upsert the one-shot maintainer runs
-        lin.writeBase(IndexMaintenance.upsert(
-            lin.stateBelow(batchId, initialState), diff, docs, idCol)(
-            _ => kernel(docs)),
-          batchId, partitionCols)
-      } else {
-        // ordinary boundary: persist O(batch) — the kernel's rows plus
-        // tombstones; the unchanged corpus is neither read nor written
-        lin.writeDelta(deltaRows(kernel(docs), diff), batchId)
-      }
-      if (policy.vacuum) lin.vacuumBelow(batchId)
-      boundaries += Boundary(batchId, touched, signatured)
-    }
-
-    /** The served state is composed from the latest ON-DISK chain — not
-      * an in-memory pointer — so a restarted Loop over a stable
-      * stateDir whose stream had nothing left to redeliver still serves
-      * the drained state rather than silently re-baselining.
-      */
-    def result: Run =
-      Run(lin.stateBelow(Long.MaxValue, initialState), boundaries.toSeq)
-  }
-
-  /** The s25 state machine (see [[continuousAssignmentsWithRetrain]]):
-    * the Loop's disk-is-truth versioning applied to three states at
-    * once — corpus payload, assignment, codebook — with the retrain
-    * marker row selecting the s20 movement over the s18 one at its
-    * boundary. Write order is corpus → codebook → assignment, and every
-    * base resolves strictly below the batch id, so a crash between any
-    * two writes redelivers into byte-compatible rewrites.
-    */
-  private[graft] final class RetrainLoop(spark: SparkSession,
-      initialCorpus: DataFrame, initialState: DataFrame,
-      initialCb: Array[Array[Long]], k: Int, maxIter: Int, scale: Long,
-      idCol: String, vecCol: String, val root: String,
-      driftPolicy: Option[Similarity.DriftPolicy] = None,
-      rebalancePolicy: Option[Similarity.RebalancePolicy] = None,
-      normPolicy: Option[Similarity.NormPolicy] = None,
-      policy: LineagePolicy = LineagePolicy()) {
-
-    val boundaries = scala.collection.mutable.ArrayBuffer.empty[Boundary]
-    val retrainedAt = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val driftStats = scala.collection.mutable.ArrayBuffer.empty[DriftStat]
-    val rebalancedAt = scala.collection.mutable.ArrayBuffer.empty[Long]
-    val censusStats = scala.collection.mutable.ArrayBuffer.empty[CensusStat]
-    val normStats = scala.collection.mutable.ArrayBuffer.empty[NormStat]
-    val normFlaggedAt = scala.collection.mutable.ArrayBuffer.empty[Long]
-
-    // corpus + assignment are delta-chained lineages (O(batch) at
-    // ordinary boundaries); cb/census/norm are bounded-size snapshots
-    // (k·dim / nLists / 1 rows) written as bases, vacuumed on the same
-    // sweep. All five on the Hadoop FS API (r16 verdict #4).
-    private val corpusLin = new Lineage(spark, s"$root/corpus")
-    private val assignLin = new Lineage(spark, s"$root/assign")
-    private val cbLin = new Lineage(spark, s"$root/cb")
-    private val censusLin = new Lineage(spark, s"$root/census")
-    private val normLin = new Lineage(spark, s"$root/norm")
-    private val lineages =
-      Seq(corpusLin, assignLin, cbLin, censusLin, normLin)
-
-    // normalized (id, vecCol) corpus-state view of the caller's corpus
-    private val initCorpusN = initialCorpus
-      .select(col(idCol).as("id"), col(vecCol))
-
-    private def readCb(v: Long): Array[Array[Long]] =
-      cbLin.readBase(v).collect()
-        .groupBy(_.getLong(0)).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_.getLong(1)).map(_.getLong(2)).toArray).toArray
-
-    private def writeCb(cb: Array[Array[Long]], b: Long): Unit = {
-      import spark.implicits._
-      cbLin.writeBase(cb.zipWithIndex.flatMap { case (c, cid) =>
-        c.zipWithIndex.map { case (v, pos) => (cid.toLong, pos.toLong, v) }
-      }.toSeq.toDF("cid", "pos", "c"), b)
-    }
-
-    private def readCensus(v: Long): Map[Long, Long] =
-      censusLin.readBase(v).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    private def writeCensus(c: Iterable[(Long, Long)], b: Long): Unit = {
-      import spark.implicits._
-      censusLin.writeBase(
-        c.toSeq.sortBy(_._1).toDF("cid", "n").coalesce(1), b)
-    }
-
-    private def censusOf(state: DataFrame): Map[Long, Long] =
-      state.groupBy(col("cid")).count().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    private def readNorm(v: Long): (Long, Long) = {
-      // select by NAME before the positional reads (r16 advice):
-      // correctness must not hinge on writeNorm's column order
-      // surviving a future schema change
-      val r = normLin.readBase(v)
-        .select(col("minN2"), col("maxN2")).head()
-      (r.getLong(0), r.getLong(1))
-    }
-
-    private def writeNorm(env: (Long, Long), b: Long): Unit = {
-      import spark.implicits._
-      normLin.writeBase(
-        Seq(env).toDF("minN2", "maxN2").coalesce(1), b)
-    }
-
-    /** The norm-collapse tripwire (see [[continuousAssignmentsWithRetrain]]):
-      * widen the on-disk envelope with this boundary's delta (the
-      * lineage's first boundary baselines from the corpus base — the
-      * one corpus-scale pass), version it, and record the flag. Pure
-      * function of (on-disk envelope base, batch) — redelivery
-      * re-decides identically, the loops' standing restart contract.
-      */
-    private def normTick(docs: DataFrame, corpusBase: DataFrame,
-                         batchId: Long): Unit =
-      normPolicy.foreach { pol =>
-        val base = normLin.chainBelow(batchId)._1.map(readNorm)
-          .getOrElse(Similarity.normEnvelope(corpusBase, scale,
-            idCol = "id", vecCol = vecCol)
-            .getOrElse((Long.MaxValue, Long.MinValue)))
-        val env = Similarity.normEnvelope(docs, scale, idCol, vecCol)
-          .fold(base) { case (dmin, dmax) =>
-            (math.min(base._1, dmin), math.max(base._2, dmax)) }
-        writeNorm(env, batchId)
-        normStats += NormStat(batchId, env._1, env._2)
-        if (pol.flags(env._1, env._2)) normFlaggedAt += batchId
-      }
-
-    def processBatch(batch: DataFrame, batchId: Long): Unit = {
-      val delta = batch.filter(col("status") =!= "retrain")
-      // one stats pass: the Loop's duplicate-id guard + boundary
-      // counts, plus the retrain-marker detection folded in (markers
-      // have a null id, so they stay clear of the per-id guard)
-      val s = batch.groupBy(col(idCol))
-        .agg(count(lit(1)).as("__n"), first(col("status")).as("__st"))
-        .agg(max(when(col(idCol).isNotNull, col("__n"))),
-          sum(when(col("__st").isin("removed", "changed"), 1L).otherwise(0L)),
-          sum(when(col("__st").isin("added", "changed"), 1L).otherwise(0L)),
-          sum(when(col("__st") === "retrain", 1L).otherwise(0L))).head()
-      val (maxn, touched, signatured, markers) =
-        if (s.isNullAt(1) && s.isNullAt(3)) (0L, 0L, 0L, 0L)
-        else (if (s.isNullAt(0)) 0L else s.getLong(0),
-          s.getLong(1), s.getLong(2), s.getLong(3))
-      require(maxn <= 1L,
-        s"continuous retrain maintenance: batch $batchId carries " +
-          s"duplicate rows per '$idCol' — one diff row per id per " +
-          "boundary; pre-aggregate the batch upstream")
-      val corpusBase = corpusLin.stateBelow(batchId, initCorpusN)
-      val assignBase = assignLin.stateBelow(batchId, initialState)
-      val cbBase = cbLin.chainBelow(batchId)._1
-        .map(readCb).getOrElse(initialCb)
-      val diff = delta.select(col(idCol).as("id"), col("status"))
-      val docs = delta.filter(col("status").isin("added", "changed"))
-        .drop("status")
-      // the drift MONITOR (s29): this boundary's MOVED-share — delta
-      // vectors whose fresh exact-integer argmax under the CURRENT
-      // codebook differs from their stored assignment, over all
-      // added∪changed delta vectors. One delta-sized assignment scan +
-      // one id-join against the assignment state; exact integers end
-      // to end, so the boundary CHOICE replays in the oracle. The
-      // marker row stays the manual override.
-      // the delta's fresh exact-integer landings under the current
-      // codebook — computed ONCE and shared by the drift monitor's
-      // moved-share, the census monitor's landed counts, AND the
-      // non-retrain assignment upsert's kernel (all delta-sized;
-      // checkpointed so none re-runs the argmax scan — the kernel
-      // would otherwise recompute the identical argmax per the
-      // maintenance theorem, a second delta pass for zero information)
-      lazy val freshDelta =
-        Similarity.assignFixedPoint(docs, cbBase, scale, idCol, vecCol)
-          .localCheckpoint(false) // lazy (r18): the first consumer (the
-          // monitor collect or the upsert write) materializes the
-          // blocks — no dedicated job per boundary
-      // ONE delta-sized pass feeds the drift moved-share AND the census
-      // landings/vacated seats (r17 — see monitorStats: they were three
-      // separate state-shuffling jobs per boundary)
-      lazy val mstats = monitorStats(diff, freshDelta, assignBase)
-      val drifted = markers == 0 && driftPolicy.exists { p =>
-        val (nMoved, nTot) = statMoved(mstats)
-        driftStats += DriftStat(batchId, nMoved, nTot)
-        p.triggers(nMoved, nTot)
-      }
-      // 1. corpus version: O(batch) delta at ordinary boundaries; a
-      // full base at RETRAIN boundaries (training scans the corpus
-      // anyway — the natural compaction point, materializing what the
-      // trainer would otherwise recompose per iteration) or when the
-      // chain trailed compactEvery−1 deltas
-      val willRetrain = markers > 0 || drifted
-      if (willRetrain ||
-          corpusLin.deltasBelow(batchId) + 1 >= policy.compactEvery)
-        corpusLin.writeBase(IndexMaintenance.upsert(corpusBase, diff,
-          docs, idCol)(_.select(col(idCol).as("id"), col(vecCol))),
-          batchId)
-      else
-        corpusLin.writeDelta(deltaRows(
-          docs.select(col(idCol).as("id"), col(vecCol)), diff), batchId)
-      val corpusV = corpusLin.stateBelow(batchId + 1, initCorpusN)
-      // the norm-collapse tripwire runs at EVERY boundary (retrain
-      // included — the envelope is a corpus property, not a codebook's)
-      normTick(docs, corpusBase, batchId)
-      // 2 + 3. codebook + assignment under this boundary's movement
-      if (willRetrain) {
-        val newCb = Similarity.kmeansTrainFixedPoint(corpusV, k, maxIter,
-          scale, idCol = "id", vecCol = vecCol)
-        writeCb(newCb, batchId)
-        assignLin.writeBase(
-          Similarity.retrainReassign(assignBase.select(col("id"), col("cid")),
-              corpusV, newCb, scale, idCol = "id", vecCol = vecCol)
-            .select(col("id"), col("cid")), batchId)
-        retrainedAt += batchId
-        // a retrain rewrote every assignment, so the incremental census
-        // re-baselines from the state the retrain already produced (the
-        // retrain boundary pays a corpus-scale pass by definition — one
-        // more aggregate over it is in-family)
-        if (rebalancePolicy.isDefined)
-          writeCensus(censusOf(assignLin.readBase(batchId)), batchId)
-      } else rebalancePolicy match {
-        case None =>
-          // kernel = the already-checkpointed freshDelta: `docs` IS the
-          // added∪changed delta, so upsert's semi-join passes it through
-          // and the kernel's argmax is deterministically freshDelta —
-          // reuse the scan instead of re-running it
-          if (assignLin.deltasBelow(batchId) + 1 >= policy.compactEvery)
-            assignLin.writeBase(IndexMaintenance.upsert(assignBase, diff,
-              docs, idCol)(_ => freshDelta), batchId)
-          else
-            assignLin.writeDelta(deltaRows(freshDelta, diff), batchId)
-        case Some(pol) =>
-          // the census MONITOR (s34): exact-integer list sizes
-          // maintained INCREMENTALLY — base version + this delta's
-          // landings and vacated seats (both delta-sized; the state is
-          // only scanned to baseline the first boundary of a lineage)
-          val base = censusLin.chainBelow(batchId)._1.map(readCensus)
-            .getOrElse(censusOf(assignBase))
-          // landings + vacated seats from the shared monitorStats pass
-          // — every touched id that EXISTS in the state vacates its
-          // seat, any status: the upsert replaces a re-"added" existing
-          // row too, and a status filter would leave it a phantom seat
-          val landed = statLanded(mstats)
-          val vacated = statVacated(mstats)
-          val census = (base.toSeq ++ landed ++
-            vacated.map { case (c, n) => c -> -n })
-            .groupBy(_._1).view.mapValues(_.map(_._2).sum)
-            .filter(_._2 > 0L).toMap
-          val nTot = census.values.sum
-          censusStats += CensusStat(batchId,
-            if (census.isEmpty) 0L else census.values.max, nTot)
-          // the post-delta state — the upsert both branches serve from:
-          // the cut must base on what is PHYSICALLY in each list (after
-          // a previous split the state is rank-chunked, not the fresh
-          // argmax), so the splitter receives it as the assignment
-          val upserted = IndexMaintenance.upsert(assignBase, diff, docs,
-            idCol)(_ => freshDelta) // the shared delta argmax, see above
-          if (census.exists { case (_, n) =>
-              pol.splits(n, cbBase.length, nTot) }) {
-            // the cut is a pure function of (corpus version, assignment
-            // version, codebook base, policy) — redelivery recuts
-            // identically
-            val (movement, newCb) = Similarity.splitListsEven(
-              corpusV, cbBase, pol, scale, idCol = "id", vecCol = vecCol,
-              state = Some(upserted))
-            // the incremental census said SOME list crossed the bar; an
-            // identity cut (codebook unchanged) means the splitter's own
-            // census — taken over the physical state — disagreed with
-            // the maintained one: the exact divergence class the r14
-            // review chased. Versioning the unchanged codebook and
-            // recording rebalancedAt would mask it silently; fail loud.
-            require(newCb.length > cbBase.length,
-              s"census monitor: boundary $batchId crossed the split bar " +
-                "on the incremental census, but splitListsEven over the " +
-                "physical state cut nothing — the maintained census has " +
-                "diverged from the assignment state")
-            writeCb(newCb, batchId)
-            val mv = movement.localCheckpoint(false) // landing + post-census
-            // (lazy, r18: the state write materializes it; the movers
-            // collect below reuses the cached blocks)
-            // the cut rewrites the full assignment state by definition
-            // — a natural compaction point, landed as a base
-            assignLin.writeBase(mv.select(col("id"), col("cid")), batchId)
-            rebalancedAt += batchId
-            // post-split census from the movement's mover counts — the
-            // split lists' members, never the state
-            val movers = mv.filter(col("cid") >= cbBase.length.toLong)
-              .groupBy(col("old_cid"), col("cid")).count().collect()
-              .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-            val post = movers.foldLeft(census) { case (c, (o, nw, n)) =>
-              c.updated(o, c.getOrElse(o, 0L) - n).updated(nw, n)
-            }.filter(_._2 > 0L)
-            writeCensus(post, batchId)
-          } else {
-            if (assignLin.deltasBelow(batchId) + 1 >= policy.compactEvery)
-              assignLin.writeBase(upserted, batchId)
-            else
-              assignLin.writeDelta(deltaRows(freshDelta, diff), batchId)
-            writeCensus(census, batchId)
-          }
-      }
-      if (policy.vacuum) lineages.foreach(_.vacuumBelow(batchId))
-      boundaries += Boundary(batchId, touched, signatured)
-    }
-
-    def result: RetrainRun =
-      RetrainRun(assignLin.stateBelow(Long.MaxValue, initialState),
-        boundaries.toSeq, retrainedAt.toSeq,
-        driftStats.toSeq, rebalancedAt.toSeq, censusStats.toSeq,
-        normStats.toSeq, normFlaggedAt.toSeq)
-  }
+      : RetrainRun =
+    drain(deltaStream, checkpointLocation,
+      assignRetrainLoop(spark, initialCorpus, initialState, initialCb, k,
+        maxIter, scale, idCol, vecCol, resolve(stateRoot), driftPolicy,
+        rebalancePolicy, normPolicy, lineagePolicy))
 
   /** s27: drift AND retrain composed through one continuous loop for the
     * COMPOSED IVFADC index — [[continuousAssignmentsWithRetrain]]'s
@@ -998,10 +664,12 @@ object ContinuousIndexMaintenance {
     * codebooks essentially every row's list or codes move, so a
     * moved-only write (s20's seam for assignments) has no volume to
     * save; the full index rewrite IS the production movement for a
-    * quantizer swap. Restart contract = [[RetrainLoop]]'s, with the
-    * two-stage codebook serialized as (stage, sub, cid, pos, c) rows:
-    * every base resolves strictly below the batch id, so redelivery —
-    * even of the retrain boundary — rewrites byte-compatibly.
+    * quantizer swap. The boundary is [[RetrainLoop]]'s through an
+    * [[IvfPqQuantizer]], so the restart contract is the assignment
+    * loop's, with both codebook stages in the one staged
+    * [[Codebooks]] format: every base resolves strictly below the
+    * batch id, so redelivery — even of the retrain boundary — rewrites
+    * byte-compatibly.
     *
     * `rebalancePolicy` (s39, r16 — the r15 verdict's #1) lifts the s34
     * census monitor to THIS composed loop, closing the serving story's
@@ -1093,36 +761,276 @@ object ContinuousIndexMaintenance {
       driftPolicy: Option[Similarity.DriftPolicy] = None,
       rebalancePolicy: Option[Similarity.RebalancePolicy] = None,
       normPolicy: Option[Similarity.NormPolicy] = None,
-      lineagePolicy: LineagePolicy = LineagePolicy()): RetrainRun = {
-    val loop = new IvfPqRetrainLoop(spark, initialCorpus, initialState,
-      initialCoarse, initialPq, dim, nLists, m, codebookSize,
-      maxIterCoarse, maxIterPq, scale, idCol, vecCol, resolve(stateRoot),
-      driftPolicy, rebalancePolicy, normPolicy, lineagePolicy)
+      lineagePolicy: LineagePolicy = LineagePolicy()): RetrainRun =
+    drain(deltaStream, checkpointLocation,
+      ivfPqRetrainLoop(spark, initialCorpus, initialState, initialCoarse,
+        initialPq, dim, nLists, m, codebookSize, maxIterCoarse, maxIterPq,
+        scale, idCol, vecCol, resolve(stateRoot), driftPolicy,
+        rebalancePolicy, normPolicy, lineagePolicy))
+
+  /** A per-boundary state machine [[drain]] runs: `processBatch` is
+    * the foreachBatch body, `result` what the drained run serves.
+    */
+  private[graft] trait StreamLoop[R] {
+    def processBatch(batch: DataFrame, batchId: Long): Unit
+    def result: R
+  }
+
+  /** Run the AvailableNow drain — the one drain every continuous entry
+    * point goes through (the six here and
+    * [[ContinuousGraphMaintenance.continuousRank]]). Production callers
+    * that need RESTART resumption must pass a stable `stateDir` AND a
+    * `checkpointLocation` (both default to fresh temp/none, the
+    * one-shot test shape): the checkpoint is what makes Structured
+    * Streaming redeliver only uncommitted batches, and the stable state
+    * dir is what the redelivered batch's base is resolved against. With
+    * the defaults a driver restart silently re-baselines from
+    * `initialState` — fine for a drain-once job, wrong for a service.
+    *
+    * A stateDir belongs to ONE stream lineage (the checkpoint that
+    * numbers its batches): served state is the HIGHEST on-disk version,
+    * which is correct for every restart of the same lineage but
+    * undefined if a stateDir is reused with a different source or a
+    * fresh checkpoint whose batch ids restart from 0 — stale
+    * higher-numbered versions from the old lineage would win. Start a
+    * new lineage in a new stateDir.
+    */
+  private[streaming] def drain[R](deltaStream: DataFrame,
+      checkpointLocation: Option[String], loop: StreamLoop[R]): R = {
     val w = deltaStream.writeStream
       .foreachBatch(loop.processBatch _)
       .trigger(Trigger.AvailableNow())
-    val q = checkpointLocation
-      .fold(w)(cp => w.option("checkpointLocation", cp)).start()
-    q.awaitTermination()
+    checkpointLocation.fold(w)(cp => w.option("checkpointLocation", cp))
+      .start().awaitTermination()
     loop.result
   }
 
-  /** The s27 state machine — RetrainLoop's three-state disk-is-truth
-    * versioning (corpus → codebooks → index, bases strictly below the
-    * batch id) for the composed index. The codebook version carries
-    * BOTH stages in one parquet: stage 0 = coarse rows (sub pinned 0),
-    * stage 1 = residual-PQ rows keyed by subspace.
+  /** The per-boundary state machine, extracted (the q128 Loop pattern)
+    * so the redelivery contract is spec-assertable, generic over the
+    * family KERNEL: `kernel(docs)` derives fresh state rows from a
+    * batch's added/changed rows with payload columns. Artifact k lands
+    * in a batchId-keyed directory with OVERWRITE, and — the
+    * load-bearing rule — batch k's BASE is always resolved from the
+    * on-disk chain strictly BELOW k (falling back to the initial
+    * state), never an in-memory pointer: after a failure, Structured
+    * Streaming redelivers only the uncommitted batch k, and a loop that
+    * resumed from memory (or from a half-written artifact k) would lose
+    * or double-apply deltas. Batch k fires only after k−1 committed, so
+    * every artifact below k is fully written; a partial directory can
+    * only be k itself, which the `< k` rule excludes and the overwrite
+    * rewrite repairs. Artifact k — a delta (kernel rows + tombstones),
+    * or a full base when [[LineagePolicy.compactEvery]] says so — is
+    * thus a pure function of (chain below k, batch k): redelivery
+    * REWRITES it byte-compatibly, including the compact-or-delta
+    * decision itself (it counts on-disk deltas strictly below k).
     */
-  private[graft] final class IvfPqRetrainLoop(spark: SparkSession,
+  private[graft] final class Loop(spark: SparkSession,
+      initialState: DataFrame, idCol: String, val stateDir: String,
+      kernel: DataFrame => DataFrame,
+      partitionCols: Seq[String] = Nil,
+      policy: LineagePolicy = LineagePolicy()) extends StreamLoop[Run] {
+    val boundaries = scala.collection.mutable.ArrayBuffer.empty[Boundary]
+
+    private val lin = new Lineage(spark, stateDir)
+
+    def processBatch(batch: DataFrame, batchId: Long): Unit = {
+      val (touched, signatured, _) = boundaryCounts(batch, idCol, batchId)
+      val (diff, docs) = diffAndDocs(batch, idCol)
+      // a compaction folds the chain + this batch into a full base — the
+      // identical upsert the one-shot maintainer runs; an ordinary
+      // boundary persists O(batch): the kernel's rows plus tombstones,
+      // the unchanged corpus neither read nor written
+      lin.writeBoundary(batchId, policy, diff, partitionCols)(
+        base = IndexMaintenance.upsert(lin.stateBelow(batchId, initialState),
+          diff, docs, idCol)(_ => kernel(docs)),
+        rows = kernel(docs))
+      if (policy.vacuum) lin.vacuumBelow(batchId)
+      boundaries += Boundary(batchId, touched, signatured)
+    }
+
+    /** The served state is composed from the latest ON-DISK chain — not
+      * an in-memory pointer — so a restarted Loop over a stable
+      * stateDir whose stream had nothing left to redeliver still serves
+      * the drained state rather than silently re-baselining.
+      */
+    def result: Run =
+      Run(lin.stateBelow(Long.MaxValue, initialState), boundaries.toSeq)
+  }
+
+  /** The codebooks a [[RetrainLoop]] versions: the coarse lists and, for
+    * the IVF-PQ family, the residual-PQ codebooks per subspace (empty
+    * for assignments). Persisted as one parquet of (stage, sub, cid,
+    * pos, c) rows: stage 0 = coarse rows (sub pinned 0), stage 1 =
+    * residual-PQ rows keyed by subspace.
+    */
+  private[graft] final case class Codebooks(coarse: Array[Array[Long]],
+      pq: Array[Array[Array[Long]]] = Array.empty)
+
+  /** Everything that differs between the two quantizer families a
+    * [[RetrainLoop]] maintains; the boundary itself exists once: `dir`
+    * names the state lineage under the loop root, `partitionCols` its
+    * base versions' physical partitioning. Every method is a pure
+    * function of its inputs, so the loop's redelivery argument carries
+    * to both families unchanged.
+    */
+  private[graft] sealed abstract class Quantizer(val dir: String,
+      val partitionCols: Seq[String]) {
+    /** Fresh state rows (id, cid, …) for `docs` under `cb`. */
+    def encode(docs: DataFrame, cb: Codebooks, scale: Long, idCol: String,
+               vecCol: String): DataFrame
+    /** Retrain on the post-delta (id, vecCol) `corpus`: (new codebooks,
+      * the full new state).
+      */
+    def retrain(state: DataFrame, corpus: DataFrame, scale: Long,
+                vecCol: String): (Codebooks, DataFrame)
+    /** The census cut over the post-delta physical `state`: (expanded
+      * codebooks, the full new state, the checkpointed (id, old_cid,
+      * cid) movement). An uncut census returns `cb` unchanged.
+      */
+    def cut(state: DataFrame, corpus: DataFrame, cb: Codebooks,
+            pol: Similarity.RebalancePolicy, scale: Long, vecCol: String)
+        : (Codebooks, DataFrame, DataFrame)
+  }
+
+  /** s25's family: (id, cid) assignments under one k-means codebook,
+    * retrained through [[graft.operators.Similarity.retrainReassign]]
+    * (write volume = moved rows) and cut by
+    * [[graft.operators.Similarity.splitListsEven]] — the load-balanced
+    * splitter, whose every child is ≤ the ceiling average, so the
+    * census monitor QUIESCES after one pass instead of re-triggering
+    * (the 2-means splitter measurably does not settle on a tight
+    * clump — graft.ListSkewProbe).
+    */
+  private[graft] final case class AssignQuantizer(k: Int, maxIter: Int)
+      extends Quantizer("assign", Nil) {
+    def encode(docs: DataFrame, cb: Codebooks, scale: Long, idCol: String,
+               vecCol: String): DataFrame =
+      Similarity.assignFixedPoint(docs, cb.coarse, scale, idCol, vecCol)
+    def retrain(state: DataFrame, corpus: DataFrame, scale: Long,
+                vecCol: String): (Codebooks, DataFrame) = {
+      val cb = Similarity.kmeansTrainFixedPoint(corpus, k, maxIter, scale,
+        idCol = "id", vecCol = vecCol)
+      (Codebooks(cb), Similarity.retrainReassign(
+          state.select(col("id"), col("cid")), corpus, cb, scale,
+          idCol = "id", vecCol = vecCol)
+        .select(col("id"), col("cid")))
+    }
+    def cut(state: DataFrame, corpus: DataFrame, cb: Codebooks,
+            pol: Similarity.RebalancePolicy, scale: Long, vecCol: String)
+        : (Codebooks, DataFrame, DataFrame) = {
+      val (movement, coarse) = Similarity.splitListsEven(corpus, cb.coarse,
+        pol, scale, idCol = "id", vecCol = vecCol, state = Some(state))
+      // lazy (r18): the state write materializes it, the census movers
+      // collect reuses the cached blocks
+      val mv = movement.localCheckpoint(false)
+      (Codebooks(coarse), mv.select(col("id"), col("cid")), mv)
+    }
+  }
+
+  /** s27's family: the composed (id, cid, codes) IVFADC index, BOTH
+    * stages retrained and the WHOLE corpus re-encoded — under new
+    * codebooks essentially every row's list or codes move, so a
+    * moved-only write has no volume to save; the full index rewrite IS
+    * the production movement for a quantizer swap. The cut is s37's
+    * ([[graft.operators.Similarity.rebalanceIvfPqMovement]]): rank-chunk
+    * split AND every split-list member's residual codes re-encoded
+    * against its chunk centroid (the r14 ADC lesson). Base versions are
+    * PHYSICALLY partitioned by list id, so ivfPqSearchIndexed's
+    * probed-list filter prunes at the file index — the s28 serving
+    * contract (deltas are batch-sized and scanned whole by design).
+    */
+  private[graft] final case class IvfPqQuantizer(dim: Int, nLists: Int,
+      m: Int, codebookSize: Int, maxIterCoarse: Int, maxIterPq: Int)
+      extends Quantizer("index", Seq("cid")) {
+    def encode(docs: DataFrame, cb: Codebooks, scale: Long, idCol: String,
+               vecCol: String): DataFrame =
+      Similarity.ivfPqEncodeFixedPoint(docs, cb.coarse, cb.pq, scale,
+        idCol, vecCol)
+    def retrain(state: DataFrame, corpus: DataFrame, scale: Long,
+                vecCol: String): (Codebooks, DataFrame) = {
+      val (coarse, pq) = Similarity.ivfPqTrainFixedPoint(corpus, dim,
+        nLists, m, codebookSize, maxIterCoarse, maxIterPq, scale,
+        idCol = "id", vecCol = vecCol)
+      val cb = Codebooks(coarse, pq)
+      (cb, encode(corpus, cb, scale, "id", vecCol))
+    }
+    def cut(state: DataFrame, corpus: DataFrame, cb: Codebooks,
+            pol: Similarity.RebalancePolicy, scale: Long, vecCol: String)
+        : (Codebooks, DataFrame, DataFrame) = {
+      val (idx, coarse, movement) = Similarity.rebalanceIvfPqMovement(
+        state, corpus, cb.coarse, cb.pq, pol, scale, idCol = "id",
+        vecCol = vecCol)
+      // lazy (r18): the census movers collect materializes it
+      (Codebooks(coarse, cb.pq), idx, movement.localCheckpoint(false))
+    }
+  }
+
+  /** The s25 loop ([[continuousAssignmentsWithRetrain]]). The
+    * assignment family has no normalized encode space, so a
+    * `NormPolicy(recover = true)` — which only the IVF-PQ family acts
+    * on — is rejected here rather than silently ignored.
+    */
+  private[graft] def assignRetrainLoop(spark: SparkSession,
+      initialCorpus: DataFrame, initialState: DataFrame,
+      initialCb: Array[Array[Long]], k: Int, maxIter: Int, scale: Long,
+      idCol: String, vecCol: String, root: String,
+      driftPolicy: Option[Similarity.DriftPolicy] = None,
+      rebalancePolicy: Option[Similarity.RebalancePolicy] = None,
+      normPolicy: Option[Similarity.NormPolicy] = None,
+      policy: LineagePolicy = LineagePolicy()): RetrainLoop = {
+    require(!normPolicy.exists(_.recover),
+      "continuousAssignmentsWithRetrain: NormPolicy(recover = true) is " +
+        "not supported — the assignment family has no normalized encode " +
+        "space to recover into, so the flag would be ignored; use " +
+        "continuousIvfPqWithRetrain for the s41 recovery, or " +
+        "recover = false for the advisory tripwire")
+    new RetrainLoop(spark, initialCorpus, initialState, Codebooks(initialCb),
+      AssignQuantizer(k, maxIter), scale, idCol, vecCol, root,
+      driftPolicy, rebalancePolicy, normPolicy, policy)
+  }
+
+  /** The s27 loop ([[continuousIvfPqWithRetrain]]). */
+  private[graft] def ivfPqRetrainLoop(spark: SparkSession,
       initialCorpus: DataFrame, initialState: DataFrame,
       initialCoarse: Array[Array[Long]], initialPq: Array[Array[Array[Long]]],
       dim: Int, nLists: Int, m: Int, codebookSize: Int,
       maxIterCoarse: Int, maxIterPq: Int, scale: Long,
+      idCol: String, vecCol: String, root: String,
+      driftPolicy: Option[Similarity.DriftPolicy] = None,
+      rebalancePolicy: Option[Similarity.RebalancePolicy] = None,
+      normPolicy: Option[Similarity.NormPolicy] = None,
+      policy: LineagePolicy = LineagePolicy()): RetrainLoop =
+    new RetrainLoop(spark, initialCorpus, initialState,
+      Codebooks(initialCoarse, initialPq),
+      IvfPqQuantizer(dim, nLists, m, codebookSize, maxIterCoarse, maxIterPq),
+      scale, idCol, vecCol, root, driftPolicy, rebalancePolicy, normPolicy,
+      policy)
+
+  /** The retrain state machine for both quantizer families (see
+    * [[continuousAssignmentsWithRetrain]] and
+    * [[continuousIvfPqWithRetrain]]): the Loop's disk-is-truth
+    * versioning applied to five lineages under `root` — corpus payload
+    * and the quantizer's state (delta-chained, O(batch) at ordinary
+    * boundaries), codebooks, census and norm (bounded-size snapshots:
+    * k·dim / nLists / 1 rows, written as bases) — all on the Hadoop FS
+    * API (r16 verdict #4) and vacuumed on one sweep. A marker row, the
+    * drift monitor, or the norm recovery selects the retrain movement
+    * over the delta upsert at its boundary; the census monitor selects
+    * the cut. Write order is norm → corpus → codebooks → state →
+    * census, and every artifact resolves strictly below the batch id,
+    * so a crash between any two writes redelivers into byte-compatible
+    * rewrites — the order inside a boundary does not matter.
+    */
+  private[graft] final class RetrainLoop(spark: SparkSession,
+      initialCorpus: DataFrame, initialState: DataFrame,
+      initialCb: Codebooks, quantizer: Quantizer, scale: Long,
       idCol: String, vecCol: String, val root: String,
       driftPolicy: Option[Similarity.DriftPolicy] = None,
       rebalancePolicy: Option[Similarity.RebalancePolicy] = None,
       normPolicy: Option[Similarity.NormPolicy] = None,
-      policy: LineagePolicy = LineagePolicy()) {
+      policy: LineagePolicy = LineagePolicy())
+      extends StreamLoop[RetrainRun] {
+    import spark.implicits._
 
     val boundaries = scala.collection.mutable.ArrayBuffer.empty[Boundary]
     val retrainedAt = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1133,61 +1041,41 @@ object ContinuousIndexMaintenance {
     val normFlaggedAt = scala.collection.mutable.ArrayBuffer.empty[Long]
     val normRecoveredAt = scala.collection.mutable.ArrayBuffer.empty[Long]
 
-    // corpus + index delta-chained, cb/census/norm bounded snapshots —
-    // [[RetrainLoop]]'s layout with the composed index in the
-    // assignment's seat; all on the Hadoop FS API (r16 verdict #4)
     private val corpusLin = new Lineage(spark, s"$root/corpus")
-    private val indexLin = new Lineage(spark, s"$root/index")
+    private val stateLin = new Lineage(spark, s"$root/${quantizer.dir}")
     private val cbLin = new Lineage(spark, s"$root/cb")
     private val censusLin = new Lineage(spark, s"$root/census")
     private val normLin = new Lineage(spark, s"$root/norm")
-    private val lineages =
-      Seq(corpusLin, indexLin, cbLin, censusLin, normLin)
 
+    // normalized (id, vecCol) corpus-state view of the caller's corpus
     private val initCorpusN = initialCorpus
       .select(col(idCol).as("id"), col(vecCol))
 
-    private def writeCbs(coarse: Array[Array[Long]],
-                         pq: Array[Array[Array[Long]]], v: Long): Unit = {
-      import spark.implicits._
-      val coarseRows = coarse.zipWithIndex.flatMap { case (c, cid) =>
-        c.zipWithIndex.map { case (x, pos) =>
-          (0, 0, cid.toLong, pos.toLong, x) }
-      }
-      val pqRows = pq.zipWithIndex.flatMap { case (cb, s) =>
-        cb.zipWithIndex.flatMap { case (c, cid) =>
+    private def writeCb(cb: Codebooks, v: Long): Unit = {
+      def rows(stage: Int, sub: Int, lists: Array[Array[Long]]) =
+        lists.zipWithIndex.flatMap { case (c, cid) =>
           c.zipWithIndex.map { case (x, pos) =>
-            (1, s, cid.toLong, pos.toLong, x) } }
-      }
-      cbLin.writeBase(
-        (coarseRows ++ pqRows).toSeq.toDF("stage", "sub", "cid", "pos", "c"),
-        v)
+            (stage, sub, cid.toLong, pos.toLong, x) } }
+      cbLin.writeBase((rows(0, 0, cb.coarse) ++
+          cb.pq.zipWithIndex.flatMap { case (p, s) => rows(1, s, p) })
+        .toSeq.toDF("stage", "sub", "cid", "pos", "c"), v)
     }
 
-    private def readCbs(v: Long)
-        : (Array[Array[Long]], Array[Array[Array[Long]]]) = {
-      val rows = cbLin.readBase(v).collect()
-      val coarse = rows.filter(_.getInt(0) == 0)
-        .groupBy(_.getLong(2)).toSeq.sortBy(_._1)
-        .map(_._2.sortBy(_.getLong(3)).map(_.getLong(4)).toArray).toArray
-      val pq = rows.filter(_.getInt(0) == 1)
-        .groupBy(_.getInt(1)).toSeq.sortBy(_._1)
-        .map { case (_, sub) =>
-          sub.groupBy(_.getLong(2)).toSeq.sortBy(_._1)
-            .map(_._2.sortBy(_.getLong(3)).map(_.getLong(4)).toArray).toArray
-        }.toArray
-      (coarse, pq)
+    private def readCb(v: Long): Codebooks = {
+      val rows = cbLin.readBase(v)
+        .select(col("stage"), col("sub"), col("cid"), col("pos"), col("c"))
+        .collect()
+      def lists(rs: Array[org.apache.spark.sql.Row]) =
+        rs.groupBy(_.getLong(2)).toSeq.sortBy(_._1)
+          .map(_._2.sortBy(_.getLong(3)).map(_.getLong(4)).toArray).toArray
+      Codebooks(lists(rows.filter(_.getInt(0) == 0)),
+        rows.filter(_.getInt(0) == 1).groupBy(_.getInt(1)).toSeq
+          .sortBy(_._1).map { case (_, sub) => lists(sub) }.toArray)
     }
 
-    private def readCensus(v: Long): Map[Long, Long] =
-      censusLin.readBase(v).collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-
-    private def writeCensus(c: Iterable[(Long, Long)], b: Long): Unit = {
-      import spark.implicits._
+    private def writeCensus(c: Iterable[(Long, Long)], b: Long): Unit =
       censusLin.writeBase(
         c.toSeq.sortBy(_._1).toDF("cid", "n").coalesce(1), b)
-    }
 
     // index versions are read back through a cid= partition layout, so
     // the partition column may come back INT — normalize before getLong
@@ -1195,29 +1083,15 @@ object ContinuousIndexMaintenance {
       state.groupBy(col("cid").cast("long").as("cid")).count().collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
 
-    private def readNorm(v: Long): (Long, Long, String) = {
-      // select by NAME before the positional reads (r16 advice):
-      // correctness must not hinge on writeNorm's column order
-      // surviving a future schema change
-      val r = normLin.readBase(v)
-        .select(col("minN2"), col("maxN2"), col("mode")).head()
-      (r.getLong(0), r.getLong(1), r.getString(2))
-    }
-
-    private def writeNorm(env: (Long, Long), mode: String, b: Long): Unit = {
-      import spark.implicits._
-      normLin.writeBase(
-        Seq((env._1, env._2, mode)).toDF("minN2", "maxN2", "mode")
-          .coalesce(1), b)
-    }
-
-    /** [[RetrainLoop]]'s norm-collapse tripwire — it matters MOST on
-      * this loop (the measured collapse is an ADC recall property) —
-      * PLUS the s41 recovery decision (r17): the norm version now
-      * carries the lineage's encode-space MODE ("raw" | "l2"), and a
-      * [[graft.operators.Similarity.NormPolicy]] with `recover` set
-      * transitions raw → l2 at the first flagged boundary. Returns
-      * (mode this boundary operates under, whether THIS boundary
+    /** The norm-collapse tripwire (see [[continuousAssignmentsWithRetrain]])
+      * PLUS the s41 recovery decision (r17): widen the on-disk envelope
+      * with this boundary's delta (the lineage's first boundary
+      * baselines from the corpus base — the one corpus-scale pass),
+      * version it with the lineage's encode-space MODE ("raw" | "l2"),
+      * and record the flag. A [[graft.operators.Similarity.NormPolicy]]
+      * with `recover` set (IVF-PQ family only — the assignment factory
+      * rejects it) transitions raw → l2 at the first flagged boundary.
+      * Returns (mode this boundary operates under, whether THIS boundary
       * executes the recovery). Pure function of (norm chain below k,
       * corpus base, batch) — redelivery re-decides identically, the
       * loops' standing restart contract. The envelope itself stays the
@@ -1229,8 +1103,12 @@ object ContinuousIndexMaintenance {
       normPolicy match {
         case None => ("raw", false)
         case Some(pol) =>
-          val (bMin, bMax, bMode) =
-            normLin.chainBelow(batchId)._1.map(readNorm).getOrElse {
+          // select by NAME before the positional reads (r16 advice):
+          // correctness must not hinge on the write's column order
+          val (bMin, bMax, bMode) = normLin.chainBelow(batchId)._1
+            .map(v => normLin.readBase(v).select(col("minN2"), col("maxN2"),
+              col("mode")).as[(Long, Long, String)].head())
+            .getOrElse {
               val e = Similarity.normEnvelope(corpusBase, scale,
                 idCol = "id", vecCol = vecCol)
                 .getOrElse((Long.MaxValue, Long.MinValue))
@@ -1242,35 +1120,22 @@ object ContinuousIndexMaintenance {
           val flagged = pol.flags(env._1, env._2)
           val recoverNow = pol.recover && bMode == "raw" && flagged
           val mode = if (recoverNow || bMode == "l2") "l2" else "raw"
-          writeNorm(env, mode, batchId)
+          normLin.writeBase(Seq((env._1, env._2, mode))
+            .toDF("minN2", "maxN2", "mode").coalesce(1), batchId)
           normStats += NormStat(batchId, env._1, env._2)
           if (flagged) normFlaggedAt += batchId
           (mode, recoverNow)
       }
 
     def processBatch(batch: DataFrame, batchId: Long): Unit = {
-      val delta = batch.filter(col("status") =!= "retrain")
-      val s = batch.groupBy(col(idCol))
-        .agg(count(lit(1)).as("__n"), first(col("status")).as("__st"))
-        .agg(max(when(col(idCol).isNotNull, col("__n"))),
-          sum(when(col("__st").isin("removed", "changed"), 1L).otherwise(0L)),
-          sum(when(col("__st").isin("added", "changed"), 1L).otherwise(0L)),
-          sum(when(col("__st") === "retrain", 1L).otherwise(0L))).head()
-      val (maxn, touched, signatured, markers) =
-        if (s.isNullAt(1) && s.isNullAt(3)) (0L, 0L, 0L, 0L)
-        else (if (s.isNullAt(0)) 0L else s.getLong(0),
-          s.getLong(1), s.getLong(2), s.getLong(3))
-      require(maxn <= 1L,
-        s"continuous ivfpq retrain maintenance: batch $batchId carries " +
-          s"duplicate rows per '$idCol' — one diff row per id per " +
-          "boundary; pre-aggregate the batch upstream")
+      val (touched, signatured, markers) =
+        boundaryCounts(batch, idCol, batchId)
+      val (diff, docs) =
+        diffAndDocs(batch.filter(col("status") =!= "retrain"), idCol)
       val corpusBase = corpusLin.stateBelow(batchId, initCorpusN)
-      val indexBase = indexLin.stateBelow(batchId, initialState)
-      val (coarseBase, pqBase) = cbLin.chainBelow(batchId)._1
-        .map(readCbs).getOrElse((initialCoarse, initialPq))
-      val diff = delta.select(col(idCol).as("id"), col("status"))
-      val docs = delta.filter(col("status").isin("added", "changed"))
-        .drop("status")
+      val stateBase = stateLin.stateBelow(batchId, initialState)
+      val cbBase = cbLin.chainBelow(batchId)._1.map(readCb)
+        .getOrElse(initialCb)
       // the tripwire + RECOVERY decision + encode-space mode (s41) —
       // decided FIRST so every kernel below runs in the right space
       val (encMode, recoverNow) = normTick(docs, corpusBase, batchId)
@@ -1281,167 +1146,150 @@ object ContinuousIndexMaintenance {
         if (encMode == "l2")
           (Similarity.l2NormalizeFixedPoint(df, scale, id, vecCol), 1L)
         else (df, scale)
-      // the delta's encode under the CURRENT codebooks — computed once
-      // and shared by the drift monitor's moved-share, the census
-      // landings, AND the upsert kernel (the assignment loop's
-      // freshDelta trick; its cid IS the fresh coarse argmax)
-      lazy val enc = {
+      // the delta's fresh exact-integer encode under the CURRENT
+      // codebooks — computed ONCE and shared by the drift monitor's
+      // moved-share, the census monitor's landings, AND the
+      // non-retrain upsert's kernel (all delta-sized; checkpointed so
+      // none re-runs the scan — the kernel would otherwise recompute
+      // the identical encode per the maintenance theorem). Its cid IS
+      // the fresh coarse argmax.
+      lazy val fresh = {
         val (dm, sc) = inMode(docs, idCol)
-        Similarity.ivfPqEncodeFixedPoint(dm, coarseBase,
-          pqBase, sc, idCol, vecCol).localCheckpoint(false) // lazy (r18):
-          // the first consumer (monitor collect or upsert write)
-          // materializes — no dedicated job per boundary
+        quantizer.encode(dm, cbBase, sc, idCol, vecCol)
+          .localCheckpoint(false) // lazy (r18): the first consumer (the
+          // monitor collect or the upsert write) materializes the
+          // blocks — no dedicated job per boundary
       }
-      // the drift MONITOR (s40): s29's moved-share statistic on the
-      // composed state — delta rows whose fresh coarse argmax differs
-      // from their stored index list, over all added∪changed rows.
-      // Delta-sized (one id-join against the index's (id, cid) columns)
-      // and exact integers, so the boundary CHOICE oracle-replays.
-      // Decided BEFORE the corpus write so the retrain boundary can
-      // compact the corpus in the same pass it trains over (r17). A
-      // recovery boundary supersedes it (the recovery retrains BOTH
-      // stages anyway, in the new space).
       // ONE delta-sized pass feeds the drift moved-share AND the census
       // landings/vacated seats (r17 — see monitorStats: they were three
-      // separate index-shuffling jobs per boundary)
-      lazy val mstats = monitorStats(diff, enc, indexBase)
+      // separate state-shuffling jobs per boundary)
+      lazy val mstats = monitorStats(diff, fresh, stateBase)
+      // the drift MONITOR (s29/s40): this boundary's MOVED-share — delta
+      // rows whose fresh argmax list differs from their stored seat,
+      // over all added∪changed delta rows. One delta-sized encode + one
+      // id-join against the state; exact integers end to end, so the
+      // boundary CHOICE replays in the oracle. Decided BEFORE the
+      // corpus write so a retrain boundary compacts the corpus in the
+      // same pass it trains over (r17). The marker row stays the manual
+      // override; a recovery boundary supersedes it (the recovery
+      // retrains anyway, in the new space).
       val drifted = markers == 0 && !recoverNow && driftPolicy.exists { p =>
         val (nMoved, nTot) = statMoved(mstats)
         driftStats += DriftStat(batchId, nMoved, nTot)
         p.triggers(nMoved, nTot)
       }
-      // 1. corpus version: O(batch) delta at ordinary boundaries; a
-      // full base at RETRAIN/RECOVERY boundaries (both trainer stages
-      // scan the corpus anyway — the natural compaction point) or when
-      // the chain trailed compactEvery−1 deltas. The corpus lineage
-      // stores RAW vectors in every mode — normalization is an
-      // encode-path property, not a corpus rewrite.
+      // 1. corpus version: O(batch) delta at ordinary boundaries; a full
+      // base at RETRAIN/RECOVERY boundaries (training scans the corpus
+      // anyway — the natural compaction point) or when the chain
+      // trailed compactEvery−1 deltas. The corpus lineage stores RAW
+      // vectors in every mode — normalization is an encode-path
+      // property, not a corpus rewrite.
       val willRetrain = recoverNow || markers > 0 || drifted
-      if (willRetrain ||
-          corpusLin.deltasBelow(batchId) + 1 >= policy.compactEvery)
-        corpusLin.writeBase(IndexMaintenance.upsert(corpusBase, diff,
-          docs, idCol)(_.select(col(idCol).as("id"), col(vecCol))),
-          batchId)
-      else
-        corpusLin.writeDelta(deltaRows(
-          docs.select(col(idCol).as("id"), col(vecCol)), diff), batchId)
+      corpusLin.writeBoundary(batchId, policy, diff, compact = willRetrain)(
+        base = IndexMaintenance.upsert(corpusBase, diff, docs, idCol)(
+          _.select(col(idCol).as("id"), col(vecCol))),
+        rows = docs.select(col(idCol).as("id"), col(vecCol)))
       val corpusV = corpusLin.stateBelow(batchId + 1, initCorpusN)
-      // 2 + 3. codebooks + index under this boundary's movement
+      // 2 + 3. codebooks + state under this boundary's movement
       if (willRetrain) {
-        // a RECOVERY boundary is the retrain movement in the NEW
-        // encode space (inMode already reads "l2" at it): both stages
-        // trained on the fixed-point-normalized post-delta corpus,
-        // whole corpus re-encoded — the measured 0.920-recall recipe
-        // executed, not just named (s41)
+        // a RECOVERY boundary is the retrain movement in the NEW encode
+        // space (inMode already reads "l2" at it): the measured
+        // 0.920-recall recipe executed, not just named (s41)
         val (tc, sc) = inMode(corpusV, "id")
-        val (newCoarse, newPq) = Similarity.ivfPqTrainFixedPoint(tc,
-          dim, nLists, m, codebookSize, maxIterCoarse, maxIterPq, sc,
-          idCol = "id", vecCol = vecCol)
-        writeCbs(newCoarse, newPq, batchId)
-        // index BASE versions keep the served physical layout:
-        // partitioned by list id, so s28's probed-list filter prunes
-        // files (deltas are batch-sized, scanned whole by design)
-        indexLin.writeBase(
-          Similarity.ivfPqEncodeFixedPoint(tc, newCoarse, newPq,
-            sc, idCol = "id", vecCol = vecCol),
-          batchId, partitionCols = Seq("cid"))
+        val (newCb, newState) = quantizer.retrain(stateBase, tc, sc, vecCol)
+        writeCb(newCb, batchId)
+        stateLin.writeBase(newState, batchId, quantizer.partitionCols)
         if (recoverNow) normRecoveredAt += batchId
         else retrainedAt += batchId
-        // a retrain rewrote every index row; the census re-baselines
-        // from the state the retrain already produced (one aggregate
-        // over a boundary that pays a corpus-scale pass by definition)
+        // a retrain rewrote every state row, so the incremental census
+        // re-baselines from the state the retrain already produced (one
+        // aggregate over a boundary that pays a corpus-scale pass by
+        // definition)
         if (rebalancePolicy.isDefined)
-          writeCensus(censusOf(indexLin.readBase(batchId)), batchId)
+          writeCensus(censusOf(stateLin.readBase(batchId)), batchId)
       } else {
+        // the post-delta state: a compaction's base, and what a census
+        // cut splits — it must base on what is PHYSICALLY in each list
+        // (after a previous split the state is rank-chunked, not the
+        // fresh argmax). Kernel = the already-checkpointed `fresh`:
+        // `docs` IS the added∪changed delta, so upsert's semi-join
+        // passes it through and the kernel is deterministically `fresh`
+        val upserted = IndexMaintenance.upsert(stateBase, diff, docs,
+          idCol)(_ => fresh)
+        def advance(): Unit =
+          stateLin.writeBoundary(batchId, policy, diff,
+            quantizer.partitionCols)(base = upserted, rows = fresh)
         rebalancePolicy match {
-          case None =>
-            if (indexLin.deltasBelow(batchId) + 1 >= policy.compactEvery)
-              indexLin.writeBase(IndexMaintenance.upsert(indexBase, diff,
-                docs, idCol)(_ => enc), batchId,
-                partitionCols = Seq("cid"))
-            else
-              indexLin.writeDelta(deltaRows(enc, diff), batchId)
+          case None => advance()
           case Some(pol) =>
-            // the census MONITOR over the PHYSICAL lists (s39):
-            // exact-integer sizes maintained incrementally — base
-            // version + this delta's encode landings and vacated
-            // seats, both delta-sized; the index is only scanned to
-            // baseline a lineage (or re-baseline after a retrain)
-            val base = censusLin.chainBelow(batchId)._1.map(readCensus)
-              .getOrElse(censusOf(indexBase))
-            // landings + vacated seats from the shared monitorStats pass
-            val landed = statLanded(mstats)
-            val vacated = statVacated(mstats)
-            val census = (base.toSeq ++ landed ++
-              vacated.map { case (c, n) => c -> -n })
+            // the census MONITOR (s34/s39): exact-integer list sizes of
+            // the PHYSICAL state, maintained INCREMENTALLY — base
+            // version + this delta's landings and vacated seats (both
+            // from the shared monitorStats pass); the state is only
+            // scanned to baseline a lineage (or re-baseline after a
+            // retrain). Every touched id that EXISTS in the state
+            // vacates its seat, any status: the upsert replaces a
+            // re-"added" existing row too, and a status filter would
+            // leave it a phantom seat
+            val base = censusLin.chainBelow(batchId)._1
+              .map(v => censusLin.readBase(v).collect()
+                .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+              .getOrElse(censusOf(stateBase))
+            val census = (base.toSeq ++ statLanded(mstats) ++
+              statVacated(mstats).map { case (c, n) => c -> -n })
               .groupBy(_._1).view.mapValues(_.map(_._2).sum)
               .filter(_._2 > 0L).toMap
             val nTot = census.values.sum
             censusStats += CensusStat(batchId,
               if (census.isEmpty) 0L else census.values.max, nTot)
-            // the post-delta physical state both branches serve from
-            val upserted = IndexMaintenance.upsert(indexBase, diff, docs,
-              idCol)(_ => enc)
             if (census.exists { case (_, n) =>
-                pol.splits(n, coarseBase.length, nTot) }) {
-              // the s37 cut over the physical (id, cid, codes) lists:
-              // rank-chunk split + every split-list member's residual
-              // codes re-encoded against its chunk centroid; un-split
-              // rows carry verbatim. Pure function of (corpus version,
-              // index version, codebook base, policy) — redelivery
-              // recuts identically.
+                pol.splits(n, cbBase.coarse.length, nTot) }) {
               // the cut runs in the boundary's ENCODE SPACE (r17): in
               // l2 mode the stored codes and codebooks are normalized,
-              // so the split members' residual re-encode must read the
-              // normalized corpus at scale 1 — a raw-corpus cut would
-              // silently corrupt every split member's codes
+              // so the split members' re-encode must read the
+              // normalized corpus at scale 1. Pure function of (corpus
+              // version, state version, codebook base, policy) —
+              // redelivery recuts identically
               val (cutCorpus, cutScale) = inMode(corpusV, "id")
-              val (rebIdx, newCoarse, movement) =
-                Similarity.rebalanceIvfPqMovement(upserted, cutCorpus,
-                  coarseBase, pqBase, pol, cutScale, idCol = "id",
-                  vecCol = vecCol)
-              // the divergence guard (the assignment loop's): the
-              // incremental census crossed, so the physical cut must
-              // move something — an identity cut means the maintained
-              // census diverged from the index; fail loud, never mask
-              require(newCoarse.length > coarseBase.length,
-                s"ivfpq census monitor: boundary $batchId crossed the " +
-                  "split bar on the incremental census, but the physical " +
-                  "cut split nothing — the maintained census has " +
-                  "diverged from the index state")
-              writeCbs(newCoarse, pqBase, batchId)
-              val mv = movement.localCheckpoint(false) // post-census
-              // (lazy, r18: the movers collect below materializes it)
-              // the cut rewrites the full physical index — a natural
-              // compaction point, landed as a partitioned base
-              indexLin.writeBase(rebIdx, batchId,
-                partitionCols = Seq("cid"))
+              val (newCb, newState, mv) = quantizer.cut(upserted,
+                cutCorpus, cbBase, pol, cutScale, vecCol)
+              // the incremental census said SOME list crossed the bar;
+              // an identity cut means the cut's own census — taken over
+              // the physical state — disagreed with the maintained one:
+              // the exact divergence class the r14 review chased.
+              // Versioning the unchanged codebook and recording
+              // rebalancedAt would mask it silently; fail loud.
+              require(newCb.coarse.length > cbBase.coarse.length,
+                s"census monitor: boundary $batchId crossed the split " +
+                  "bar on the incremental census, but the cut over the " +
+                  "physical state split nothing — the maintained census " +
+                  s"has diverged from the ${quantizer.dir} state")
+              writeCb(newCb, batchId)
+              // the cut rewrites the full state by definition — a
+              // natural compaction point, landed as a base
+              stateLin.writeBase(newState, batchId, quantizer.partitionCols)
               rebalancedAt += batchId
               // post-split census from the movement's mover counts —
-              // split lists' members only, never an index scan
-              val movers = mv.filter(col("cid") >= coarseBase.length.toLong)
+              // the split lists' members, never a state scan
+              val movers = mv.filter(col("cid") >= cbBase.coarse.length.toLong)
                 .groupBy(col("old_cid"), col("cid")).count().collect()
                 .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-              val post = movers.foldLeft(census) { case (c, (o, nw, n)) =>
+              writeCensus(movers.foldLeft(census) { case (c, (o, nw, n)) =>
                 c.updated(o, c.getOrElse(o, 0L) - n).updated(nw, n)
-              }.filter(_._2 > 0L)
-              writeCensus(post, batchId)
+              }.filter(_._2 > 0L), batchId)
             } else {
-              if (indexLin.deltasBelow(batchId) + 1 >= policy.compactEvery)
-                indexLin.writeBase(upserted, batchId,
-                  partitionCols = Seq("cid"))
-              else
-                indexLin.writeDelta(deltaRows(enc, diff), batchId)
+              advance()
               writeCensus(census, batchId)
             }
         }
       }
-      if (policy.vacuum) lineages.foreach(_.vacuumBelow(batchId))
+      if (policy.vacuum) Seq(corpusLin, stateLin, cbLin, censusLin, normLin)
+        .foreach(_.vacuumBelow(batchId))
       boundaries += Boundary(batchId, touched, signatured)
     }
 
     def result: RetrainRun =
-      RetrainRun(indexLin.stateBelow(Long.MaxValue, initialState),
+      RetrainRun(stateLin.stateBelow(Long.MaxValue, initialState),
         boundaries.toSeq, retrainedAt.toSeq,
         driftStats.toSeq, rebalancedAt.toSeq, censusStats.toSeq,
         normStats.toSeq, normFlaggedAt.toSeq, normRecoveredAt.toSeq)

@@ -273,7 +273,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(w1, cbOld).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_cra_spec").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark, w1, init,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark, w1, init,
       cbOld, 2, 1, 1000000L, "vec_id", "embedding", root)
     loop.processBatch(retrainBatch(Seq(
       (2L, Seq(0.7f, 0.3f), "changed"))), 0L)
@@ -306,7 +306,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(w1, cbOld).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_cra_redeliver").toString
-    def newLoop() = new ContinuousIndexMaintenance.RetrainLoop(spark, w1,
+    def newLoop() = ContinuousIndexMaintenance.assignRetrainLoop(spark, w1,
       init, cbOld, 2, 1, 1000000L, "vec_id", "embedding", root)
     val b1 = retrainBatch(Seq(
       (3L, null, "removed"),
@@ -338,7 +338,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.ivfPqEncodeFixedPoint(w1, cOld, pOld).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_cipr_spec").toString
-    def newLoop() = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       w1, init, cOld, pOld, 2, 2, 2, 2, 1, 1, 1000000L,
       "vec_id", "embedding", root)
     val b1 = retrainBatch(Seq(
@@ -472,7 +472,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     S.assignFixedPoint(chg2, cbOld).head().getLong(1) should not be oldA(2L)
     val root = java.nio.file.Files
       .createTempDirectory("graft_drift_redeliver").toString
-    def newLoop() = new ContinuousIndexMaintenance.RetrainLoop(spark, w1,
+    def newLoop() = ContinuousIndexMaintenance.assignRetrainLoop(spark, w1,
       init, cbOld, 2, 1, 1000000L, "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)))
     def batch(rows: Seq[(java.lang.Long, Seq[Float], String)]) =
@@ -517,7 +517,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(w1, cbOld).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_drift_marker").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark, w1,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark, w1,
       init, cbOld, 2, 1, 1000000L, "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)))
     loop.processBatch(retrainBatch(Seq(
@@ -583,7 +583,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_census_redeliver").toString
-    def newLoop() = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       rebalancePolicy = Some(pol))
     val b0 = retrainBatch(Seq((5L, null, "removed")))
@@ -634,7 +634,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_census_twice").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       rebalancePolicy = Some(pol))
     // b0 crosses (c1 grows to 8 of 9: 2·8·3 ≥ 5·9) and splits; b1 adds
@@ -685,7 +685,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_census_then_drift").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)),
       rebalancePolicy = Some(S.RebalancePolicy(5L, 2L)))
@@ -739,7 +739,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_composed_redeliver").toString
-    def newLoop() = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)),
       rebalancePolicy = Some(S.RebalancePolicy(5L, 2L)))
@@ -776,7 +776,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_census_readd").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       rebalancePolicy = Some(pol))
     // id 2 already lives in list 1; "added" again near the origin — it
@@ -822,7 +822,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
       .createTempDirectory("graft_ivfpq_census_redeliver").toString
     // vacuum off: the spec audits census ≡ physical state at EVERY
     // historical boundary, which needs the full lineage retained
-    def newLoop() = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       rebCorpus, init, rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L,
       "vec_id", "embedding", root, rebalancePolicy = Some(pol),
       policy = ContinuousIndexMaintenance.LineagePolicy(vacuum = false))
@@ -889,7 +889,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
       .localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_drift").toString
-    val loop = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       rebCorpus, init, rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L,
       "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)),
@@ -934,7 +934,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
       .localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_ivfpq_drift_redeliver").toString
-    def newLoop() = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       rebCorpus, init, rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L,
       "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)))
@@ -971,7 +971,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(corpus, cb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_norm_trip").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       corpus, init, cb, 2, 1, 1000000L, "vec_id", "embedding", root,
       normPolicy = Some(npol))
     // b0: a natural-scale delta — envelope widens a little, no flag
@@ -1010,7 +1010,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
       .localCheckpoint()
     val nRoot = java.nio.file.Files
       .createTempDirectory("graft_norm_quiet").toString
-    val nLoop = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    val nLoop = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       nCorpus, nInit, rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L,
       "vec_id", "embedding", nRoot, normPolicy = Some(npol))
     nLoop.processBatch(retrainBatch(Seq(
@@ -1031,7 +1031,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_census_runbook").toString
-    def newLoop() = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       rebalancePolicy = Some(pol))
     val first = newLoop()
@@ -1087,7 +1087,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_three_decisions").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       driftPolicy = Some(S.DriftPolicy(3L, 5L)),
       rebalancePolicy = Some(S.RebalancePolicy(5L, 2L)))
@@ -1149,7 +1149,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_census_marker").toString
-    val loop = new ContinuousIndexMaintenance.RetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.assignRetrainLoop(spark,
       rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding", root,
       rebalancePolicy = Some(pol))
     loop.processBatch(retrainBatch(Seq(
@@ -1182,7 +1182,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
       .localCheckpoint()
     val root = java.nio.file.Files
       .createTempDirectory("graft_norm_recover").toString
-    def newLoop() = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    def newLoop() = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       corpus, init, rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L,
       "vec_id", "embedding", root,
       normPolicy = Some(S.NormPolicy(8L, 1L, recover = true)))
@@ -1247,7 +1247,7 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val root = java.nio.file.Files
       .createTempDirectory("graft_norm_recover_cut").toString
     val pol = S.RebalancePolicy(2L, 1L)
-    val loop = new ContinuousIndexMaintenance.IvfPqRetrainLoop(spark,
+    val loop = ContinuousIndexMaintenance.ivfPqRetrainLoop(spark,
       corpus, init, rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L,
       "vec_id", "embedding", root,
       rebalancePolicy = Some(pol),
@@ -1437,5 +1437,101 @@ class ContinuousIndexMaintenanceSpec extends SparkSpec {
     val mixed = Seq((1L, Seq.empty[Double]), (2L, Seq(3.0, 4.0)))
       .toDF("vec_id", "embedding")
     Similarity.normEnvelope(mixed, scale = 1L) shouldBe Some((0L, 25L))
+  }
+
+  // ---- one retrain boundary for both quantizer families ----
+
+  private def familyLoop(family: String, root: String) =
+    if (family == "assign")
+      ContinuousIndexMaintenance.assignRetrainLoop(spark, rebCorpus,
+        graft.operators.Similarity.assignFixedPoint(rebCorpus, rebCb)
+          .localCheckpoint(),
+        rebCb, 3, 1, 1000000L, "vec_id", "embedding", root)
+    else
+      ContinuousIndexMaintenance.ivfPqRetrainLoop(spark, rebCorpus,
+        graft.operators.Similarity.ivfPqEncodeFixedPoint(rebCorpus, rebCb,
+          rebPq).localCheckpoint(),
+        rebCb, rebPq, 2, 3, 1, 2, 1, 1, 1000000L, "vec_id", "embedding", root)
+
+  for (family <- Seq("assign", "ivfpq"))
+    test(s"$family retrain loop: a batch with duplicate ids fails loudly, naming the batch and the id") {
+      val root = java.nio.file.Files
+        .createTempDirectory(s"graft_dup_$family").toString
+      // a marker row rides along: markers never count toward the guard
+      val dupBatch = retrainBatch(Seq(
+        (77L, Seq(0.1f, 0.1f), "added"),
+        (77L, Seq(0.2f, 0.2f), "added"),
+        (null.asInstanceOf[java.lang.Long], null, "retrain")))
+      val e = the[IllegalArgumentException] thrownBy
+        familyLoop(family, root).processBatch(dupBatch, 3L)
+      e.getMessage should include("duplicate")
+      e.getMessage should include("batch 3")
+      e.getMessage should include("[77,2]") // (id, rows) example
+    }
+
+  test("continuousAssignmentsWithRetrain rejects NormPolicy(recover = true) instead of never recovering") {
+    // only the IVF-PQ family has a normalized encode space to recover
+    // into; the assignment loop must not accept the flag and ignore it
+    val S = graft.operators.Similarity
+    val src = java.nio.file.Files
+      .createTempDirectory("graft_recover_reject").toString
+    val stream = spark.readStream.schema(retrainBatch(Nil).schema)
+      .parquet(src)
+    val e = the[IllegalArgumentException] thrownBy
+      ContinuousIndexMaintenance.continuousAssignmentsWithRetrain(spark,
+        rebCorpus, S.assignFixedPoint(rebCorpus, rebCb), rebCb, stream,
+        k = 3, maxIter = 1,
+        normPolicy = Some(S.NormPolicy(8L, 1L, recover = true)))
+    e.getMessage should include("continuousAssignmentsWithRetrain")
+    e.getMessage should include("recover = true")
+    e.getMessage should include("continuousIvfPqWithRetrain")
+  }
+
+  test("torn assignment boundary: a crash right after the norm write redelivers into the uninterrupted run's state, census and codebook") {
+    // norm is every retrain boundary's FIRST write; all artifacts
+    // resolve strictly below the batch id, so a boundary torn right
+    // after it must redeliver exactly as if it had never started
+    val S = graft.operators.Similarity
+    val init = S.assignFixedPoint(rebCorpus, rebCb).localCheckpoint()
+    def newLoop(root: String) = ContinuousIndexMaintenance.assignRetrainLoop(
+      spark, rebCorpus, init, rebCb, 3, 1, 1000000L, "vec_id", "embedding",
+      root, driftPolicy = Some(S.DriftPolicy(3L, 5L)),
+      rebalancePolicy = Some(S.RebalancePolicy(5L, 2L)),
+      normPolicy = Some(S.NormPolicy(8L, 1L)))
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def rm(x: java.io.File): Unit = {
+      if (x.isDirectory) x.listFiles().foreach(rm); x.delete(); () }
+    val b0 = retrainBatch(Seq((9L, Seq(0.1f, 0.1f), "added")))
+    // five hot additions: c1 holds 10 of 12 ≥ 5/2 · avg — the cut
+    // versions a codebook, a full state base and a census
+    val b1 = retrainBatch((20L until 25L).map(i =>
+      (java.lang.Long.valueOf(i), Seq(0.75f, 0.5f), "added")))
+    val cleanRoot = tmp("graft_torn_clean")
+    val clean = newLoop(cleanRoot)
+    clean.processBatch(b0, 0L)
+    clean.processBatch(b1, 1L)
+    clean.rebalancedAt shouldBe Seq(1L)
+    val tornRoot = tmp("graft_torn")
+    val torn = newLoop(tornRoot)
+    torn.processBatch(b0, 0L)
+    torn.processBatch(b1, 1L)
+    // tear boundary 1: delete every artifact it wrote except norm/v1
+    val wrote = for {
+      d <- Seq("corpus", "assign", "cb", "census", "norm")
+      a <- Seq("v1", "d1") if new java.io.File(s"$tornRoot/$d/$a").exists
+    } yield s"$d/$a"
+    wrote should contain allOf ("norm/v1", "cb/v1", "assign/v1", "census/v1")
+    wrote.filterNot(_ == "norm/v1")
+      .foreach(a => rm(new java.io.File(s"$tornRoot/$a")))
+    val redelivered = newLoop(tornRoot) // fresh memory, same root
+    redelivered.processBatch(b1, 1L)
+    redelivered.rebalancedAt shouldBe Seq(1L)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    pairs(redelivered.result.state) shouldBe pairs(clean.result.state)
+    def rows(root: String, a: String) =
+      spark.read.parquet(s"$root/$a").collect().map(_.toSeq).toSet
+    rows(tornRoot, "census/v1") shouldBe rows(cleanRoot, "census/v1")
+    rows(tornRoot, "cb/v1") shouldBe rows(cleanRoot, "cb/v1")
   }
 }
