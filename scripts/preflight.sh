@@ -17,8 +17,17 @@
 #       tri-SF sweep found two real bugs in r12 (gates green at sf0.01
 #       but broken at the tiny SF's edge shapes: empty groups, single-
 #       row lists), so the cheapest SF is structural, not optional.
+#   (0) first, the one-session-builder rot check: a session is built in
+#       exactly two places, GraftSession.create (the library posture)
+#       and graft.Harness (every tool and the spec suite). A new tool
+#       that re-copies a builder block fails here with its file:line.
 set -euo pipefail
 cd "$(dirname "$0")/.."
+if grep -rn "SparkSession\.builder" src/ \
+    | grep -v "^src/main/scala/graft/\(GraftSession\|Harness\)\.scala:"; then
+  echo "preflight FAILED: SparkSession.builder() outside GraftSession.create and graft.Harness (above) — build the session with graft.Harness.session"
+  exit 1
+fi
 sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec" 2>&1 | tail -20
 OUT=$(mktemp -d /tmp/preflight_sf0001.XXXX)
 LOG=$(mktemp /tmp/preflight_verify.XXXX.log)
@@ -42,4 +51,4 @@ python3 scripts/check.py /root/testdata/sf0.001 "$OUT" \
 #       prove the checker itself still fails on `{}`.
 python3 scripts/roster_check.py --selftest
 python3 scripts/roster_check.py . "$OUT"
-echo "preflight OK: Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"
+echo "preflight OK: one session builder, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"

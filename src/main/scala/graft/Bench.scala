@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 object Bench {
 
@@ -36,43 +36,26 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // JIT/codegen warmup so the first timed queries aren't charged for
-    // cold-compiling the scan/join/agg paths every later query reuses
-    Seq("q01_agg_pricing_summary", "d01_dedup_exact", "t01_lang_id",
-        "q20_join_revenue_by_nation")
-      .foreach { q => SparkEntry.queries.get(q).foreach { fn =>
-        try fn(spark, sfDir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () } } }
+    val cpus = Harness.cpus
+    val spark = Harness.session()
+    Harness.warm(spark, sfDir)
     // min of two passes per query: this host shows transient multi-second
     // CPU-steal bursts that would otherwise land on one arbitrary query
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    def timeOnce(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 name: String): Double = {
+    def timeOnce(name: String): Double = {
       val t0 = System.nanoTime()
-      // materialize every output row (UnsafeRow, all columns) — a plain
-      // count() lets Catalyst prune projection-only queries to nothing
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
+      try Harness.time(spark, name, sfDir)
       catch { case e: Throwable =>
         // a failed query's elapsed time is NOT a benchmark number — track
         // it so the artifact says so instead of recording a fast-fail
         failed += name
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        (System.nanoTime() - t0) / 1e9
       }
-      (System.nanoTime() - t0) / 1e9
     }
-    val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
-    val pass1 = ordered.map { case (name, fn) => name -> timeOnce(fn, name) }.toMap
-    val pass2 = ordered.map { case (name, fn) => name -> timeOnce(fn, name) }.toMap
+    val ordered = SparkEntry.queries.keys.toSeq.sorted
+    val pass1 = ordered.map(name => name -> timeOnce(name)).toMap
+    val pass2 = ordered.map(name => name -> timeOnce(name)).toMap
     // Targeted third pass: a host-steal burst (multi-second CPU theft, see
     // r03's bogus 13.7 s t14 entry) can hit BOTH passes of one query. Any
     // query that is still slow after min-of-2, or whose two passes disagree
@@ -89,14 +72,14 @@ object Bench {
       best2 > 0.5 && math.max(pass1(name), pass2(name)) > 2.5 * best2
     }
     def noisy(name: String): Boolean = slowCause(name) || disagreeCause(name)
-    val results = ordered.map { case (name, fn) =>
+    val results = ordered.map { name =>
       val best2 = math.min(pass1(name), pass2(name))
-      name -> (if (noisy(name)) math.min(best2, timeOnce(fn, name)) else best2)
+      name -> (if (noisy(name)) math.min(best2, timeOnce(name)) else best2)
     }
     // which gates retried, not just how many: the outlier-retry pass can
     // mask systematic slow-starts unless the artifact names the gates
     // (VERDICT r7 "What's wrong" #3)
-    val retriedNames = ordered.collect { case (name, _) if noisy(name) => name }
+    val retriedNames = ordered.filter(noisy)
     val retried = retriedNames.size
     // Locale.ROOT: a comma-decimal default locale would print 62,700 and
     // corrupt the JSON line
@@ -108,10 +91,12 @@ object Bench {
       s""""$n":{"slow":${slowCause(n)},"disagree":${disagreeCause(n)}}"""
     }.mkString("{", ",", "}")
     val cpusDetail = if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else "-1"
-    try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_DETAIL.json"),
+    val detail = java.nio.file.Paths.get("BENCH_DETAIL.json")
+    try java.nio.file.Files.write(detail,
       s"""{"total":${fmt(total)},"n":${results.size},"sf":"$sfDir","cpus":$cpusDetail,"runs":2,"retried":$retried,"retried_queries":$retriedJson,"retried_causes":$causesJson,"failed":$failedJson,"queries":${jsonMap(results)}}
 """.getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case NonFatal(e) =>
+      System.err.println(s"[bench] could not write ${detail.toAbsolutePath}: $e") }
     println(line(total, results, sfDir, cpus))
     spark.stop()
   }

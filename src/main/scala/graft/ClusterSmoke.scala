@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Off-local smoke: run every registered gate once under
   * `local-cluster[4,8,4096]` — four REAL executor JVMs, so task/plan
   * serialization, codegen reference objects (the literal sign matrices
@@ -39,17 +37,10 @@ object ClusterSmoke {
     // executor JVMs only get the distribution's jars by default
     val classesDir = getClass.getProtectionDomain.getCodeSource
       .getLocation.getPath
-    val spark = SparkSession.builder()
-      .master("local-cluster[4,8,4096]")
-      .config("spark.executor.memory", "3g")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(conf = Map(
+      "spark.master" -> "local-cluster[4,8,4096]",
+      "spark.executor.memory" -> "3g",
+      "spark.executor.extraClassPath" -> classesDir))
     // src05's JDBC endpoint is embedded Derby — a documented single-JVM
     // stand-in (Spark's JDBC paths need concurrent driver metadata +
     // executor data connections, i.e. a database SERVER, which the

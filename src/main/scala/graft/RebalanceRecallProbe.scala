@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
@@ -56,12 +56,7 @@ object RebalanceRecallProbe {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val k = if (args.length > 1) args(1).toInt else 10
     val nQ = if (args.length > 2) args(2).toInt else 20
-    val spark = SparkSession.builder()
-      .master("local[32]").appName("graft-rebalance-recall-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session()
 
     val emb = Tables.embeddings(spark, sfDir).localCheckpoint()
     val n = emb.count()

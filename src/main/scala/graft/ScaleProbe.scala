@@ -307,28 +307,14 @@ object ScaleProbe {
     val dangling = probes.filterNot(SparkEntry.queries.contains)
     require(dangling.isEmpty,
       s"probe roster gates not in SparkEntry.queries: ${dangling.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     val dirs = factors.map { f =>
       val out = s"${sys.props("java.io.tmpdir")}/graft_scale_x$f"
       buildNx(spark, base, out, f)
       f -> out
     }
-    def time(name: String, dir: String): Double = {
-      def once: Double = {
-        val t0 = System.nanoTime()
-        SparkEntry.queries(name)(spark, dir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      }
-      math.min(once, once)
-    }
+    def time(name: String, dir: String): Double =
+      math.min(Harness.time(spark, name, dir), Harness.time(spark, name, dir))
     probes.foreach { q => time(q, base); () } // warmup pass at 1×
     val entries = probes.map { q =>
       val t1 = time(q, base)
@@ -346,10 +332,12 @@ object ScaleProbe {
     // gate → {t1x, tNx, ratioNx} plus the run parameters a comparison
     // needs to refuse not-comparable rows (scripts/probes_delta.py)
     val factorsJson = factors.mkString("[", ",", "]")
-    try java.nio.file.Files.write(java.nio.file.Paths.get("PROBES.json"),
+    val artifact = java.nio.file.Paths.get("PROBES.json")
+    try java.nio.file.Files.write(artifact,
       s"""{"base":"$base","factors":$factorsJson,"runs":2,"queries":${entries.mkString("{", ",", "}")}}
 """.getBytes("UTF-8"))
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[probe] could not write ${artifact.toAbsolutePath}: $e") }
     spark.stop()
   }
 }

@@ -60,7 +60,7 @@ object GraphRank {
     * width ([[denseBar]]).
     *
     * Sized in BYTES, not just rows (r18, r17-advice), and MEASURED
-    * (graft.BroadcastBarProbe, the biasedRank 3-long row shape): at
+    * (OPTIMIZATION_r18.md §4, the biasedRank 3-long row shape): at
     * this 2M-row bar the built relation's dataSize is 83 MB
     * (collect 1.6 s, build 0.9 s); at the pre-r18 10M-row bar it was
     * 617 MB — with lazy per-round checkpointing deferring every

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-/** Shared local[4] session for all specs (one JVM, reused via getOrCreate;
-  * the reference's analog is hyppo-test.conf's single-worker profile).
+/** Shared local[4] [[Harness]] session for all specs (one JVM, reused via
+  * getOrCreate; the reference's analog is hyppo-test.conf's single-worker
+  * profile).
   */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
@@ -13,17 +14,6 @@ trait SparkSpec extends AnyFunSuite with Matchers {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession =
+    Harness.session("4", Map("spark.app.name" -> "graft-test"))
 }
