@@ -13,7 +13,9 @@
 #       with the gate's NAME; and graft.sources.LocalFsForkSpec — a
 #       parquet write, a FileContext rename and an AvailableNow
 #       checkpointed batch start no process (the session's `file:` FS
-#       must stay fork-free: no chmod, no readlink).
+#       must stay fork-free: no chmod, no readlink); and
+#       graft.engine.RunJobsSpec — a JobRunner.run launches 2 Spark jobs
+#       and no shuffle for either sink.
 # A deliberately-dangling roster entry (e.g. add "q999_nope" to
 # ScaleProbe.DefaultProbes) fails step (b) — that is the self-test.
 #   (c) the full gate suite executed + oracle-checked at sf0.001 — the
@@ -24,6 +26,10 @@
 #       exactly two places, GraftSession.create (the library posture)
 #       and graft.Harness (every tool and the spec suite). A new tool
 #       that re-copies a builder block fails here with its file:line.
+#       Likewise the one-conf-shipping rule: executor code gets the
+#       session's Hadoop conf from graft.sources.HadoopConf's broadcast
+#       only, so a `SerializableConfiguration(` anywhere else under
+#       src/main (a conf copy in every task closure) fails here.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 if grep -rn "SparkSession\.builder" src/ \
@@ -31,7 +37,12 @@ if grep -rn "SparkSession\.builder" src/ \
   echo "preflight FAILED: SparkSession.builder() outside GraftSession.create and graft.Harness (above) — build the session with graft.Harness.session"
   exit 1
 fi
-sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec" 2>&1 | tail -20
+if grep -rn "SerializableConfiguration(" src/main/ \
+    | grep -v "^src/main/scala/graft/sources/HadoopConf\.scala:"; then
+  echo "preflight FAILED: SerializableConfiguration outside graft.sources.HadoopConf (above) — ship the conf with HadoopConf.broadcast"
+  exit 1
+fi
+sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec graft.engine.RunJobsSpec" 2>&1 | tail -20
 OUT=$(mktemp -d /tmp/preflight_sf0001.XXXX)
 LOG=$(mktemp /tmp/preflight_verify.XXXX.log)
 trap 'rm -rf "$OUT" "$LOG"' EXIT
@@ -54,4 +65,4 @@ python3 scripts/check.py /root/testdata/sf0.001 "$OUT" \
 #       prove the checker itself still fails on `{}`.
 python3 scripts/roster_check.py --selftest
 python3 scripts/roster_check.py . "$OUT"
-echo "preflight OK: one session builder, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"
+echo "preflight OK: one session builder, one conf broadcast, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"

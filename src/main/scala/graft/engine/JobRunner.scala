@@ -2,10 +2,12 @@ package graft.engine
 
 import graft.api._
 import graft.model._
-import org.apache.hadoop.fs.{FileSystem, Path}
+import graft.sources.{AvroRecordFiles, HadoopConf}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 import java.time.Instant
 import scala.util.control.NonFatal
 
@@ -28,9 +30,19 @@ import scala.util.control.NonFatal
   * Raw bytes go executor→storage directly via the Hadoop FS API (works for
   * file:// here and s3a:// on a cluster — the reference's S3 uploads,
   * S3DataFileHandler.scala:62-96).
+  *
+  * A runner reads the session's Hadoop settings once, on first use, and
+  * broadcasts them: every executor closure (raw landing, record write and
+  * read, the persist fence) and every driver-side filesystem call of this
+  * runner uses that one copy. Hadoop's `FileSystem` cache already pins
+  * each scheme's filesystem on first use; to pick up changed Hadoop
+  * settings, build a new `JobRunner`.
   */
 final class JobRunner(spark: SparkSession, layout: StorageLayout) {
   import JobRunner._
+
+  private lazy val hadoopConf: Broadcast[SerializableConfiguration] =
+    HadoopConf.broadcast(spark)
 
   /** O1 — ValidateIntegration: structural checks + schema extraction,
     * mirroring executor/.../run/ValidateIntegrationOperation.java:34-147
@@ -94,13 +106,12 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
       case ri: RawIntegration =>
         val lay = layout
         val jobB = job
-        val conf = new org.apache.spark.util.SerializableConfiguration(
-          spark.sessionState.newHadoopConf())
+        val conf = hadoopConf
         taskRdd.flatMap { task =>
           ri.fetchRaw(task).zipWithIndex.flatMap { case (bytes, i) =>
             // land the raw file (gzipped) exactly where the reference would
             val path = new Path(lay.rawFile(jobB, task.taskNumber, i))
-            val fs = path.getFileSystem(conf.value)
+            val fs = path.getFileSystem(conf.value.value)
             val out = new java.util.zip.GZIPOutputStream(fs.create(path, true))
             try out.write(bytes) finally out.close()
             ri.parse(task, bytes)
@@ -131,7 +142,6 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     * partitions would clobber its own file — keep that invariant upstream.
     */
   def writeRecords(job: IngestionJob, recordsDf: DataFrame): DataFrame = {
-    import graft.sources.AvroRecordFiles
     val full = recordsDf.schema
     val taskIdx = full.fieldIndex("task_number")
     val dataIdx = full.fields.indices.filterNot(_ == taskIdx)
@@ -139,8 +149,7 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     val avroJson = AvroRecordFiles.avroSchema(dataSchema).toString
     val lay = layout
     val jobB = job
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val conf = hadoopConf
     val manifestRows = recordsDf.rdd.mapPartitions { rows =>
       val schema = new org.apache.avro.Schema.Parser().parse(avroJson)
       final class Handle(task: Int) {
@@ -152,7 +161,7 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
         // counting + digesting tee: `out` inside the overrides is the
         // inherited FilterOutputStream field (the raw FS stream)
         private val cout = new java.io.FilterOutputStream(
-            path.getFileSystem(conf.value).create(path, true)) {
+            path.getFileSystem(conf.value.value).create(path, true)) {
           override def write(b: Int): Unit = { out.write(b); digest.update(b.toByte); bytes += 1 }
           override def write(b: Array[Byte], off: Int, len: Int): Unit = {
             out.write(b, off, len); digest.update(b, off, len); bytes += len
@@ -192,35 +201,43 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
   }
 
   /** Reads a job's record files back (the O5-for-downstream / persist
-    * input path), re-attaching `task_number` from the layout key and
-    * verifying each file's MD5 against the manifest when provided —
-    * download-with-checksum parity (`S3DataFileHandler.scala:138-148`).
+    * input path), one Spark partition per record file, i.e. per task.
+    *
+    * Given a manifest (task → file MD5, as `writeRecords` returned it),
+    * it reads exactly the manifest's files at the layout key and verifies
+    * each one's MD5 — download-with-checksum parity
+    * (`S3DataFileHandler.scala:138-148`). A manifest task whose file is
+    * gone fails the read; a stale `task-N` file that an earlier, larger
+    * run of the same job left behind is not read. Without a manifest it
+    * reads every `task-*` file under the job's records dir, unverified.
     */
   def readRecords(integration: Integration, job: IngestionJob,
-                  md5ByTask: Map[Int, String] = Map.empty): DataFrame = {
-    import graft.sources.AvroRecordFiles
+                  manifest: Option[Map[Int, String]] = None): DataFrame = {
     val dataSchema = integration.schema.structType
     val types = dataSchema.fields.map(_.dataType).toSeq
-    val root = new Path(s"${layout.jobRoot(job)}/records")
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.globStatus(new Path(root, "task-*/data.avro"))
-      .map(_.getPath.toString).sorted.toSeq
+    val conf = hadoopConf
     def taskOf(f: String): Int =
       "task-(\\d+)/".r.findFirstMatchIn(f).map(_.group(1).toInt)
         .getOrElse(sys.error(s"no task number in $f"))
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
+    val files: Seq[(Int, String)] = manifest match {
+      case Some(m) => m.keys.toSeq.sorted.map(t => t -> layout.recordsFile(job, t))
+      case None =>
+        val root = new Path(s"${layout.jobRoot(job)}/records")
+        root.getFileSystem(conf.value.value)
+          .globStatus(new Path(root, "task-*/data.avro"))
+          .map(_.getPath.toString).sorted.toSeq
+          .map(f => taskOf(f) -> f)
+    }
     // read through the CURRENT integration schema as the Avro reader
     // schema, so files written by an older integration version resolve
     // (new defaulted fields fill, dropped fields skip)
     val readerJson = AvroRecordFiles.avroSchema(dataSchema).toString
     val rows = spark.sparkContext
       .parallelize(files, math.max(files.size, 1))
-      .flatMap { f =>
-        val task = taskOf(f)
+      .flatMap { case (task, f) =>
         val reader = new org.apache.avro.Schema.Parser().parse(readerJson)
-        AvroRecordFiles.streamFile(f, types, md5ByTask.get(task), conf.value,
-            Some(reader))
+        AvroRecordFiles.streamFile(f, types, manifest.flatMap(_.get(task)),
+            conf.value.value, Some(reader))
           .map(vals => Row.fromSeq(vals :+ task))
       }
     val withTask = StructType(dataSchema.fields :+
@@ -233,6 +250,11 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     * at-most-once fence: a task that already holds a fence marker is
     * skipped instead of re-run (reference ACKs before execution,
     * TaskFSM.scala:102-115).
+    *
+    * ForeachSink precondition: all rows of a task lie in one partition,
+    * contiguously — `readRecords` gives one partition per task. The sink
+    * walks each partition as task-runs with no shuffle, and a task seen
+    * twice within a partition fails the persist.
     */
   def persist(integration: Integration, job: IngestionJob,
               recordsDf: DataFrame, sink: SinkSpec): Unit = sink match {
@@ -242,28 +264,28 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     case ForeachSink(fn) =>
       val unsafe = integration.persistingSemantics == PersistingSemantics.Unsafe
       val fenceRoot = s"${layout.jobRoot(job)}/persist-fence"
-      val conf = new org.apache.spark.util.SerializableConfiguration(
-        spark.sessionState.newHadoopConf())
-      // co-locate each task's rows, then walk task-runs within the
-      // partition (a partition may hold several tasks after hashing)
-      recordsDf.repartition(col("task_number"))
-        .sortWithinPartitions(col("task_number"))
-        .foreachPartition { (rows: Iterator[Row]) =>
-          val buf = rows.buffered
-          while (buf.hasNext) {
-            val taskNumber = buf.head.getAs[Int]("task_number")
-            val taskRows = new Iterator[Row] {
-              def hasNext: Boolean =
-                buf.hasNext && buf.head.getAs[Int]("task_number") == taskNumber
-              def next(): Row = buf.next()
-            }
-            val fence = new Path(s"$fenceRoot/task-$taskNumber")
-            val fs = fence.getFileSystem(conf.value)
-            val alreadyRun = unsafe && !fs.createNewFile(fence)
-            if (!alreadyRun) fn(taskNumber, taskRows)
-            while (taskRows.hasNext) taskRows.next() // drain if fn didn't
+      val conf = hadoopConf
+      recordsDf.foreachPartition { (rows: Iterator[Row]) =>
+        val buf = rows.buffered
+        val seen = scala.collection.mutable.Set[Int]()
+        while (buf.hasNext) {
+          val taskNumber = buf.head.getAs[Int]("task_number")
+          if (!seen.add(taskNumber))
+            throw new IllegalStateException(s"task $taskNumber's rows are " +
+              "not contiguous in their partition; ForeachSink needs each " +
+              "task's rows together in one partition")
+          val taskRows = new Iterator[Row] {
+            def hasNext: Boolean =
+              buf.hasNext && buf.head.getAs[Int]("task_number") == taskNumber
+            def next(): Row = buf.next()
           }
+          val fence = new Path(s"$fenceRoot/task-$taskNumber")
+          val fs = fence.getFileSystem(conf.value.value)
+          val alreadyRun = unsafe && !fs.createNewFile(fence)
+          if (!alreadyRun) fn(taskNumber, taskRows)
+          while (taskRows.hasNext) taskRows.next() // drain if fn didn't
         }
+      }
   }
 
   /** End-to-end O1→O7 with O8 failure mapping. The execution log lands at
@@ -316,7 +338,7 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
           // verification (never the live fetch plan — a fetch is not
           // assumed re-runnable)
           persist(integration, job,
-            readRecords(integration, job, manifest.map { case (t, (_, m)) => t -> m }),
+            readRecords(integration, job, Some(manifest.map { case (t, (_, m)) => t -> m })),
             sink)
           log += "persist ok"
           val counts = manifest.map { case (t, (n, _)) => t -> n }
@@ -344,7 +366,7 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
                        lines: Seq[String]): Unit =
     try {
       val p = new Path(layout.logFile(job, executionId))
-      val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+      val fs = p.getFileSystem(hadoopConf.value.value)
       val out = fs.create(p, true)
       try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()

@@ -5,7 +5,7 @@ import graft.engine.JobRunner
 import graft.model.{FailureReport, IngestionJob}
 import org.apache.spark.sql.SparkSession
 import java.time.{Duration, Instant}
-import java.util.concurrent.{ConcurrentLinkedQueue, Executors, TimeUnit}
+import java.util.concurrent.{ConcurrentLinkedQueue, Executors, ScheduledThreadPoolExecutor, TimeUnit}
 import scala.concurrent.{ExecutionContext, Future, Promise}
 import scala.util.Random
 
@@ -67,12 +67,15 @@ final class JobScheduler(
   /** The delegation tick — the reference polls for deliverable work every
     * `task-polling-interval` (reference.conf:71-72, WorkerFSM.scala:252-259)
     * so a submission requeued on resource contention retries WITHOUT a new
-    * submit arriving. Each tick offers every idle slot one drain pass.
+    * submit arriving. Each tick offers every idle slot one drain pass. The
+    * same thread fires the running jobs' work timeouts; a job that ends in
+    * time drops its timeout from the queue.
     */
-  private val ticker = Executors.newSingleThreadScheduledExecutor(r => {
+  private val ticker = new ScheduledThreadPoolExecutor(1, (r: Runnable) => {
     val t = new Thread(r, "graft-delegation-tick"); t.setDaemon(true); t
   })
-  ticker.scheduleWithFixedDelay(() =>
+  ticker.setRemoveOnCancelPolicy(true)
+  private val tick = ticker.scheduleWithFixedDelay(() =>
     (0 until workerSlots).foreach(_ => Future(workLoop())),
     pollInterval.toMillis, pollInterval.toMillis, TimeUnit.MILLISECONDS)
 
@@ -129,8 +132,7 @@ final class JobScheduler(
             spark.sparkContext.setJobGroup(group, sub.integration.name,
               interruptOnCancel = true)
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", sub.integration.name)
-            val timer = Executors.newSingleThreadScheduledExecutor()
-            timer.schedule(new Runnable {
+            val timeout = ticker.schedule(new Runnable {
               def run(): Unit = spark.sparkContext.cancelJobGroup(group)
             }, workTimeout.toMillis, TimeUnit.MILLISECONDS)
             try runner.run(sub.integration, sub.job, sub.sink) match {
@@ -146,7 +148,7 @@ final class JobScheduler(
                 // ExpectedCompletionOrdering toward flaky queues
                 recordCompletion(sub.integration.name)
             } finally {
-              timer.shutdownNow()
+              timeout.cancel(false)
               spark.sparkContext.clearJobGroup()
               spark.sparkContext.setLocalProperty("spark.scheduler.pool", null)
             }
@@ -207,9 +209,13 @@ final class JobScheduler(
     }
   }
 
+  /** Stops the tick, lets the running slots drain (their work timeouts
+    * still fire), then stops the timer thread.
+    */
   def shutdown(): Unit = {
-    ticker.shutdownNow()
+    tick.cancel(false)
     exec.shutdown()
     exec.awaitTermination(30, TimeUnit.SECONDS)
+    ticker.shutdownNow()
   }
 }

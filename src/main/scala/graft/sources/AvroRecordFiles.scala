@@ -87,19 +87,16 @@ object AvroRecordFiles {
     val st = df.schema
     val schemaJson = avroSchema(st).toString
     val root = new HPath(dir)
-    val fs = root.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
+    val conf = HadoopConf.broadcast(df.sparkSession)
+    val fs = root.getFileSystem(conf.value.value)
     if (fs.exists(root)) fs.delete(root, true)
     fs.mkdirs(root)
-    // ship the session's Hadoop conf into the executor closure — a bare
-    // `new Configuration()` there would drop s3a credentials/endpoints
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sessionState.newHadoopConf())
     val counts = df.rdd.mapPartitionsWithIndex { (idx, rows) =>
       if (rows.isEmpty) Iterator.empty
       else {
         val schema = new Schema.Parser().parse(schemaJson)
         val part = new HPath("%s/part-%05d.avro".format(dir, idx))
-        val pfs = part.getFileSystem(conf.value)
+        val pfs = part.getFileSystem(conf.value.value)
         val out = pfs.create(part, true)
         val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
         writer.setCodec(CodecFactory.snappyCodec())
@@ -194,14 +191,12 @@ object AvroRecordFiles {
     */
   def read(spark: SparkSession, dir: String, st: StructType): DataFrame = {
     val root = new HPath(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val files = fs.listStatus(root).map(_.getPath.toString)
-      .filter(_.endsWith(".avro")).sorted
+    val conf = HadoopConf.broadcast(spark)
+    val files = root.getFileSystem(conf.value.value).listStatus(root)
+      .map(_.getPath.toString).filter(_.endsWith(".avro")).sorted
     val fieldTypes = st.fields.map(_.dataType).toSeq
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sessionState.newHadoopConf())
     val rows = spark.sparkContext.parallelize(files.toSeq, math.max(files.length, 1))
-      .flatMap(f => streamFile(f, fieldTypes, conf = conf.value).map(Row.fromSeq))
+      .flatMap(f => streamFile(f, fieldTypes, conf = conf.value.value).map(Row.fromSeq))
     spark.createDataFrame(rows, st)
   }
 }

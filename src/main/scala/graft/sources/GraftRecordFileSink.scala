@@ -3,6 +3,7 @@ package graft.sources
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{GraftSqlShim, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -101,12 +102,11 @@ object GraftRecordFileSink {
                                      truncate: Boolean) extends BatchWrite {
     private val root = opts.getOrElse("root",
       throw new IllegalArgumentException("option 'root' required"))
-    private val spark = org.apache.spark.sql.SparkSession.active
-    private val conf = new SerializableConfiguration(spark.sessionState.newHadoopConf())
+    private val conf = HadoopConf.broadcast(org.apache.spark.sql.SparkSession.active)
 
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
       val dir = new HPath(recordsDir(root))
-      val fs = dir.getFileSystem(conf.value)
+      val fs = dir.getFileSystem(conf.value.value)
       if (truncate && fs.exists(dir)) fs.delete(dir, true)
       fs.mkdirs(dir)
       new SinkWriterFactory(schema, root, conf)
@@ -128,7 +128,7 @@ object GraftRecordFileSink {
           "multiple partitions (files clobbered) — repartition the input by " +
           "task_number before writing to this sink")
       val p = manifestPath(root)
-      val fs = p.getFileSystem(conf.value)
+      val fs = p.getFileSystem(conf.value.value)
       val prior: Seq[(Int, Long, Long, String)] =
         if (!truncate && fs.exists(p))
           readManifestFrom(fs, p).filterNot(e => entries.exists(_._1 == e._1))
@@ -142,7 +142,7 @@ object GraftRecordFileSink {
 
     override def abort(messages: Array[WriterCommitMessage]): Unit = {
       val written = messages.collect { case m: TaskManifest => m }.flatMap(_.entries)
-      val fs = new HPath(recordsDir(root)).getFileSystem(conf.value)
+      val fs = new HPath(recordsDir(root)).getFileSystem(conf.value.value)
       written.foreach { case (t, _, _, _) =>
         fs.delete(new HPath(s"${recordsDir(root)}/task-$t/data.avro"), false)
       }
@@ -154,14 +154,14 @@ object GraftRecordFileSink {
       extends WriterCommitMessage
 
   private final class SinkWriterFactory(schema: StructType, root: String,
-                                        conf: SerializableConfiguration)
+                                        conf: Broadcast[SerializableConfiguration])
       extends DataWriterFactory {
     override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
       new SinkDataWriter(schema, root, conf)
   }
 
   private final class SinkDataWriter(schema: StructType, root: String,
-                                     conf: SerializableConfiguration)
+                                     conf: Broadcast[SerializableConfiguration])
       extends DataWriter[InternalRow] {
     private val taskIdx = schema.fieldIndex(TaskNumberCol)
     private val dataIdx = schema.fields.indices.filterNot(_ == taskIdx)
@@ -175,7 +175,7 @@ object GraftRecordFileSink {
       var bytes = 0L
       var count = 0L
       private val cout = new java.io.FilterOutputStream(
-          path.getFileSystem(conf.value).create(path, true)) {
+          path.getFileSystem(conf.value.value).create(path, true)) {
         override def write(b: Int): Unit = { out.write(b); digest.update(b.toByte); bytes += 1 }
         override def write(b: Array[Byte], off: Int, len: Int): Unit = {
           out.write(b, off, len); digest.update(b, off, len); bytes += len
@@ -211,7 +211,7 @@ object GraftRecordFileSink {
       */
     override def abort(): Unit = open.valuesIterator.foreach { h =>
       h.abort()
-      try h.path.getFileSystem(conf.value).delete(h.path, false)
+      try h.path.getFileSystem(conf.value.value).delete(h.path, false)
       catch { case scala.util.control.NonFatal(_) => () }
     }
     override def close(): Unit = ()

@@ -125,12 +125,51 @@ class JobRunnerSpec extends SparkSpec {
     }
     // verified read succeeds; a manifest/file digest disagreement must fail
     val md5s = manifest.map { case (t, (_, _, m, _)) => t -> m }
-    runner.readRecords(integ, j, md5s).count() shouldBe 20L
+    runner.readRecords(integ, j, Some(md5s)).count() shouldBe 20L
     val bad = md5s.updated(0, "0" * 32)
     val err = intercept[org.apache.spark.SparkException] {
-      runner.readRecords(integ, j, bad).count()
+      runner.readRecords(integ, j, Some(bad)).count()
     }
     JobRunner.rootSparkCause(err).getMessage should include("checksum mismatch")
+  }
+
+  test("a manifest task whose record file is gone fails the read instead of vanishing from it") {
+    val (runner, lay) = freshRunner()
+    val j = job("FanOut")
+    val integ = new Stubs.FanOut(2, 10)
+    val md5s = runner.writeRecords(j, runner.records(integ, j, runner.planTasks(integ, j)))
+      .collect().map(r => r.getInt(0) -> r.getString(3)).toMap
+    Files.delete(java.nio.file.Paths.get(lay.recordsFile(j, 1)))
+    val err = intercept[org.apache.spark.SparkException] {
+      runner.readRecords(integ, j, Some(md5s)).count()
+    }
+    JobRunner.rootSparkCause(err) shouldBe a[java.io.FileNotFoundException]
+  }
+
+  test("a stale task file left by an earlier, larger run of the same job is not persisted") {
+    val (runner, lay) = freshRunner()
+    val j = job("FanOut") // fixed job id across both runs
+    runner.run(new Stubs.FanOut(3, 7), j).isRight shouldBe true
+    val res = runner.run(new Stubs.FanOut(2, 7), j).toOption.get
+    res.recordCount shouldBe 14L
+    new java.io.File(lay.recordsFile(j, 2)).exists shouldBe true // stale, unread
+    spark.read.parquet(s"${lay.jobRoot(j)}/persisted").count() shouldBe 14L
+  }
+
+  test("ForeachSink fails a persist whose task rows are not contiguous in their partition") {
+    val (runner, _) = freshRunner()
+    val j = job("FanOut")
+    import org.apache.spark.sql.{Row => SRow}
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    val integ = new Stubs.FanOut(2, 1)
+    val schema = StructType(integ.schema.structType.fields :+
+      StructField("task_number", IntegerType, nullable = false))
+    val interleaved = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      SRow("a", 0, 0L, 0), SRow("b", 1, 0L, 1), SRow("c", 0, 1L, 0)), 1), schema)
+    val err = intercept[org.apache.spark.SparkException] {
+      runner.persist(integ, j, interleaved, ForeachSink((_, rows) => { rows.size; () }))
+    }
+    JobRunner.rootSparkCause(err).getMessage should include("not contiguous")
   }
 
   test("re-running the SAME job is idempotent end to end (retry-by-requeue contract)") {

@@ -69,6 +69,21 @@ class JobSchedulerSpec extends SparkSpec {
     } finally sched.shutdown()
   }
 
+  test("a job running past workTimeout has its job group cancelled and comes back as a Left") {
+    val sched = new JobScheduler(spark, newRunner(), new ResourcePool(Nil),
+      workerSlots = 1, workTimeout = Duration.ofSeconds(1),
+      pollInterval = Duration.ofHours(1), random = new Random(11))
+    try {
+      val j = job("Stuck")
+      val started = System.nanoTime()
+      val Left(report) = Await.result(sched.submit(new JobSchedulerSpec.Stuck, j),
+        SDuration(60, TimeUnit.SECONDS)): @unchecked
+      report.message should include(s"cancelled job group graft-${j.id}")
+      // the task was interrupted, not left to finish its 60 s fetch
+      (System.nanoTime() - started) / 1e9 should be < 30.0
+    } finally sched.shutdown()
+  }
+
   test("a slot prefers the integration it just ran (affinity) over priority order") {
     val pool = new ResourcePool(Nil)
     val sched = new JobScheduler(spark, newRunner(), pool,
@@ -109,6 +124,14 @@ class JobSchedulerSpec extends SparkSpec {
 object JobSchedulerSpec {
   // static so state survives closure serialization in local mode
   val flakyAttempts = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  /** A fetch that outlives any work timeout unless it is interrupted. */
+  class Stuck extends Stubs.FanOut(1, 1) {
+    override def name = "Stuck"
+    override def fetchStructured(task: TaskSpec): Iterator[Row] = {
+      Thread.sleep(60000); super.fetchStructured(task)
+    }
+  }
 
   /** Fails its first two fetches (driver-side counter), then succeeds. */
   class FlakyTwice extends Stubs.FanOut(1, 2) {

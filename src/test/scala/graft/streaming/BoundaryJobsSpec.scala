@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import graft.SparkSpec
+import graft.{SparkJobs, SparkSpec}
 import graft.operators.Dedup
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** Spark jobs per loop boundary, counted by a listener and pinned. At
   * this scale every job is fixed cost, so the job structure of each
@@ -19,30 +15,7 @@ class BoundaryJobsSpec extends SparkSpec {
   import spark.implicits._
   private val S = graft.operators.Similarity
 
-  private val Tag = "graft.spec.boundaryJobs"
-
-  /** Spark jobs `body` launches from this thread, read once the
-    * listener bus has delivered every event.
-    */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = java.util.UUID.randomUUID().toString
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Tag) == tag))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(Tag, tag)
-    try body
-    finally {
-      sc.setLocalProperty(Tag, null)
-      ListenerBusAccess.waitUntilEmpty(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get
-  }
+  private def jobsOf(body: => Unit): Int = SparkJobs.of(spark)(body).jobs
 
   private def tmp(prefix: String) =
     java.nio.file.Files.createTempDirectory(prefix).toString
