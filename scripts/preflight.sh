@@ -29,7 +29,11 @@
 #       Likewise the one-conf-shipping rule: executor code gets the
 #       session's Hadoop conf from graft.sources.HadoopConf's broadcast
 #       only, so a `SerializableConfiguration(` anywhere else under
-#       src/main (a conf copy in every task closure) fails here.
+#       src/main (a conf copy in every task closure) fails here. And
+#       the one-record-codec rule: Avro container files are written only
+#       by graft.sources.AvroRecordFiles, so a `DataFileWriter` anywhere
+#       else under src/main (a second copy of the record-file writer)
+#       fails here.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 if grep -rn "SparkSession\.builder" src/ \
@@ -40,6 +44,11 @@ fi
 if grep -rn "SerializableConfiguration(" src/main/ \
     | grep -v "^src/main/scala/graft/sources/HadoopConf\.scala:"; then
   echo "preflight FAILED: SerializableConfiguration outside graft.sources.HadoopConf (above) — ship the conf with HadoopConf.broadcast"
+  exit 1
+fi
+if grep -rn "DataFileWriter" src/main/ \
+    | grep -v "^src/main/scala/graft/sources/AvroRecordFiles\.scala:"; then
+  echo "preflight FAILED: DataFileWriter outside graft.sources.AvroRecordFiles (above) — write record files with AvroRecordFiles.ContainerWriter"
   exit 1
 fi
 sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec graft.engine.RunJobsSpec" 2>&1 | tail -20
@@ -65,4 +74,4 @@ python3 scripts/check.py /root/testdata/sf0.001 "$OUT" \
 #       prove the checker itself still fails on `{}`.
 python3 scripts/roster_check.py --selftest
 python3 scripts/roster_check.py . "$OUT"
-echo "preflight OK: one session builder, one conf broadcast, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"
+echo "preflight OK: one session builder, one conf broadcast, one record-file writer, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"

@@ -19,7 +19,7 @@ import scala.util.control.NonFatal
   *   fetchRaw  (O3, executor)→ flatMap to raw byte files + manifest
   *   parse     (O4, executor)→ flatMap to typed rows
   *   fetchStructured (O5)    → fused O3∘O4 for processed-kind integrations
-  *   write records           → columnar parquet under the reference layout
+  *   write records           → one snappy Avro container file per task
   *   persist   (O6)          → TableSink / ForeachSink (+ at-most-once fence)
   *   onJobCompleted (O7)     → driver callback
   *
@@ -83,10 +83,15 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     * per worker; we run them all in parallel).
     */
   def planTasks(integration: Integration, job: IngestionJob): Seq[TaskSpec] = {
-    require(job.source.name == integration.name || integration.name.nonEmpty,
-      "job/source mismatch")
+    require(job.source.name == integration.name,
+      s"job/source mismatch: job ${job.id} is for source '${job.source.name}', " +
+        s"integration is '${integration.name}'")
     val tasks = integration.planTasks(job)
     require(tasks.nonEmpty, "planTasks produced no tasks")
+    // each task writes its own records/task-N/data.avro and manifest row
+    val dupes = tasks.groupBy(_.taskNumber).collect { case (n, ts) if ts.size > 1 => n }
+    require(dupes.isEmpty, s"planTasks produced duplicate task number(s) " +
+      s"${dupes.toSeq.sorted.mkString(",")}: each task needs its own record file")
     tasks
   }
 
@@ -105,12 +110,11 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     val rowRdd = integration match {
       case ri: RawIntegration =>
         val lay = layout
-        val jobB = job
         val conf = hadoopConf
         taskRdd.flatMap { task =>
           ri.fetchRaw(task).zipWithIndex.flatMap { case (bytes, i) =>
             // land the raw file (gzipped) exactly where the reference would
-            val path = new Path(lay.rawFile(jobB, task.taskNumber, i))
+            val path = new Path(lay.rawFile(job, task.taskNumber, i))
             val fs = path.getFileSystem(conf.value.value)
             val out = new java.util.zip.GZIPOutputStream(fs.create(path, true))
             try out.write(bytes) finally out.close()
@@ -127,19 +131,15 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
   }
 
   /** Persist the record files under the reference layout — one Avro
-    * container file per task at `records/task-N/data.avro` (wire-format
-    * parity with the reference's processed-record files,
-    * `executor/.../run/ProcessRawDataOperation.java:70-84`) — and return
-    * the per-task manifest (record count, file size, file MD5; parity with
-    * RemoteProcessedDataFile, `worker-api/.../proto/RemoteDataFile.scala:
-    * 20-27`).
+    * container file per task at `records/task-N/data.avro`, written by
+    * the record-file codec (`AvroRecordFiles.ContainerWriter`) — and
+    * return the per-task manifest (record count, file size, file MD5).
     *
-    * Everything happens in ONE executor pass: records stream straight into
-    * the container encoder through a counting+digest wrapper, so there is
-    * no second scan to count, no driver-side renames, and the layout path
-    * is written directly (renames are copy+delete on object stores).
-    * `records()` gives one task per partition; a task split across
-    * partitions would clobber its own file — keep that invariant upstream.
+    * Everything happens in ONE executor pass, with no driver-side renames.
+    * A failed partition aborts its files, so no partial record file
+    * outlives it. `records()` gives one task per partition; a task split
+    * across partitions would clobber its own file — keep that invariant
+    * upstream.
     */
   def writeRecords(job: IngestionJob, recordsDf: DataFrame): DataFrame = {
     val full = recordsDf.schema
@@ -148,53 +148,18 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     val dataSchema = StructType(dataIdx.map(full.fields).toArray)
     val avroJson = AvroRecordFiles.avroSchema(dataSchema).toString
     val lay = layout
-    val jobB = job
     val conf = hadoopConf
     val manifestRows = recordsDf.rdd.mapPartitions { rows =>
       val schema = new org.apache.avro.Schema.Parser().parse(avroJson)
-      final class Handle(task: Int) {
-        val file = lay.recordsFile(jobB, task)
-        private val path = new Path(file)
-        private val digest = java.security.MessageDigest.getInstance("MD5")
-        var bytes = 0L
-        var count = 0L
-        // counting + digesting tee: `out` inside the overrides is the
-        // inherited FilterOutputStream field (the raw FS stream)
-        private val cout = new java.io.FilterOutputStream(
-            path.getFileSystem(conf.value.value).create(path, true)) {
-          override def write(b: Int): Unit = { out.write(b); digest.update(b.toByte); bytes += 1 }
-          override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-            out.write(b, off, len); digest.update(b, off, len); bytes += len
-          }
-        }
-        private val writer = new org.apache.avro.file.DataFileWriter(
-          new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](schema))
-        writer.setCodec(org.apache.avro.file.CodecFactory.snappyCodec())
-        writer.create(schema, cout)
-        def append(row: Row): Unit = {
-          writer.append(AvroRecordFiles.toRecord(schema, row, dataIdx)); count += 1
-        }
-        def close(): String = {
-          writer.close()
-          digest.digest().map("%02x".format(_)).mkString
-        }
-        def abort(): Unit =
-          try writer.close() catch { case scala.util.control.NonFatal(_) => () }
-      }
-      val open = scala.collection.mutable.LinkedHashMap[Int, Handle]()
-      try {
-        rows.foreach { row =>
-          val t = row.getInt(taskIdx)
-          open.getOrElseUpdate(t, new Handle(t)).append(row)
-        }
-      } catch {
-        // a mid-write failure must not leave dangling FS streams (on
-        // object stores those are stuck multipart uploads)
-        case e: Throwable => open.valuesIterator.foreach(_.abort()); throw e
-      }
-      open.iterator.map { case (t, h) =>
-        val md5 = h.close() // flush first — bytes is final only after close
-        Row(t, h.count, h.bytes, md5, h.file)
+      val open = scala.collection.mutable.LinkedHashMap[Int, AvroRecordFiles.ContainerWriter]()
+      try rows.foreach { row =>
+        val t = row.getInt(taskIdx)
+        open.getOrElseUpdate(t, new AvroRecordFiles.ContainerWriter(
+          lay.recordsFile(job, t), schema, dataIdx, conf.value.value)).append(row)
+      } catch { case e: Throwable => open.valuesIterator.foreach(_.abort()); throw e }
+      open.iterator.map { case (t, w) =>
+        val (n, bytes, md5) = w.finish()
+        Row(t, n, bytes, md5, lay.recordsFile(job, t))
       }.toVector.iterator
     }
     spark.createDataFrame(manifestRows, JobRunner.manifestSchema)
@@ -205,44 +170,30 @@ final class JobRunner(spark: SparkSession, layout: StorageLayout) {
     *
     * Given a manifest (task → file MD5, as `writeRecords` returned it),
     * it reads exactly the manifest's files at the layout key and verifies
-    * each one's MD5 — download-with-checksum parity
-    * (`S3DataFileHandler.scala:138-148`). A manifest task whose file is
-    * gone fails the read; a stale `task-N` file that an earlier, larger
-    * run of the same job left behind is not read. Without a manifest it
-    * reads every `task-*` file under the job's records dir, unverified.
+    * each one's MD5. A manifest task whose file is gone fails the read; a
+    * stale `task-N` file that an earlier, larger run of the same job left
+    * behind is not read. Without a manifest it reads every task's record
+    * file under the job's records dir, unverified. Files are read through
+    * the CURRENT integration schema, so files written by an older
+    * integration version resolve (new defaulted fields fill, dropped
+    * fields skip).
     */
   def readRecords(integration: Integration, job: IngestionJob,
                   manifest: Option[Map[Int, String]] = None): DataFrame = {
     val dataSchema = integration.schema.structType
-    val types = dataSchema.fields.map(_.dataType).toSeq
-    val conf = hadoopConf
-    def taskOf(f: String): Int =
-      "task-(\\d+)/".r.findFirstMatchIn(f).map(_.group(1).toInt)
-        .getOrElse(sys.error(s"no task number in $f"))
-    val files: Seq[(Int, String)] = manifest match {
-      case Some(m) => m.keys.toSeq.sorted.map(t => t -> layout.recordsFile(job, t))
+    val files: Seq[(String, Option[String], Seq[Any])] = manifest match {
+      case Some(m) => m.toSeq.sortBy(_._1).map { case (t, md5) =>
+        (layout.recordsFile(job, t), Some(md5), Seq(t)) }
       case None =>
-        val root = new Path(s"${layout.jobRoot(job)}/records")
-        root.getFileSystem(conf.value.value)
-          .globStatus(new Path(root, "task-*/data.avro"))
+        val glob = new Path(StorageLayout.recordsGlob(layout.jobRoot(job)))
+        glob.getFileSystem(hadoopConf.value.value).globStatus(glob)
           .map(_.getPath.toString).sorted.toSeq
-          .map(f => taskOf(f) -> f)
+          .map(f => (f, None, Seq(StorageLayout.recordsTask(f))))
     }
-    // read through the CURRENT integration schema as the Avro reader
-    // schema, so files written by an older integration version resolve
-    // (new defaulted fields fill, dropped fields skip)
-    val readerJson = AvroRecordFiles.avroSchema(dataSchema).toString
-    val rows = spark.sparkContext
-      .parallelize(files, math.max(files.size, 1))
-      .flatMap { case (task, f) =>
-        val reader = new org.apache.avro.Schema.Parser().parse(readerJson)
-        AvroRecordFiles.streamFile(f, types, manifest.flatMap(_.get(task)),
-            conf.value.value, Some(reader))
-          .map(vals => Row.fromSeq(vals :+ task))
-      }
     val withTask = StructType(dataSchema.fields :+
       StructField("task_number", IntegerType, false))
-    spark.createDataFrame(rows, withTask)
+    spark.createDataFrame(
+      AvroRecordFiles.readFiles(spark, hadoopConf, dataSchema, files), withTask)
   }
 
   /** O6 — PersistProcessedData. TableSink rides Spark's commit protocol;

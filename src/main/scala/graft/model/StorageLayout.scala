@@ -33,8 +33,24 @@ final case class StorageLayout(prefix: String) {
     s"${jobRoot(job)}/records/task-$taskNumber"
 
   def recordsFile(job: IngestionJob, taskNumber: Int): String =
-    s"${recordsDir(job, taskNumber)}/data.avro"
+    StorageLayout.recordsFile(jobRoot(job), taskNumber)
 
   def logFile(job: IngestionJob, executionId: String): String =
     s"${jobRoot(job)}/log/$executionId.out"
+}
+
+/** The record-file key under a job root, for writers that are handed the
+  * root rather than a job (the DSv2 record sink) and for listings.
+  */
+object StorageLayout {
+  def recordsFile(jobRoot: String, taskNumber: Int): String =
+    s"$jobRoot/records/task-$taskNumber/data.avro"
+
+  /** Matches every task's record file under `jobRoot`. */
+  def recordsGlob(jobRoot: String): String = s"$jobRoot/records/task-*/data.avro"
+
+  /** The task number of a path built by [[recordsFile]]. */
+  def recordsTask(file: String): Int =
+    "/records/task-(\\d+)/data\\.avro$".r.findFirstMatchIn(file).map(_.group(1).toInt)
+      .getOrElse(throw new IllegalArgumentException(s"not a task record file: $file"))
 }

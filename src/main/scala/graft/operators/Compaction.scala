@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** Small-file compaction — the standing maintenance job of every
   * large-scale pipeline: streaming ingest and per-task writes produce
@@ -43,8 +43,4 @@ object Compaction {
     val (_, after) = footprint(spark, outDir)
     (before, after)
   }
-
-  /** DataFrame variant when the caller already holds the plan. */
-  def writeCompacted(df: DataFrame, outDir: String, nFiles: Int): Unit =
-    df.repartition(math.max(1, nFiles)).write.mode("overwrite").parquet(outDir)
 }

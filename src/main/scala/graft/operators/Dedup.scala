@@ -473,17 +473,11 @@ object Dedup {
   }
 
   /** Exact Jaccard on an explicit candidate-pair set: joins each pair back
-    * to its shingle sets, counts the intersection, computes |A∩B|/|A∪B|.
-    * Only candidate documents' shingles are exploded at all — the corpus
-    * index is semi-joined down to candidate ids first, so verification
-    * cost tracks the candidate set, not the corpus.
+    * to its shingle sets in the corpus index `idx`, counts the
+    * intersection, computes |A∩B|/|A∪B|. The index is semi-joined down to
+    * candidate ids first, so verification cost tracks the candidate set,
+    * not the corpus.
     */
-  def jaccardVerify(df: DataFrame, candidates: DataFrame, textCol: String,
-                    idCol: String, shingleN: Int, threshold: Double,
-                    dfCap: Int = DefaultDfCap): DataFrame =
-    verifyWithIndex(shingleIndex(df, textCol, idCol, shingleN, dfCap),
-      candidates, threshold)
-
   private def verifyWithIndex(idx: DataFrame, candidates: DataFrame,
                               threshold: Double): DataFrame = {
     val candIds = candidates.select(col("id1").as("id"))

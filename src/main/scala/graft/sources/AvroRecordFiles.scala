@@ -1,32 +1,45 @@
 package graft.sources
 
+import java.io.FilterOutputStream
 import java.nio.ByteBuffer
+import java.security.MessageDigest
+
+import scala.util.control.NonFatal
 
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.file.{CodecFactory, DataFileStream, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.util.Utf8
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.types._
+import org.apache.spark.util.SerializableConfiguration
 
-/** Avro container-file record I/O, hand-rolled on avro-core/avro-mapred
-  * (no spark-avro datasource in this environment).
+/** The one record-file codec of the ingestion dataflow, hand-rolled on
+  * avro-core/avro-mapred (no spark-avro datasource in this environment).
+  * `JobRunner.writeRecords`/`readRecords`, the DSv2 record sink
+  * ([[GraftRecordFileSink]]) and [[write]]/[[read]] all go through
+  * [[ContainerWriter]], [[readFiles]] and [[streamFile]]; the task file
+  * key is `graft.model.StorageLayout`'s.
   *
   * Wire-format parity with the reference's record stage: processed
   * records persist as snappy-compressed Avro object-container files, one
-  * per task/partition (`executor/.../run/ProcessRawDataOperation.java:
-  * 70-84`, codec from `reference.conf:81-82`).
+  * per task (`executor/.../run/ProcessRawDataOperation.java:70-84`, codec
+  * from `reference.conf:81-82`), each with a count, size and MD5 manifest
+  * row (RemoteProcessedDataFile,
+  * `worker-api/.../proto/RemoteDataFile.scala:20-27`), uploaded straight
+  * to the layout key (S3DataFileHandler.scala:62-96) and verified against
+  * that MD5 on download (S3DataFileHandler.scala:138-148).
   *
-  * Scale design: write runs per partition inside `mapPartitionsWithIndex`
-  * (executors stream rows straight into the container encoder — nothing
-  * driver-side), and read exposes each file's records through
-  * `flatMap` over a listing of container files, so both directions
-  * parallelize across the cluster. Files are enumerated via the Hadoop
-  * FileSystem API, so any supported scheme (file://, hdfs://, s3a://)
-  * works unchanged.
+  * Scale design: writers run inside executor tasks and stream rows
+  * straight into the container encoder through a counting+MD5 tee, so
+  * count, size and digest need no second pass and nothing goes through
+  * the driver; readers are one Spark partition per file. Files are
+  * opened through the Hadoop FileSystem API, so any supported scheme
+  * (file://, hdfs://, s3a://) works unchanged.
   */
 object AvroRecordFiles {
 
@@ -61,7 +74,7 @@ object AvroRecordFiles {
     }.endRecord()
   }
 
-  private[graft] def toAvro(v: Any): Any = v match {
+  private def toAvro(v: Any): Any = v match {
     case null => null
     case t: java.sql.Timestamp => DateTimeUtils.fromJavaTimestamp(t)
     case t: java.time.LocalDateTime => DateTimeUtils.localDateTimeToMicros(t)
@@ -71,7 +84,6 @@ object AvroRecordFiles {
 
   private def fromAvro(v: Any, dt: DataType): Any = (v, dt) match {
     case (null, _) => null
-    case (u: Utf8, StringType) => u.toString
     case (s: CharSequence, StringType) => s.toString
     case (l: java.lang.Long, TimestampType) => DateTimeUtils.toJavaTimestamp(l)
     case (l: java.lang.Long, TimestampNTZType) => DateTimeUtils.microsToLocalDateTime(l)
@@ -80,12 +92,13 @@ object AvroRecordFiles {
     case (other, _) => other
   }
 
-  /** Writes `df` as one snappy Avro container file per partition under
-    * `dir` (cleared first). Returns the total record count.
+  /** Writes `df` as one snappy Avro container file per non-empty
+    * partition under `dir` (cleared first). Returns the total record
+    * count.
     */
   def write(df: DataFrame, dir: String): Long = {
-    val st = df.schema
-    val schemaJson = avroSchema(st).toString
+    val schemaJson = avroSchema(df.schema).toString
+    val fields = df.schema.indices
     val root = new HPath(dir)
     val conf = HadoopConf.broadcast(df.sparkSession)
     val fs = root.getFileSystem(conf.value.value)
@@ -94,26 +107,66 @@ object AvroRecordFiles {
     val counts = df.rdd.mapPartitionsWithIndex { (idx, rows) =>
       if (rows.isEmpty) Iterator.empty
       else {
-        val schema = new Schema.Parser().parse(schemaJson)
-        val part = new HPath("%s/part-%05d.avro".format(dir, idx))
-        val pfs = part.getFileSystem(conf.value.value)
-        val out = pfs.create(part, true)
-        val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-        writer.setCodec(CodecFactory.snappyCodec())
-        writer.create(schema, out)
-        var n = 0L
-        try rows.foreach { row =>
-          val rec = new GenericData.Record(schema)
-          var i = 0
-          while (i < st.length) { rec.put(i, toAvro(row.get(i))); i += 1 }
-          writer.append(rec)
-          n += 1
-        } finally writer.close()
-        Iterator.single(n)
+        val w = new ContainerWriter("%s/part-%05d.avro".format(dir, idx),
+          new Schema.Parser().parse(schemaJson), fields, conf.value.value)
+        try rows.foreach(w.append)
+        catch { case e: Throwable => w.abort(); throw e }
+        Iterator.single(w.finish()._1)
       }
     }
     counts.fold(0L)(_ + _)
   }
+
+  /** One record container file being written at `path`: each row's
+    * values at `fields` are encoded under `schema` (snappy) into a
+    * counting+MD5 tee over the file's stream, so the manifest row needs
+    * no second pass. The file is written in place at its final key:
+    * renames are copy+delete on object stores.
+    */
+  private[graft] final class ContainerWriter(path: String, schema: Schema,
+                                             fields: Seq[Int], conf: Configuration) {
+    private val file = new HPath(path)
+    private val digest = MessageDigest.getInstance("MD5")
+    private var bytes = 0L
+    private var count = 0L
+    // `out` inside the overrides is the inherited FilterOutputStream
+    // field: the raw FS stream
+    private val tee = new FilterOutputStream(file.getFileSystem(conf).create(file, true)) {
+      override def write(b: Int): Unit = { out.write(b); digest.update(b.toByte); bytes += 1 }
+      override def write(b: Array[Byte], off: Int, len: Int): Unit = {
+        out.write(b, off, len); digest.update(b, off, len); bytes += len
+      }
+    }
+    private val writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
+      .setCodec(CodecFactory.snappyCodec()).create(schema, tee)
+
+    def append(row: Row): Unit = {
+      val rec = new GenericData.Record(schema)
+      var i = 0
+      while (i < fields.length) { rec.put(i, toAvro(row.get(fields(i)))); i += 1 }
+      writer.append(rec)
+      count += 1
+    }
+
+    /** Closes the file and returns its (record count, bytes, MD5); the
+      * size and digest are final only once the close has flushed.
+      */
+    def finish(): (Long, Long, String) = {
+      writer.close()
+      (count, bytes, hex(digest.digest()))
+    }
+
+    /** Closes the encoder and deletes the partial file: a failed write
+      * must leave neither a dangling stream (on object stores, a stuck
+      * multipart upload) nor a file a later listing would read.
+      */
+    def abort(): Unit = {
+      try writer.close() catch { case NonFatal(_) => () }
+      try file.getFileSystem(conf).delete(file, false) catch { case NonFatal(_) => () }
+    }
+  }
+
+  private def hex(digest: Array[Byte]): String = digest.map("%02x".format(_)).mkString
 
   /** Streams one container file's records as field sequences, optionally
     * verifying the file's MD5 against `expectMd5` (the reference verifies
@@ -130,7 +183,7 @@ object AvroRecordFiles {
                                 readerSchema: Option[Schema] = None): Iterator[Seq[Any]] = {
     val p = new HPath(path)
     val raw = p.getFileSystem(conf).open(p)
-    val digest = java.security.MessageDigest.getInstance("MD5")
+    val digest = MessageDigest.getInstance("MD5")
     val in: java.io.InputStream = expectMd5 match {
       case Some(_) => new java.security.DigestInputStream(raw, digest)
       case None => raw
@@ -139,12 +192,10 @@ object AvroRecordFiles {
     // with defaults fill in, dropped fields are skipped — records written
     // under an older integration version read back under the current one
     // (the reference's schema-fingerprint drift, resolved instead of
-    // rejected; IntegrationSchema still detects the drift)
-    val datumReader = readerSchema match {
-      case Some(rs) => new GenericDatumReader[GenericRecord](null, rs)
-      case None => new GenericDatumReader[GenericRecord]()
-    }
-    val stream = new DataFileStream(in, datumReader)
+    // rejected; IntegrationSchema still detects the drift). Without one,
+    // Avro reads through the file's own writer schema.
+    val stream = new DataFileStream(in,
+      new GenericDatumReader[GenericRecord](null, readerSchema.orNull))
     val it = new Iterator[Seq[Any]] {
       private var closed = false
       def hasNext: Boolean = {
@@ -154,7 +205,7 @@ object AvroRecordFiles {
           expectMd5.foreach { want =>
             val buf = new Array[Byte](8192)
             while (in.read(buf) != -1) {} // drain tail into the digest
-            val got = digest.digest().map("%02x".format(_)).mkString
+            val got = hex(digest.digest())
             if (got != want)
               throw new java.io.IOException(
                 s"checksum mismatch for $path: manifest $want, downloaded $got")
@@ -178,14 +229,6 @@ object AvroRecordFiles {
     it
   }
 
-  /** Builds a GenericRecord from a row's fields at `indices`. */
-  private[graft] def toRecord(schema: Schema, row: Row, indices: Seq[Int]): GenericRecord = {
-    val rec = new GenericData.Record(schema)
-    var i = 0
-    while (i < indices.length) { rec.put(i, toAvro(row.get(indices(i)))); i += 1 }
-    rec
-  }
-
   /** Reads every `*.avro` container file under `dir` back into a
     * DataFrame with schema `st` (one input file per Spark partition).
     */
@@ -194,9 +237,25 @@ object AvroRecordFiles {
     val conf = HadoopConf.broadcast(spark)
     val files = root.getFileSystem(conf.value.value).listStatus(root)
       .map(_.getPath.toString).filter(_.endsWith(".avro")).sorted
-    val fieldTypes = st.fields.map(_.dataType).toSeq
-    val rows = spark.sparkContext.parallelize(files.toSeq, math.max(files.length, 1))
-      .flatMap(f => streamFile(f, fieldTypes, conf = conf.value.value).map(Row.fromSeq))
-    spark.createDataFrame(rows, st)
+    spark.createDataFrame(readFiles(spark, conf, st, files.toSeq.map((_, None, Nil))), st)
+  }
+
+  /** Reads record container files back as rows, one Spark partition per
+    * file. Each entry is (path, expected MD5, tail): the file's records
+    * decode through [[streamFile]] with `st` as the Avro reader schema,
+    * the file is MD5-verified when an expected digest is given, and
+    * `tail` is appended to each of its rows.
+    */
+  private[graft] def readFiles(spark: SparkSession, conf: Broadcast[SerializableConfiguration],
+                               st: StructType,
+                               files: Seq[(String, Option[String], Seq[Any])]): RDD[Row] = {
+    val types = st.fields.map(_.dataType).toSeq
+    val readerJson = avroSchema(st).toString
+    spark.sparkContext.parallelize(files, math.max(files.size, 1))
+      .flatMap { case (f, md5, tail) =>
+        val reader = new Schema.Parser().parse(readerJson)
+        streamFile(f, types, md5, conf.value.value, Some(reader))
+          .map(vals => Row.fromSeq(vals ++ tail))
+      }
   }
 }

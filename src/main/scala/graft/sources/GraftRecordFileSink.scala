@@ -2,9 +2,10 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
+import graft.model.StorageLayout
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{GraftSqlShim, Row}
+import org.apache.spark.sql.GraftSqlShim
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -21,9 +22,10 @@ import org.apache.spark.util.SerializableConfiguration
   * RemoteDataFile manifest):
   *
   *  - each executor-side [[DataWriter]] streams its rows straight into
-  *    per-task container encoders through a counting+MD5 tee (nothing
-  *    buffered, nothing driver-side), and returns the per-task manifest
-  *    rows (count/size/md5) as its commit MESSAGE;
+  *    per-task container files of the record-file codec
+  *    ([[AvroRecordFiles]]; nothing buffered, nothing driver-side), and
+  *    returns the per-task manifest rows (count/size/md5) as its commit
+  *    MESSAGE;
   *  - the driver's `commit()` runs only after every task committed, and
   *    writes `_manifest.json` LAST — readers treat the manifest as the
   *    commit marker, so a half-written job is never visible (the
@@ -44,7 +46,8 @@ class GraftRecordFileSink extends TableProvider {
   override def supportsExternalMetadata(): Boolean = true // write schema flows in
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
     throw new UnsupportedOperationException(
-      "graft record-file sink is write-only; read record files back via JobRunner.readRecords / AvroRecordFiles")
+      "graft record-file sink is write-only; read record files back through the " +
+        "record-file codec, AvroRecordFiles (JobRunner.readRecords uses it)")
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table =
     new GraftRecordFileSink.SinkTable(schema, properties.asScala.toMap)
@@ -88,13 +91,9 @@ object GraftRecordFileSink {
 
   private final class SinkWriteBuilder(schema: StructType, opts: Map[String, String],
                                        truncate: Boolean = false)
-      extends WriteBuilder with SupportsTruncate {
+      extends WriteBuilder with SupportsTruncate with Write {
     override def truncate(): WriteBuilder = new SinkWriteBuilder(schema, opts, truncate = true)
-    override def build(): Write = new SinkWrite(schema, opts, truncate)
-  }
-
-  private final class SinkWrite(schema: StructType, opts: Map[String, String],
-                                truncate: Boolean) extends Write {
+    override def build(): Write = this
     override def toBatch: BatchWrite = new SinkBatchWrite(schema, opts, truncate)
   }
 
@@ -144,7 +143,7 @@ object GraftRecordFileSink {
       val written = messages.collect { case m: TaskManifest => m }.flatMap(_.entries)
       val fs = new HPath(recordsDir(root)).getFileSystem(conf.value.value)
       written.foreach { case (t, _, _, _) =>
-        fs.delete(new HPath(s"${recordsDir(root)}/task-$t/data.avro"), false)
+        fs.delete(new HPath(StorageLayout.recordsFile(root, t)), false)
       }
     }
   }
@@ -165,55 +164,28 @@ object GraftRecordFileSink {
       extends DataWriter[InternalRow] {
     private val taskIdx = schema.fieldIndex(TaskNumberCol)
     private val dataIdx = schema.fields.indices.filterNot(_ == taskIdx)
-    private val dataSchema = StructType(dataIdx.map(schema.fields).toArray)
-    private val avroSchema = AvroRecordFiles.avroSchema(dataSchema)
+    private val avroSchema =
+      AvroRecordFiles.avroSchema(StructType(dataIdx.map(schema.fields).toArray))
     private val toRow = GraftSqlShim.internalToRow(schema)
-
-    private final class Handle(task: Int) {
-      val path = new HPath(s"${recordsDir(root)}/task-$task/data.avro")
-      private val digest = java.security.MessageDigest.getInstance("MD5")
-      var bytes = 0L
-      var count = 0L
-      private val cout = new java.io.FilterOutputStream(
-          path.getFileSystem(conf.value.value).create(path, true)) {
-        override def write(b: Int): Unit = { out.write(b); digest.update(b.toByte); bytes += 1 }
-        override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-          out.write(b, off, len); digest.update(b, off, len); bytes += len
-        }
-      }
-      private val writer = new org.apache.avro.file.DataFileWriter(
-        new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](avroSchema))
-      writer.setCodec(org.apache.avro.file.CodecFactory.snappyCodec())
-      writer.create(avroSchema, cout)
-      def append(row: Row): Unit = {
-        writer.append(AvroRecordFiles.toRecord(avroSchema, row, dataIdx)); count += 1
-      }
-      def finish(): String = { writer.close(); digest.digest().map("%02x".format(_)).mkString }
-      def abort(): Unit =
-        try writer.close() catch { case scala.util.control.NonFatal(_) => () }
-    }
-
-    private val open = scala.collection.mutable.LinkedHashMap[Int, Handle]()
+    private val open =
+      scala.collection.mutable.LinkedHashMap[Int, AvroRecordFiles.ContainerWriter]()
 
     override def write(record: InternalRow): Unit = {
       val row = toRow(record)
-      open.getOrElseUpdate(row.getInt(taskIdx), new Handle(row.getInt(taskIdx)))
-        .append(row)
+      val t = row.getInt(taskIdx)
+      open.getOrElseUpdate(t, new AvroRecordFiles.ContainerWriter(
+        StorageLayout.recordsFile(root, t), avroSchema, dataIdx, conf.value.value)).append(row)
     }
     override def commit(): WriterCommitMessage =
-      TaskManifest(open.iterator.map { case (t, h) =>
-        val md5 = h.finish()
-        (t, h.count, h.bytes, md5)
+      TaskManifest(open.iterator.map { case (t, w) =>
+        val (n, bytes, md5) = w.finish()
+        (t, n, bytes, md5)
       }.toVector)
-    /** A failed attempt must not leave partial container files behind —
-      * close the encoders AND delete what this writer created (the
-      * driver-side abort only sees tasks that returned commit messages).
+    /** A failed attempt must not leave partial container files behind
+      * (the driver-side abort only sees tasks that returned commit
+      * messages).
       */
-    override def abort(): Unit = open.valuesIterator.foreach { h =>
-      h.abort()
-      try h.path.getFileSystem(conf.value.value).delete(h.path, false)
-      catch { case scala.util.control.NonFatal(_) => () }
-    }
+    override def abort(): Unit = open.valuesIterator.foreach(_.abort())
     override def close(): Unit = ()
   }
 }

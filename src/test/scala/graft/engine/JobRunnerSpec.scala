@@ -252,6 +252,36 @@ class JobRunnerSpec extends SparkSpec {
     report.summaryLines.mkString("\n") should include("fetch exploded")
   }
 
+  test("a job for another source is rejected, naming both") {
+    val (runner, _) = freshRunner()
+    val Left(report) = runner.run(new Stubs.FanOut(1, 1), job("Other Source")): @unchecked
+    report.message should include("'Other Source'")
+    report.message should include("'FanOut'")
+  }
+
+  test("planTasks rejects duplicate task numbers, naming them") {
+    val (runner, _) = freshRunner()
+    val integ = new Stubs.FanOut(1, 3) {
+      override def planTasks(jb: IngestionJob): Seq[TaskSpec] =
+        Seq(0, 1, 1, 2, 2).map(i => TaskSpec(jb.id.toString, jb.source.name, i))
+    }
+    val Left(report) = runner.run(integ, job("FanOut")): @unchecked
+    report.message should include("duplicate task number(s) 1,2")
+  }
+
+  test("a fetch that fails mid-task leaves no partial record file") {
+    val (runner, lay) = freshRunner()
+    val j = job("FanOut")
+    val integ = new Stubs.FanOut(1, 3) {
+      override def fetchStructured(task: TaskSpec): Iterator[Row] =
+        super.fetchStructured(task) ++ Iterator(1).map[Row](_ =>
+          throw new IllegalStateException("fetch broke after 3 rows"))
+    }
+    val Left(report) = runner.run(integ, j): @unchecked
+    report.summaryLines.mkString("\n") should include("fetch broke after 3 rows")
+    new java.io.File(lay.recordsFile(j, 0)).exists shouldBe false
+  }
+
   type Row = org.apache.spark.sql.Row
 }
 

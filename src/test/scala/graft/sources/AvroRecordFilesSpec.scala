@@ -1,9 +1,16 @@
 package graft.sources
 
 import java.sql.Timestamp
+import java.time.Instant
+import java.util.UUID
 
 import graft.SparkSpec
+import graft.engine.JobRunner
+import graft.model.{IngestionJob, IngestionSource, StorageLayout}
+import org.apache.avro.file.DataFileStream
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
 /** Wire-format spec for the hand-rolled Avro container-file record I/O. */
@@ -75,5 +82,41 @@ class AvroRecordFilesSpec extends SparkSpec {
     // container magic "Obj" + version 1
     val head = java.nio.file.Files.readAllBytes(files.head.toPath).take(4)
     head.take(3) shouldBe "Obj".getBytes
+  }
+
+  test("JobRunner.writeRecords and the DSv2 sink write one format") {
+    val schema = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("name", StringType),
+      StructField("task_number", IntegerType, nullable = false)))
+    val rows = java.util.Arrays.asList(
+      Row(1L, "a", 0), Row(2L, null, 0), Row(3L, "c", 1), Row(4L, "d", 1))
+    val df = spark.createDataFrame(rows, schema).repartition(2, col("task_number"))
+    val lay = StorageLayout(java.nio.file.Files.createTempDirectory("graft-codec").toString)
+    val job = IngestionJob(IngestionSource("codec"), UUID.randomUUID(),
+      startedAt = Instant.parse("2026-08-12T00:00:00Z"))
+    val runnerFiles = new JobRunner(spark, lay).writeRecords(job, df).collect()
+      .map(r => r.getInt(0) -> r.getString(4)).toMap
+    val sinkRoot = java.nio.file.Files.createTempDirectory("graft-codec-sink").toString
+    df.write.format("graft.sources.GraftRecordFileSink")
+      .option("root", sinkRoot).mode("append").save()
+
+    def header(file: String) = {
+      val in = new DataFileStream(new java.io.FileInputStream(file),
+        new GenericDatumReader[GenericRecord]())
+      try (in.getSchema, in.getMetaString("avro.codec")) finally in.close()
+    }
+    val conf = spark.sessionState.newHadoopConf()
+    def decode(file: String) =
+      AvroRecordFiles.streamFile(file, Seq(LongType, StringType), conf = conf).toVector
+    runnerFiles.keySet shouldBe Set(0, 1)
+    runnerFiles.foreach { case (t, runnerFile) =>
+      val sinkFile = StorageLayout.recordsFile(sinkRoot, t)
+      header(runnerFile) shouldBe header(sinkFile)
+      header(runnerFile)._2 shouldBe "snappy"
+      decode(runnerFile) shouldBe decode(sinkFile)
+    }
+    runnerFiles.values.toSeq.flatMap(decode).sortBy(_.head.asInstanceOf[Long]) shouldBe
+      Seq(Seq(1L, "a"), Seq(2L, null), Seq(3L, "c"), Seq(4L, "d"))
   }
 }
