@@ -131,7 +131,7 @@ object ScaleProbe {
     // end-to-end fixed-point IVF: s19's training + one listing scan +
     // probed-candidate re-rank (fixed query set) — expect ~linear
     "s22_ivf_fixed_search",
-    // end-to-end fixed-point PQ: fused subspace training (pqKnn's
+    // end-to-end fixed-point PQ: fused subspace training (s08's
     // shape) + encode scan + broadcast ADC (fixed query set) — ~linear
     "s23_pq_fixed_search",
     // round-12: IVFADC — both trainings + ONE index scan, but the ADC

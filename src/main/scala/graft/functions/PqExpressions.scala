@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
   * literal-dot argmax branches — unrolls to >64 KB of generated Java at
   * m=16, so Janino rejects the method and every training/encode scan
   * falls back to interpreted evaluation (observed: 3 whole-stage-codegen
-  * failures per pqKnn run, ~2.5× wall-clock). These expressions keep the
+  * failures per m=16 PQ run, ~2.5× wall-clock). These expressions keep the
   * tree O(1) in (m, codebookSize): the codebook rides along as a flat
   * `double[]` reference object and the generated code is three nested
   * loops that stay comfortably inside one Janino method.

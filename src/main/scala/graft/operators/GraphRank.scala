@@ -544,9 +544,10 @@ object GraphRank {
         .localCheckpoint(false))
     // EVERY driver scalar in ONE action (r18, the biasedRank shape):
     // seed-pair count + live label universe, the graph's node count
-    // (prices the per-round broadcast below), the weighted path's max
-    // edge weight, and the resume path's worst duplicate-key count —
-    // one job materializes the lazy checkpoints and feeds every guard.
+    // (with the seed and state row counts, prices the per-round
+    // broadcast below), the weighted path's max edge weight, and the
+    // resume path's worst duplicate-key count and row count — one job
+    // materializes the lazy checkpoints and feeds every guard.
     var scalars = clamp.agg(count(lit(1)).as("__seeds"),
         count_distinct(col("label")).as("__labels"))
       .crossJoin(eo.select(col("src").as("node"))
@@ -558,11 +559,13 @@ object GraphRank {
     stOpt.foreach { st =>
       scalars = scalars.crossJoin(st.groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("__c"))
-        .agg(coalesce(max(col("__c")), lit(0L)).as("__dup")))
+        .agg(coalesce(max(col("__c")), lit(0L)).as("__dup"),
+          coalesce(sum(col("__c")), lit(0L)).as("__strows")))
     }
     val srow = scalars.head()
     val (seedPairs, labelUniverse, nNodes, maxW) =
       (srow.getLong(0), srow.getLong(1), srow.getLong(2), srow.getLong(3))
+    val stateRows = if (stOpt.isDefined) srow.getLong(5) else 0L
     stOpt.foreach { st =>
       if (srow.getLong(4) > 1L) {
         val dup = st.groupBy(col("node"), col("label"))
@@ -579,15 +582,18 @@ object GraphRank {
       if (weightCol.isDefined) maxW else 1L, "labelPropagation")
     // per-round broadcast bar (r18, guide §3.1 — the r17 rank treatment
     // applied to the label family, which was left sort-merge): the mass
-    // table is bounded by nodes × live-labels-per-node rows (the label
-    // universe is CLOSED — clamp is the only label source — and the
-    // beam caps it further), an exact bound from the scalar job above.
-    // Under the bar the src-partitioned edge table is never re-sorted
-    // or re-shuffled in any round; above it sort-merge survives any size.
+    // table is bounded by graph nodes × live-labels-per-node rows (the
+    // label universe is CLOSED — clamp is the only label source — and
+    // the beam caps it further), plus the clamp rows, which every round's
+    // full join carries even for seeds outside the edge list, plus the
+    // state rows round 1 starts from on resume. All three are exact
+    // counts from the scalar job above. Under the bar the src-partitioned
+    // edge table is never re-sorted or re-shuffled in any round; above it
+    // sort-merge survives any size.
     val liveLabels = math.max(1L,
       maxLabelsPerNode.fold(labelUniverse)(l => math.min(labelUniverse, l.toLong)))
-    val massBroadcastable =
-      BigInt(nNodes) * BigInt(liveLabels) <= BigInt(BroadcastNodesMax)
+    val massBroadcastable = BigInt(nNodes) * BigInt(liveLabels) +
+      seedPairs + stateRows <= BigInt(BroadcastNodesMax)
 
     var mass = stOpt.getOrElse(
       clamp.select(col("node"), col("label"), col("clamp").as("mass")))
@@ -823,9 +829,9 @@ object GraphRank {
         .where(col("mass") > 0)
         .localCheckpoint(false))
     // EVERY driver scalar in ONE action (r18, the biasedRank shape):
-    // clamp rows + off-universe seed count, node count (prices the
-    // per-round broadcast), weighted max edge weight, and the resume
-    // path's duplicate-key/off-universe counts
+    // clamp rows + off-universe seed count, node count (with the clamp
+    // and state rows, prices the per-round broadcast), weighted max edge
+    // weight, and the resume path's duplicate-key/off-universe/row counts
     var scalars = seedRows.agg(count(lit(1)).as("__pairs"),
         coalesce(sum(when(!col("label").isin(labels: _*), 1L)
           .otherwise(0L)), lit(0L)).as("__off"))
@@ -841,7 +847,8 @@ object GraphRank {
         .groupBy(col("node"), col("label")).agg(count(lit(1)).as("__c"))
         .agg(coalesce(max(col("__c")), lit(0L)).as("__dup"),
           coalesce(sum(when(!col("label").isin(labels: _*), 1L)
-            .otherwise(0L)), lit(0L)).as("__offst")))
+            .otherwise(0L)), lit(0L)).as("__offst"),
+          coalesce(sum(col("__c")), lit(0L)).as("__strows")))
     }
     val srow = scalars.head()
     val (offSeeds, clampRows, nNodes, maxW) =
@@ -876,10 +883,13 @@ object GraphRank {
     requireLabelMassFits(clampRows * L, clampUnits, alphaNum, alphaDen,
       if (weightCol.isDefined) maxW else 1L, "labelPropagationDense")
     // per-round broadcast bar (r18, guide §3.1): the dense mass table is
-    // ≤ one row per node, each carrying a length-L Long vector — the bar
+    // ≤ one row per graph node or clamped seed node (the full join keeps
+    // seeds outside the edge list), plus the state rows round 1 starts
+    // from on resume, each carrying a length-L Long vector — the bar
     // scales down by the row width (see denseBar); above it the
     // per-round join stays sort-merge
-    val massBroadcastable = nNodes <= denseBar(L)
+    val stateRows = if (stOpt.isDefined) srow.getLong(7) else 0L
+    val massBroadcastable = nNodes + clampRows + stateRows <= denseBar(L)
 
     var mass = stOpt match {
       case None => clamp.select(col("node"), col("cv").as("m"))

@@ -128,9 +128,9 @@ object Similarity {
     * Scale contract = [[bruteForceKnn]]'s: the anchor set broadcasts
     * against ONE corpus scan (exact by contract); an anchor set that
     * outgrows a broadcast routes through the ANN paths ([[lshKnn]] /
-    * [[ivfKnn]]) for the candidate pool and re-ranks exactly, same as
-    * s02/s04. Ranking is per-(anchor, kind), so the shuffle after the
-    * scan carries candidate rows only.
+    * [[ivfSearchFixedPoint]]) for the candidate pool and re-ranks
+    * exactly, same as s02/s04. Ranking is per-(anchor, kind), so the
+    * shuffle after the scan carries candidate rows only.
     */
   def hardTriplets(corpus: DataFrame, anchors: DataFrame, negK: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding",
@@ -214,69 +214,11 @@ object Similarity {
       .toDF("rank", idCol, "rel", "mmr_score")
   }
 
-  /** Product-quantization KNN: split the d-dim space into `m` subspaces,
-    * learn a `codebookSize`-centroid codebook per subspace (deterministic
-    * hash-sampled init + Lloyd iterations, like [[ivfKnn]]), encode every
-    * corpus vector as m small codes, and score queries by asymmetric
-    * distance — the query's exact sub-vectors dotted against the coded
-    * centroids. Approx top `rerank·k` candidates are re-ranked with exact
-    * cosine.
-    *
-    * Scale design: the codebooks (m·codebookSize·dim/m doubles) are plan
-    * literals; encoding is a codegen'd argmax per subspace, one corpus
-    * scan, NO shuffle. At 100 TB the codes table is m bytes/vector vs 4d —
-    * a 100 TB float corpus becomes a ~3 TB RAM-resident index, and only
-    * candidate ids touch the full vectors again (via the re-rank join).
-    */
-  def pqKnn(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-            m: Int = 4, codebookSize: Int = 16, maxIter: Int = 3,
-            trainCap: Int = 100000, rerank: Int = 4,
-            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    require(dim % m == 0, s"dim $dim must divide into $m subspaces")
-    val sub = dim / m
-    val vecs = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-
-    def toArr(r: org.apache.spark.sql.Row): Array[Double] =
-      r.getSeq[Double](0).toArray
-    // All m argmins in ONE codegen'd kernel ([[graft.functions.PqEncode]]):
-    // the unrolled array-of-literal-dots tree blows Janino's 64 KB method
-    // limit at m=16 and silently drops every scan to interpreted eval.
-    // Arithmetic (2c·x − ‖c‖², first-wins ties) is bit-identical.
-    def encodeCol(cbs: Array[Array[Array[Double]]], vec: Column): Column =
-      pqEncodeCol(cbs, vec)
-
-    val train = vecs.withColumn("h", xxhash64(col("id")))
-      .orderBy(col("h")).limit(trainCap).select(col("v")).persist()
-    // init: first sample rows, sliced per subspace
-    val initRows = train.limit(codebookSize).collect().map(toArr)
-    var codebooks: Array[Array[Array[Double]]] = Array.tabulate(m) { s =>
-      initRows.map(_.slice(s * sub, (s + 1) * sub))
-    }
-    // all m subspaces updated in ONE aggregation per Lloyd iteration:
-    // encode to (subspace, cid) pairs, slice+posexplode the subvector, a
-    // single shuffle of m·codebookSize·sub partial means — not m jobs
-    for (_ <- 0 until maxIter) {
-      val updated = train
-        .select(col("v"), posexplode(encodeCol(codebooks, col("v"))).as(Seq("s", "cid")))
-        .select(col("s"), col("cid"),
-          posexplode(slice(col("v"), col("s") * lit(sub) + 1, lit(sub))).as(Seq("pos", "x")))
-        .groupBy(col("s"), col("cid"), col("pos")).agg(avg(col("x")).as("mu"))
-        .collect().groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          key -> rows.sortBy(_.getInt(2)).map(_.getDouble(3)) }
-      codebooks = Array.tabulate(m) { s =>
-        codebooks(s).indices.map(i =>
-          updated.getOrElse((s, i), codebooks(s)(i))).toArray
-      }
-    }
-    train.unpersist()
-    pqSearch(corpus, queries, k, codebooks, rerank, idCol, vecCol)
-  }
-
   /** Shared PQ encode column: all m argmins in one codegen'd kernel over
-    * precomputed (2c, ‖c‖²) literals — used by the Lloyd trainer, the
-    * index build, and the fixed-codebook search path alike.
+    * precomputed (2c, ‖c‖²) literals — the fixed-codebook search path
+    * and, through [[pqEncodeFixed]], every fixed-point PQ trainer, index
+    * build and search. The unrolled array-of-literal-dots tree it
+    * replaces blew Janino's 64 KB method limit at m=16.
     */
   private def pqEncodeCol(cbs: Array[Array[Array[Double]]], vec: Column): Column = {
     val (m, cbSize, sub) = (cbs.length, cbs(0).length, cbs(0)(0).length)
@@ -285,12 +227,17 @@ object Similarity {
     graft.functions.PqKernels.encode(vec, flat2c, norms, m, cbSize, sub)
   }
 
-  /** The query phase of [[pqKnn]] against ALREADY-TRAINED (or fixed)
-    * codebooks: kernel encode of the corpus, ADC candidate scoring, exact
-    * cosine re-rank. Split out (like [[ivfSearch]]) so PQ's
-    * encode/score/re-rank semantics can be DuckDB-oracled against a
-    * fixed literal codebook (gate s17) independently of the k-means
-    * training that resists an SQL oracle.
+  /** Product-quantization search against a FIXED float codebook (m
+    * subspaces × codebookSize centroids): kernel encode of the corpus,
+    * ADC candidate scoring, exact cosine re-rank of the top k·rerank.
+    * Gate s17 DuckDB-oracles these encode/score/re-rank semantics
+    * against a literal dyadic codebook; trained codebooks come from
+    * [[pqTrainFixedPoint]] and search through [[pqSearchFixedPoint]].
+    *
+    * Scale design: the codebooks (m·codebookSize·dim/m doubles) are plan
+    * literals; encoding is one codegen'd scan with NO shuffle. At 100 TB
+    * the codes table is m bytes/vector vs 4d, and only candidate ids
+    * touch the full vectors again (via the re-rank join).
     */
   def pqSearch(corpus: DataFrame, queries: DataFrame, k: Int,
                codebooks: Array[Array[Array[Double]]], rerank: Int,
@@ -423,66 +370,23 @@ object Similarity {
   /** Argmax over a staged dot-products array column: 0-based id of the
     * best centroid. Ties break toward the smaller centroid id
     * (array_position returns the FIRST max). Single source of the
-    * encode's tie-break/indexing convention — trainer, IVF, and the s10
-    * gate all route through it.
+    * encode's tie-break/indexing convention — every trainer, assignment
+    * and IVF list encode routes through it.
     */
   def nearestOfDots(dots: Column): Column =
     (array_position(dots, array_max(dots)) - 1).cast("int")
 
   /** Codegen'd nearest-centroid (max inner product) assignment against a
-    * literal codebook — the vector-quantizer encode shared by k-means,
-    * IVF, and the s10 gate.
+    * literal float codebook — [[ivfSearch]]'s list encode (gate s16).
     */
   def nearestCentroidExpr(cs: Array[Array[Double]], vec: Column): Column =
     nearestOfDots(array(cs.toIndexedSeq.map(c => dot(vec, typedLit(c.toSeq))): _*))
 
-  /** Full Lloyd k-means over an embedding column, returning the trained
-    * codebook driver-side (k·dim doubles — plan-literal sized).
-    * Deterministic end to end: the training sample and the init are the
-    * smallest-xxhash64(id) rows, no RNG. Each iteration is ONE Spark job:
-    * assignment is a codegen'd argmax over literal centroids (no join),
-    * the update is one (cid, pos) hash-aggregate whose shuffle carries
-    * k·dim partial means after map-side combine — the training set itself
-    * is scanned per iteration but never shuffled. Empty clusters keep
-    * their previous centroid. At 100 TB, `trainCap` bounds the training
-    * sample (top-k by hash, a bounded per-partition heap + single merge,
-    * not a global sort); the full corpus is only touched by the encode.
-    */
-  def kmeansTrain(corpus: DataFrame, k: Int, maxIter: Int = 5,
-                  trainCap: Int = 100000,
-                  idCol: String = "vec_id", vecCol: String = "embedding")
-      : Array[Array[Double]] = {
-    val vecs = corpus.select(col(idCol).as("id"),
-      col(vecCol).cast("array<double>").as("v"))
-    def toArr(r: org.apache.spark.sql.Row): Array[Double] =
-      r.getSeq[Double](0).toArray
-    // deterministic sample + init: order by hash, not by RNG
-    val train = vecs.withColumn("h", xxhash64(col("id")))
-      .orderBy(col("h")).limit(trainCap).select(col("v")).persist()
-    var centroids: Array[Array[Double]] =
-      train.limit(k).collect().map(toArr)
-    for (_ <- 0 until maxIter) {
-      val assigned = train.withColumn("cid", nearestCentroidExpr(centroids, col("v")))
-      val updated = assigned
-        .select(col("cid"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos")).agg(avg(col("x")).as("m"))
-        .collect().groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1)).map(_.getDouble(2))
-        }
-      // empty lists keep their previous centroid
-      centroids = centroids.indices
-        .map(i => updated.getOrElse(i, centroids(i))).toArray
-    }
-    train.unpersist()
-    centroids
-  }
-
-  /** Integer fixed-point Lloyd k-means — the trainer whose every bit is
-    * DuckDB-replayable, closing the one verification boundary the float
-    * trainer ([[kmeansTrain]]) documents as infeasible (distributed
-    * partial-sum order in `avg`). House style (the graph family's
-    * integer-mass argument, applied to vector quantization):
+  /** Integer fixed-point Lloyd k-means — the engine's one k-means
+    * trainer, whose every bit is DuckDB-replayable (a distributed float
+    * `avg` is not: its partial-sum order varies with the partitioning).
+    * House style (the graph family's integer-mass argument, applied to
+    * vector quantization):
     *
     *  - vectors quantize to `floor(x·scale)` micro-units. Every score and
     *    every sum below stays under 2^53, so the double arithmetic both
@@ -492,14 +396,14 @@ object Similarity {
     *    no RNG, no hash function the oracle lacks).
     *  - assignment = argmax of 2c·x − ‖c‖² (⇔ min L2 distance) over
     *    literal integer centroids, first-max ties ([[nearestOfDots]]) —
-    *    one codegen'd scan, no join, same shape as [[kmeansTrain]].
+    *    one codegen'd scan, no join.
     *  - update = floor(Σx / n) per (cluster, dim): the Long sum is exact,
     *    the IEEE division of two exact integers is correctly rounded in
     *    both engines, and floor of it is therefore identical (quotients
     *    ≤ scale, so the ulp argument has ~1e9 of slack). Empty clusters
     *    keep their previous centroid.
     *
-    * Scale contract = [[kmeansTrain]]'s: per iteration one cached-scan +
+    * Scale contract: per iteration one cached-scan +
     * ONE (cid, pos) hash-aggregate whose shuffle carries k·dim partial
     * sums after map-side combine; centroids live driver-side as plan
     * literals (k·dim longs). `trainCap` bounds the training set to the
@@ -513,8 +417,8 @@ object Similarity {
                             trainCap: Int = 100000,
                             idCol: String = "vec_id", vecCol: String = "embedding")
       : Array[Array[Long]] = {
-    // deterministic built-in trainCap (kmeansTrain's convention, made
-    // replayable): the training set is the `trainCap` SMALLEST-id rows —
+    // deterministic built-in trainCap: the training set is the
+    // `trainCap` SMALLEST-id rows —
     // an ORDER BY id LIMIT prefix the oracle replays as a CTE, planned
     // as TakeOrderedAndProject (bounded per-partition heaps, one merge,
     // no global sort). Corpus growth can then neither trip the n·M <
@@ -550,11 +454,13 @@ object Similarity {
   /** (id, xd) with xd = floor(x·scale) per dim, carried as exact-integer
     * doubles so the codegen'd dot kernel consumes it directly.
     */
-  private def quantized(corpus: DataFrame, scale: Long,
-                        idCol: String, vecCol: String): DataFrame =
-    corpus.select(col(idCol).as("id"),
-      transform(col(vecCol).cast("array<double>"),
-        x => floor(x * lit(scale.toDouble)).cast("double")).as("xd"))
+  private[graft] def quantized(corpus: DataFrame, scale: Long,
+                               idCol: String, vecCol: String): DataFrame =
+    corpus.select(col(idCol).as("id"), quantizedVec(col(vecCol), scale).as("xd"))
+
+  private def quantizedVec(vec: Column, scale: Long): Column =
+    transform(vec.cast("array<double>"),
+      x => floor(x * lit(scale.toDouble)).cast("double"))
 
   /** The fixed-point trainers' exactness precondition, enforced LOUDLY
     * (the graph family's 2⁶³-guard convention): every score/sum below
@@ -590,7 +496,7 @@ object Similarity {
   /** The exact-integer score array over a fixed-point codebook:
     * element j = 2c_j·xd − ‖c_j‖², every term an integer below 2^53.
     */
-  private def fixedScores(cb: Array[Array[Long]]): Column =
+  private[graft] def fixedScores(cb: Array[Array[Long]]): Column =
     array(cb.toIndexedSeq.map { c =>
       dot(col("xd"), typedLit(c.map(x => (2 * x).toDouble).toSeq)) -
         lit(c.map(x => x.toDouble * x.toDouble).sum)
@@ -686,11 +592,10 @@ object Similarity {
               round(col("sim"), 6).as("sim"))
   }
 
-  /** Per-subspace integer fixed-point PQ codebooks — [[pqKnn]]'s Lloyd
-    * trainer re-expressed in the s19 exact-integer style so PQ training
-    * becomes DuckDB-replayable (gate s23). Same fused scale shape as
-    * [[pqKnn]]: all m subspace argmins in ONE codegen'd kernel pass
-    * ([[graft.functions.PqEncode]] over exact-integer doubles — every
+  /** Per-subspace integer fixed-point PQ codebooks — a Lloyd trainer
+    * in the s19 exact-integer style, so PQ training is DuckDB-replayable
+    * (gates s08 and s23). All m subspace argmins in ONE codegen'd
+    * kernel pass ([[graft.functions.PqEncode]] over exact-integer doubles — every
     * score ≤ ~1.2e13 ≪ 2^53, so the kernel's float arithmetic IS
     * integer arithmetic), then ONE (s, cid, pos) hash-aggregate per
     * iteration carrying exact Long sums; floor-div updates, empty
@@ -744,17 +649,13 @@ object Similarity {
     cbs
   }
 
-  /** [[graft.functions.PqEncode]] over a fixed-point codebook: the
-    * (2c, ‖c‖²) reference arrays hold exact-integer doubles, so the
-    * kernel's per-subspace argmax is exact and first-max ties match
-    * the oracle's (score desc, cid asc).
+  /** [[pqEncodeCol]] over a fixed-point codebook: the (2c, ‖c‖²)
+    * reference arrays hold exact-integer doubles, so the kernel's
+    * per-subspace argmax is exact and first-max ties match the
+    * oracle's (score desc, cid asc).
     */
-  private def pqEncodeFixed(cbs: Array[Array[Array[Long]]], vec: Column): Column = {
-    val (m, cbSize, sub) = (cbs.length, cbs(0).length, cbs(0)(0).length)
-    val flat2c = cbs.flatten.flatten.map(x => (2 * x).toDouble)
-    val norms = cbs.flatMap(_.map(c => c.map(x => x.toDouble * x.toDouble).sum))
-    graft.functions.PqKernels.encode(vec, flat2c, norms, m, cbSize, sub)
-  }
+  private def pqEncodeFixed(cbs: Array[Array[Array[Long]]], vec: Column): Column =
+    pqEncodeCol(cbs.map(_.map(_.map(_.toDouble))), vec)
 
   /** The PQ query phase against FIXED-POINT codebooks (gate s23 with
     * [[pqTrainFixedPoint]]): kernel encode of the quantized corpus, ADC
@@ -775,10 +676,9 @@ object Similarity {
       col(vecCol).cast("array<double>").as("v"))
     val coded = quantized(corpus, scale, idCol, vecCol)
       .select(col("id"), pqEncodeFixed(cbs, col("xd")).as("codes"))
-    val q = broadcast(quantized(queries, scale, idCol, vecCol)
-      .select(col("id").as("query_id"), col("xd").as("qxd"))
-      .join(queries.select(col(idCol).as("query_id"),
-        col(vecCol).cast("array<double>").as("qv")), Seq("query_id")))
+    val q = broadcast(queries.select(col(idCol).as("query_id"),
+      quantizedVec(col(vecCol), scale).as("qxd"),
+      col(vecCol).cast("array<double>").as("qv")))
     val flatC = cbs.flatten.flatten.map(_.toDouble)
     val adot = graft.functions.PqKernels.adcScore(
       col("qxd"), col("codes"), flatC, m, cbSize, sub)
@@ -2464,33 +2364,15 @@ object Similarity {
     (dropped.size.toLong, deleted)
   }
 
-  /** IVF (inverted-file) ANN: a k-means coarse quantizer partitions the
-    * corpus into `nLists` inverted lists; each query probes its `nProbe`
-    * nearest centroids and re-ranks exactly (cosine) within those lists —
-    * searching ~nProbe/nLists of the corpus instead of all of it.
-    *
-    * Scale design: training ([[kmeansTrain]]) runs on a deterministic
-    * hash-sample capped at `trainCap` rows (k-means quality needs a
-    * sample, not the corpus); centroids (nLists × dim doubles) live on
-    * the driver and enter the plan as literals, so assignment is a
-    * codegen'd argmax — no join. The query phase shuffles the corpus
-    * ONCE by list id; probes are a broadcast. Deterministic: init =
-    * smallest xxhash64(id) rows; no RNG.
-    */
-  def ivfKnn(corpus: DataFrame, queries: DataFrame, k: Int, dim: Int,
-             nLists: Int = 16, nProbe: Int = 4, maxIter: Int = 5,
-             trainCap: Int = 100000,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfSearch(corpus, queries, k,
-      kmeansTrain(corpus, nLists, maxIter, trainCap, idCol, vecCol),
-      nProbe, idCol, vecCol)
-
-  /** The query phase of [[ivfKnn]] against an ALREADY-TRAINED (or fixed)
-    * codebook: assignment argmax + nProbe probe lists + exact cosine
-    * re-rank. Split out so the probe/assign/re-rank semantics can be
-    * exercised (and DuckDB-oracled, gate s16) independently of k-means
-    * training — the training is what resists an SQL oracle (partial-sum
-    * order in the distributed avg), not the search.
+  /** IVF (inverted-file) search against a FIXED float codebook:
+    * assignment argmax + nProbe probe lists + exact cosine re-rank —
+    * searching ~nProbe/nLists of the corpus instead of all of it. Gate
+    * s16 DuckDB-oracles these probe/assign/re-rank semantics against a
+    * literal dyadic codebook; trained codebooks come from
+    * [[kmeansTrainFixedPoint]] and search through [[ivfSearchFixedPoint]].
+    * Centroids enter the plan as literals, so assignment is a codegen'd
+    * argmax (no join); the corpus shuffles ONCE by list id and the
+    * probes broadcast.
     */
   def ivfSearch(corpus: DataFrame, queries: DataFrame, k: Int,
                 centroids: Array[Array[Double]], nProbe: Int,

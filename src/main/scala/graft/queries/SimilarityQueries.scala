@@ -5,8 +5,9 @@ import graft.operators.Similarity
 import org.apache.spark.sql.functions._
 
 /** Similarity-search suite over `embeddings` (SURVEY §2c): exact
-  * brute-force top-k (oracle-checked) and the LSH-bucketed scale path
-  * (rows-only; recall vs exact asserted in ExtensionOperatorsSpec).
+  * brute-force top-k and the LSH, IVF and PQ scale paths, every gate
+  * hash-oracled (the quantizers train in exact fixed-point integers, so
+  * DuckDB replays training too); recall vs exact is floored in specs.
   */
 object SimilarityQueries {
 
@@ -53,9 +54,11 @@ object SimilarityQueries {
       },
       Some(lshKnnOracle)),
 
-    // IVF coarse-quantizer ANN: deterministic k-means lists, nProbe-list
-    // probe + exact re-rank. Hash-derived sample/init ⇒ rows-only;
-    // recall vs brute force asserted in ExtensionOperatorsSpec.
+    // IVF coarse-quantizer ANN at its production probe point: 16
+    // fixed-point k-means lists (s19's trainer, 5 Lloyd rounds),
+    // exact-integer probe ranking, exact cosine re-rank. Hash-oracled
+    // end to end by s22's oracle at these parameters; recall vs brute
+    // force is floored in FixedPointKmeansSpec.
     "s04_knn_ivf" -> QueryDef(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -63,15 +66,17 @@ object SimilarityQueries {
         // same wall-clock. The probe FRACTION (8/16) only looks large
         // because the test corpus caps nLists at 16 — production sizing
         // is nLists ≈ √n, so the same nProbe scans a vanishing fraction
-        Similarity.ivfKnn(emb, emb.filter(col("vec_id") < 5), k = 10,
-          dim = 64, nLists = 16, nProbe = 8)
+        val cb = Similarity.kmeansTrainFixedPoint(emb, k = 16, maxIter = 5)
+        Similarity.ivfSearchFixedPoint(emb, emb.filter(col("vec_id") < 5),
+          k = 10, cb, nProbe = 8)
       },
-      None),
+      Some(ivfFixedSearchOracle(16, 5, 64, 1000000L, nProbe = 8, k = 10))),
 
     // product-quantization ANN: 16-byte codes (m=16, 16 centroids each)
     // instead of 256 bytes/vector; ADC candidate scoring + exact re-rank.
-    // Rows-only gate (k-means has no SQL oracle); recall floor vs the
-    // exact baseline is asserted in ExtensionOperatorsSpec.
+    // Fixed-point PQ training (s23's trainer), hash-oracled end to end
+    // by s23's oracle at these parameters; recall vs brute force is
+    // floored in FixedPointKmeansSpec.
     "s08_knn_pq" -> QueryDef(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -81,10 +86,13 @@ object SimilarityQueries {
         // 0.64 → 0.92 at sf0.1 for ~equal wall-clock. rerank=16 keeps the
         // exact re-rank at k·rerank = 160 candidate ids per query (fixed
         // count ⇒ vanishing fraction at scale). Still 16× compression.
-        Similarity.pqKnn(emb, emb.filter(col("vec_id") < 5), k = 10,
-          dim = 64, m = 16, codebookSize = 16, rerank = 16)
+        val cbs = Similarity.pqTrainFixedPoint(emb, dim = 64, m = 16,
+          codebookSize = 16, maxIter = 3)
+        Similarity.pqSearchFixedPoint(emb, emb.filter(col("vec_id") < 5),
+          k = 10, cbs, rerank = 16)
       },
-      None),
+      Some(pqFixedSearchOracle(64, 1000000L, m = 16, cbSize = 16,
+        iters = 3, rerankWindow = 160, k = 10))),
 
     // per-language embedding centroids: class-mean / coarse-quantizer
     // training as one explode + map-side-combined aggregate; flat
@@ -327,36 +335,31 @@ object SimilarityQueries {
         Tables.embeddings(s, d), dim = 64, outDim = 16),
       Some(graft.operators.RandomProjection.oracleSql(64, 16))),
 
-    // Full Lloyd k-means as a first-class operator (the trainer behind
-    // s04's IVF lists, exposed): deterministic hash init, per-iteration
-    // one assignment scan + one k·dim-row aggregate. The gate encodes the
-    // corpus against the trained codebook and emits per-cluster size,
-    // mean squared distance, and centroid norm. Driver-side iteration ⇒
-    // rows-only; determinism + inertia monotonicity asserted in spec.
+    // Full Lloyd k-means as a first-class operator (s19's fixed-point
+    // trainer, the one behind s04's IVF lists): the gate encodes the
+    // corpus against the trained codebook (assignFixedPoint's E-step,
+    // inline so the corpus is scanned once) and emits per-cluster
+    // size, Σ dist² and ‖c‖², all exact integers in micro-units² — no
+    // float avg or sqrt, so the oracle replays every bit: s19's Lloyd
+    // chain, the full-corpus assignment, the sums.
     "s10_kmeans" -> QueryDef(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
-        val cb = Similarity.kmeansTrain(emb, k = 8, maxIter = 4)
-        val vecs = emb.select(col("vec_id"),
-          col("embedding").cast("array<double>").as("v"))
-        val dots = array(cb.toIndexedSeq.map(c =>
-          graft.functions.GraftFunctions.dot(col("v"), typedLit(c.toSeq))): _*)
-        val c2 = typedLit(cb.map(c => c.map(x => x * x).sum).toSeq)
-        val cn = typedLit(cb.map(c => math.sqrt(c.map(x => x * x).sum)).toSeq)
-        // the k dot products are staged once; argmax and dist² read them
-        vecs
-          .withColumn("_dots", dots)
-          .withColumn("cid", Similarity.nearestOfDots(col("_dots")))
-          .withColumn("dist2",
-            graft.functions.GraftFunctions.dot(col("v"), col("v"))
-              - lit(2.0) * element_at(col("_dots"), col("cid") + 1)
-              + element_at(c2, col("cid") + 1))
+        val cb = Similarity.kmeansTrainFixedPoint(emb, k = 8, maxIter = 4)
+        val c2 = typedLit(cb.map(_.map(x => x * x).sum).toSeq)
+        // the k scores 2c·x − ‖c‖² are staged once; the argmax reads
+        // them, and dist² = ‖x‖² − the max score, an exact integer
+        Similarity.quantized(emb, 1000000L, "vec_id", "embedding")
+          .withColumn("_s", Similarity.fixedScores(cb))
+          .withColumn("cid", Similarity.nearestOfDots(col("_s")))
+          .withColumn("dist2", (graft.functions.GraftFunctions.dot(
+            col("xd"), col("xd")) - array_max(col("_s"))).cast("long"))
           .groupBy(col("cid").cast("long").as("cluster"))
           .agg(count(lit(1)).as("n_vecs"),
-               round(avg(col("dist2")), 4).as("avg_dist2"),
-               round(max(element_at(cn, col("cid") + 1)), 6).as("centroid_norm"))
+               sum(col("dist2")).as("sum_dist2"),
+               max(element_at(c2, col("cid") + 1)).as("centroid_norm2"))
       },
-      None),
+      Some(kmeansStatsOracle(8, 4, 64, 1000000L))),
 
     // Hard-triplet mining (s13): contrastive-training data construction —
     // per anchor (deterministic id stride) the hardest positive, the 3
@@ -402,10 +405,10 @@ object SimilarityQueries {
         queryVecId = 1L, k = MmrK, poolK = MmrPoolK, lambda = MmrLambda),
       Some(mmrOracle(MmrK, MmrPoolK, MmrLambda))),
 
-    // Pure-SQL LSH ANN (s15): the SQL-reachability twin of s02, AND the
-    // first ANN gate whose CANDIDATE SET is hash-oracled (s02/s04/s08
-    // are recall-asserted rows-only). The registered `graft_sign_bits`
-    // kernel buckets corpus + query per hash table; bucket match →
+    // Pure-SQL LSH ANN (s15): the SQL-reachability twin of s02, and the
+    // first ANN gate whose CANDIDATE SET was hash-oracled. The
+    // registered `graft_sign_bits` kernel buckets corpus + query per
+    // hash table; bucket match →
     // exact cosine re-rank → top-10, all in one SQL string. The
     // hyperplane sign matrices are plan literals, so the oracle
     // interpolates them as explicit ±term chains (same left-to-right
@@ -424,10 +427,8 @@ object SimilarityQueries {
     // nearest-centroid argmax (explicit left-to-right ±term chains, the
     // fold ArrayDotProduct runs; first-max tie like array_position),
     // the nProbe probe lists (cdot desc, cid asc), candidate-list
-    // membership, and the exact cosine re-rank bit-for-bit. What remains
-    // un-oracled about s04 is ONLY k-means training (distributed
-    // partial-sum order in avg — see SURVEY §2d); its search semantics
-    // are hash-checked here.
+    // membership, and the exact cosine re-rank bit-for-bit — the
+    // float-codebook search path, beside s04's fixed-point one.
     "s16_ivf_search_oracle" -> QueryDef(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -442,9 +443,8 @@ object SimilarityQueries {
     // replays PqEncode's argmax (per-centroid left-to-right product
     // chain minus the SAME Scala-computed ‖c‖² literal, first-max ties),
     // the codes array, PqAdcScore's per-subspace subtotal sum, the
-    // k·rerank candidate window, and the exact cosine re-rank — so the
-    // only rows-only thing left about s08 is codebook TRAINING (the
-    // distributed-avg float-order note, SURVEY §2d).
+    // k·rerank candidate window, and the exact cosine re-rank — the
+    // float-codebook search path, beside s08's fixed-point one.
     "s17_pq_search_oracle" -> QueryDef(
       (s, d) => {
         val emb = Tables.embeddings(s, d)
@@ -459,9 +459,8 @@ object SimilarityQueries {
     // style: floor(x·1e6) micro-units, exact-integer scores and sums,
     // floor-div centroid updates. The oracle re-trains from scratch in
     // DuckDB (maxIter unrolled CTE iterations) and the hash match is the
-    // trainer's bit-determinism theorem. The float trainer's no_oracle
-    // note (s04/s08/s10) now bounds exactly the LEGACY path, not the
-    // capability.
+    // trainer's bit-determinism theorem. s04, s08 and s10 train on it
+    // too, so no ANN gate is rows-only.
     "s19_kmeans_fixed" -> QueryDef(
       (s, d) => {
         val cb = Similarity.kmeansTrainFixedPoint(
@@ -532,8 +531,8 @@ object SimilarityQueries {
         Similarity.pqSearchFixedPoint(emb, emb.filter(col("vec_id") < 5),
           k = ServeK, cbs, rerank = ServeRerank)
       },
-      Some(pqFixedSearchOracle(64, 1000000L,
-        rerankWindow = ServeK * ServeRerank, k = ServeK))),
+      Some(pqFixedSearchOracle(64, 1000000L, PqFixedM, PqFixedCb,
+        PqFixedIters, rerankWindow = ServeK * ServeRerank, k = ServeK))),
 
     // IVFADC (s24, r12 — the production composition the r11 verdict
     // names): s22's coarse quantizer + s23's PQ, composed with RESIDUAL
@@ -1893,6 +1892,28 @@ object SimilarityQueries {
     SELECT CAST(cid AS BIGINT) AS cid, CAST(pos AS BIGINT) AS pos, c
     FROM cent$maxIter"""
 
+  /** DuckDB replay of s10: re-train (s19's chain), assign the corpus,
+    * and sum each cluster's exact-integer Σ (x − c)² and ‖c‖².
+    */
+  private def kmeansStatsOracle(k: Int, maxIter: Int, dim: Int,
+                                scale: Long): String =
+    s"""
+    WITH ${kmXvCte(dim, scale)},
+    allv AS (SELECT vec_id FROM embeddings
+             ORDER BY vec_id LIMIT $FixedTrainCap),
+    ${kmChainCte("", "allv", k, maxIter)},
+    ${kmAssignCte("c", s"cent$maxIter")},
+    d2 AS (SELECT a.cid, SUM((xv.x - ct.c) * (xv.x - ct.c)) AS dist2
+           FROM ca a JOIN xv ON xv.vec_id = a.vec_id
+           JOIN cent$maxIter ct ON ct.cid = a.cid AND ct.pos = xv.pos
+           GROUP BY a.cid, a.vec_id),
+    cn AS (SELECT cid, SUM(c * c) AS c2 FROM cent$maxIter GROUP BY 1)
+    SELECT CAST(d2.cid AS BIGINT) AS cluster, COUNT(*) AS n_vecs,
+           CAST(SUM(d2.dist2) AS BIGINT) AS sum_dist2,
+           CAST(cn.c2 AS BIGINT) AS centroid_norm2
+    FROM d2 JOIN cn ON d2.cid = cn.cid
+    GROUP BY d2.cid, cn.c2"""
+
   /** DuckDB replay of s22: re-train (s19's chain), re-assign the
     * corpus, re-rank each query's probe lists — the whole ANN path
     * from scratch. The probe ranking reads the SAME score table the
@@ -1935,9 +1956,9 @@ object SimilarityQueries {
     * s, cid)), replay the k·rerank candidate window, and re-rank by
     * exact cosine — the whole PQ path from nothing.
     */
-  private def pqFixedSearchOracle(dim: Int, scale: Long,
+  private def pqFixedSearchOracle(dim: Int, scale: Long, m: Int,
+                                  cbSize: Int, iters: Int,
                                   rerankWindow: Int, k: Int): String = {
-    val (m, cbSize, iters) = (PqFixedM, PqFixedCb, PqFixedIters)
     val sub = dim / m
     val pIters = (1 to iters).map { i =>
       s"""psc$i AS (SELECT xvt.vec_id, ct.s, ct.cid,

@@ -227,11 +227,14 @@ object ContinuousGraphMaintenance {
       * stream had nothing left to redeliver must serve the ranks the
       * previous incarnation drained, not silently re-baseline to the
       * old equilibrium (the same disk-is-truth rule as
-      * [[ContinuousIndexMaintenance]]'s version resolution).
+      * [[ContinuousIndexMaintenance]]'s version resolution). The marker
+      * resolves through the Hadoop FS of `ranksDir`, so a `file:` or
+      * `s3a://` URI is checked where it lives, not as a local path.
       */
     def result: Run = {
-      val onDisk = java.nio.file.Files.exists(
-        java.nio.file.Paths.get(ranksDir, "_SUCCESS"))
+      val marker = new org.apache.hadoop.fs.Path(ranksDir, "_SUCCESS")
+      val onDisk = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .exists(marker)
       Run(if (published || onDisk) spark.read.parquet(ranksDir)
           else warmFull,
         boundaries.toSeq)

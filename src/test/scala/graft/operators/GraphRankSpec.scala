@@ -324,6 +324,57 @@ class GraphRankSpec extends SparkSpec {
     a shouldBe b
   }
 
+  /** Spark jobs launched by broadcast exchanges while `body` runs, with
+    * size-based broadcasting off, so only explicit hints count.
+    */
+  private def hintedBroadcasts(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(p =>
+              Option(p.getProperty("spark.job.tags"))
+                .exists(_.contains("broadcast exchange"))))
+          n.incrementAndGet()
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
+      sc.removeSparkListener(listener)
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+    n.get
+  }
+
+  test("label propagation: a seed set far larger than the graph is not broadcast") {
+    // the mass table carries every clamp row, also for seeds outside the
+    // edge list, so the per-round bar must price the seeds, not only
+    // nodes × labels (4 × 2 here)
+    val edges = Seq(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 1L).toDF("src", "dst")
+    val few = Seq(1L -> 0L, 3L -> 1L).toDF("node", "label")
+    val many = spark.range(GraphRank.BroadcastNodesMax + 1)
+      .select((col("id") + 100L).as("node"), (col("id") % 2).as("label"))
+      .union(few)
+    def sparse(seeds: org.apache.spark.sql.DataFrame) = hintedBroadcasts {
+      GraphRank.labelPropagationMasses(edges, "src", "dst", seeds,
+        "node", "label", iterations = 1).count()
+    }
+    def dense(seeds: org.apache.spark.sql.DataFrame) = hintedBroadcasts {
+      GraphRank.labelPropagationDense(edges, "src", "dst", seeds,
+        "node", "label", Seq(0L, 1L), iterations = 1).count()
+    }
+    // the small seed set is under the bar: the hint is seen
+    sparse(few) should be > 0
+    dense(few) should be > 0
+    sparse(many) shouldBe 0
+    dense(many) shouldBe 0
+  }
+
   // --- label-propagation communities (Raghavan et al. 2007, sync) ---
 
   private def commOf(edges: Seq[(Long, Long)], iters: Int = 4) =

@@ -58,15 +58,6 @@ class RobustnessSpec extends SparkSpec {
     ZOrder.bucketStats(empty, "x", "y", bits = 4, bucketShift = 2).count() shouldBe 0L
   }
 
-  test("kmeansTrain: k larger than the corpus degrades to corpus-sized codebook use") {
-    val tiny = Seq((1L, Array.fill(4)(1.0f)), (2L, Array.fill(4)(2.0f)))
-      .toDF("vec_id", "embedding")
-    val cb = Similarity.kmeansTrain(tiny, k = 8, maxIter = 2)
-    // init only finds 2 rows; the trained prefix is still usable
-    cb.length shouldBe 2
-    cb.foreach(_.length shouldBe 4)
-  }
-
   test("kmeansTrainFixedPoint: k larger than the corpus degrades to corpus-sized codebook") {
     val tiny = Seq((1L, Array.fill(4)(1.0f)), (2L, Array.fill(4)(2.0f)))
       .toDF("vec_id", "embedding")

@@ -3,39 +3,15 @@ package graft.operators
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Unit coverage for the round-3 additions: full Lloyd k-means, JL random
-  * projection, mixture resampling, and the HLL sketch-rollup tolerance.
+/** Unit coverage for the round-3 additions: JL random projection,
+  * mixture resampling, and the HLL sketch-rollup tolerance. (The Lloyd
+  * k-means cases live in FixedPointKmeansSpec.)
   */
 class Round3OpsSpec extends SparkSpec {
 
   import spark.implicits._
 
   private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
-
-  test("kmeansTrain: deterministic, right shape, better than its init") {
-    val a = Similarity.kmeansTrain(embeddings, k = 4, maxIter = 3)
-    val b = Similarity.kmeansTrain(embeddings, k = 4, maxIter = 3)
-    a.length shouldBe 4
-    a.foreach(_.length shouldBe 64)
-    a.map(_.toSeq) shouldBe b.map(_.toSeq) // no RNG anywhere
-    // Lloyd iterations must not increase inertia vs the raw init
-    def inertia(cb: Array[Array[Double]]): Double = {
-      val vecs = embeddings.select(col("embedding").cast("array<double>").as("v"))
-      val dots = array(cb.toIndexedSeq.map(c =>
-        graft.functions.GraftFunctions.dot(col("v"), typedLit(c.toSeq))): _*)
-      val c2 = typedLit(cb.map(c => c.map(x => x * x).sum).toSeq)
-      vecs.withColumn("_dots", dots)
-        .withColumn("cid",
-          array_position(col("_dots"), array_max(col("_dots"))).cast("int"))
-        .withColumn("d2",
-          graft.functions.GraftFunctions.dot(col("v"), col("v"))
-            - lit(2.0) * element_at(col("_dots"), col("cid"))
-            + element_at(c2, col("cid")))
-        .agg(sum(col("d2"))).head().getDouble(0)
-    }
-    val init = Similarity.kmeansTrain(embeddings, k = 4, maxIter = 0)
-    inertia(a) should be <= inertia(init) + 1e-9
-  }
 
   test("random projection: deterministic, linear, distance-preserving on average") {
     val proj = RandomProjection.project(embeddings.limit(40), dim = 64, outDim = 16)

@@ -42,11 +42,13 @@ class PlanAuditSpec extends SparkSpec {
     * loops run driver-side collect()s over Spark jobs, so "planning"
     * them here would execute full training, not just plan — excluded
     * like the eager set to keep this sweep plan-only. Their quality and
-    * determinism are asserted in ExtensionOperatorsSpec/SimilarityQueries
-    * specs; s08's broadcast-ADC scan is pairwise by contract like s01's.
+    * determinism are asserted in FixedPointKmeansSpec and their oracles;
+    * s08's broadcast-ADC scan is pairwise by contract like s01's.
     */
   private val trainsAtBuild: Set[String] = Set(
-    "s04_knn_ivf", "s08_knn_pq", "s10_kmeans",
+    "s04_knn_ivf", // trains the fixed-point codebook at build (s22's shape)
+    "s08_knn_pq", // trains the fixed-point PQ codebooks at build (s23's)
+    "s10_kmeans", // fixed-point Lloyd collects per iteration at build
     "s19_kmeans_fixed", // fixed-point Lloyd collects per iteration at build
     "s20_retrain_reassign", // retrains the fixed-point codebook at build
     "s22_ivf_fixed_search", // trains the fixed-point codebook at build

@@ -144,6 +144,30 @@ class ContinuousGraphMaintenanceSpec extends SparkSpec {
     rows(idle.ranks) shouldBe direct
   }
 
+  test("a restarted loop over file: URI dirs serves the drained ranks from disk") {
+    // ranksDir as a URI, the shape an s3a:// or file: deployment passes:
+    // the _SUCCESS check must resolve it through its Hadoop FS, or an
+    // idle restart re-baselines to the old equilibrium
+    val warmFull = GraphRank.pageRank(oldDF, "src", "dst", 4,
+      weightCol = Some("w")).localCheckpoint()
+    val warmState = warmFull.select(col("node"), col("rank_units"))
+    def uriDir(prefix: String) =
+      java.nio.file.Files.createTempDirectory(prefix).toUri.toString
+    val (accumDir, ranksDir) = (uriDir("graft_cgm_uri_a"), uriDir("graft_cgm_uri_r"))
+    ranksDir should startWith("file:")
+    def newLoop() = new ContinuousGraphMaintenance.Loop(spark, oldDF,
+      warmFull, warmState, "src", "dst", "w", resumeIterations = 2,
+      dampNum = 85, dampDen = 100, totalUnits = GraphRank.DefaultUnits,
+      accumDir, ranksDir)
+    newLoop().processBatch(newLinks.toDF("src", "dst", "w"), 0L)
+    val direct = rows(GraphRank.pageRankResume(
+      newLinks.toDF("src", "dst", "w"), "src", "dst",
+      GraphRank.pageRank(oldDF, "src", "dst", 4, weightCol = Some("w")),
+      2, weightCol = Some("w")))
+    direct should not be rows(warmFull)
+    rows(newLoop().result.ranks) shouldBe direct // nothing redelivered
+  }
+
   test("redelivered batchId replaces, never double-counts: drain survives a mid-stream restart") {
     // Structured Streaming redelivers the last uncommitted batchId after
     // a failure. Model it directly against the extracted Loop: batch 1
