@@ -192,6 +192,44 @@ class ExtensionOperatorsSpec extends SparkSpec {
     Similarity.LshRoutingThreshold should be >= 0.8
   }
 
+  test("PQ knn: valid ranks, no self-matches, re-ranked recall@10 ≥ 0.8 vs brute force") {
+    val queries = embs.filter(col("vec_id") < 5)
+    val exact = Similarity.bruteForceKnn(embs, queries, 10).collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSet
+    // s08's point: m 16, 16 centroids, 3 Lloyd rounds, rerank 16
+    val cbs = Similarity.pqTrainFixedPoint(embs, dim = 64, m = 16,
+      codebookSize = 16, maxIter = 3)
+    val pq = Similarity.pqSearchFixedPoint(embs, queries, 10, cbs, rerank = 16)
+      .collect()
+    pq.length shouldBe exact.size // k results per query
+    pq.foreach { r =>
+      r.getLong(0) should not be r.getLong(2) // no self-match
+      r.getLong(1) should (be >= 1L and be <= 10L)
+    }
+    val approx = pq.map(r => (r.getLong(0), r.getLong(2))).toSet
+    // 16-byte codes (16× compression of 64 floats) + 160-candidate exact
+    // re-rank, matching the 0.84/0.80 floors the LSH/IVF paths hold
+    approx.intersect(exact).size.toDouble / exact.size should be >= 0.8
+  }
+
+  test("IVF knn: valid ranks, no self-matches, recall beats its probe fraction floor") {
+    val queries = embs.filter(col("vec_id") < 5)
+    val exact = Similarity.bruteForceKnn(embs, queries, 10).collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSet
+    // s04's point: 16 lists, 5 Lloyd rounds, nProbe 8
+    val cb = Similarity.kmeansTrainFixedPoint(embs, k = 16, maxIter = 5)
+    val ivf = Similarity.ivfSearchFixedPoint(embs, queries, 10, cb, nProbe = 8)
+      .collect()
+    ivf.foreach { r => r.getLong(0) should not be r.getLong(2) }
+    ivf.groupBy(_.getLong(0)).foreach { case (_, rows) =>
+      rows.map(_.getLong(1)).sorted shouldBe (1L to rows.length).toArray
+    }
+    val got = ivf.map(r => (r.getLong(0), r.getLong(2))).toSet
+    // probing 8/16 lists scans ≥ half the corpus; clustering can only
+    // help recall beyond that floor
+    got.intersect(exact).size.toDouble / exact.size should be >= 0.5
+  }
+
   test("int8 quantization: values bounded, fidelity ≥ 0.995 on the corpus") {
     val q = Quantization.quantizeInt8(embs).collect()
     q.foreach { r =>

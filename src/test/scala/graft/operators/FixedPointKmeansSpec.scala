@@ -114,64 +114,39 @@ class FixedPointKmeansSpec extends SparkSpec {
   }
 
   test("ivfSearchFixedPoint: useful recall vs brute force, deterministic across partitionings") {
+    val cb = Similarity.kmeansTrainFixedPoint(embeddings, k = 8, maxIter = 3)
     val queries = embeddings.filter(col("vec_id") < 5)
-    def pairs(rows: Array[org.apache.spark.sql.Row]) =
-      rows.map(r => (r.getLong(0), r.getLong(2))).toSet
-    val exact = pairs(
-      Similarity.bruteForceKnn(embeddings, queries, k = 10).collect())
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSet
+    val got = pairs(Similarity.ivfSearchFixedPoint(
+      embeddings, queries, k = 10, cb, nProbe = 3))
+    val exact = pairs(Similarity.bruteForceKnn(embeddings, queries, k = 10))
     // the oracle pins EXACTNESS of the composed path; this pins that the
-    // path is also a useful ANN at (lists, Lloyd rounds, nProbe, floor):
-    // s22's point (measured 0.94 at sf0.01), then s04's, where probing
-    // 8/16 lists scans ≥ half the corpus and clustering can only raise
-    // recall beyond that floor
-    for ((lists, iters, nProbe, floor) <- Seq((8, 3, 3, 0.6), (16, 5, 8, 0.5))) {
-      val cb = Similarity.kmeansTrainFixedPoint(embeddings, k = lists,
-        maxIter = iters)
-      val rows = Similarity.ivfSearchFixedPoint(
-        embeddings, queries, k = 10, cb, nProbe = nProbe).collect()
-      rows.foreach(r => r.getLong(0) should not be r.getLong(2))
-      rows.groupBy(_.getLong(0)).foreach { case (_, rs) =>
-        rs.map(_.getLong(1)).sorted shouldBe (1L to rs.length).toArray
-      }
-      val got = pairs(rows)
-      withClue(s"nLists=$lists nProbe=$nProbe: ") {
-        (got & exact).size.toDouble / exact.size should be >= floor
-      }
-      got shouldBe pairs(Similarity.ivfSearchFixedPoint(
-        embeddings.repartition(13, col("vec_id")), queries, k = 10, cb,
-        nProbe = nProbe).collect())
-    }
+    // path is also a useful ANN (measured 0.94 at sf0.01, floor 0.6)
+    (got & exact).size.toDouble / exact.size should be >= 0.6
+    got shouldBe pairs(Similarity.ivfSearchFixedPoint(
+      embeddings.repartition(13, col("vec_id")), queries, k = 10, cb,
+      nProbe = 3))
   }
 
   test("pqTrainFixedPoint + pqSearchFixedPoint: useful recall, deterministic across partitionings") {
+    val cbs = Similarity.pqTrainFixedPoint(embeddings, dim = 64,
+      m = 4, codebookSize = 8, maxIter = 2)
+    val again = Similarity.pqTrainFixedPoint(
+      embeddings.repartition(13, col("vec_id")), dim = 64,
+      m = 4, codebookSize = 8, maxIter = 2)
+    cbs.map(_.map(_.toSeq).toSeq) shouldBe again.map(_.map(_.toSeq).toSeq)
     val queries = embeddings.filter(col("vec_id") < 5)
-    val exact = Similarity.bruteForceKnn(embeddings, queries, k = 10)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(2))).toSet
+    val got = pairs(Similarity.pqSearchFixedPoint(
+      embeddings, queries, k = 10, cbs, rerank = 4))
+    val exact = pairs(Similarity.bruteForceKnn(embeddings, queries, k = 10))
     // exactness of the composed path is the oracle's job; this pins that
-    // each codebook is a working ANN at (m, centroids, Lloyd rounds,
-    // rerank, floor): s23's small verification twin (measured 0.66 at
-    // sf0.01), then s08's production point — 16-byte codes and a
-    // 160-candidate exact re-rank
-    for ((m, cb, iters, rerank, floor) <-
-           Seq((4, 8, 2, 4, 0.3), (16, 16, 3, 16, 0.8))) {
-      val cbs = Similarity.pqTrainFixedPoint(embeddings, dim = 64,
-        m = m, codebookSize = cb, maxIter = iters)
-      val again = Similarity.pqTrainFixedPoint(
-        embeddings.repartition(13, col("vec_id")), dim = 64,
-        m = m, codebookSize = cb, maxIter = iters)
-      cbs.map(_.map(_.toSeq).toSeq) shouldBe again.map(_.map(_.toSeq).toSeq)
-      val rows = Similarity.pqSearchFixedPoint(
-        embeddings, queries, k = 10, cbs, rerank = rerank).collect()
-      rows.length shouldBe exact.size // k results per query
-      rows.foreach { r =>
-        r.getLong(0) should not be r.getLong(2) // no self-match
-        r.getLong(1) should (be >= 1L and be <= 10L)
-      }
-      val got = rows.map(r => (r.getLong(0), r.getLong(2))).toSet
-      withClue(s"m=$m codebookSize=$cb: ") {
-        (got & exact).size.toDouble / exact.size should be >= floor
-      }
-    }
+    // the small verification-twin codebook (m=4, 8 centroids) is still a
+    // working ANN (measured 0.66 at sf0.01, floor 0.3 — s08's m=16
+    // production point is floored at 0.8 in ExtensionOperatorsSpec)
+    (got & exact).size.toDouble / exact.size should be >= 0.3
   }
 
   test("trainCap: a cap above the corpus is a no-op; an engaged cap trains on the id-prefix") {
