@@ -15,7 +15,13 @@
 #       checkpointed batch start no process (the session's `file:` FS
 #       must stay fork-free: no chmod, no readlink); and
 #       graft.engine.RunJobsSpec — a JobRunner.run launches 2 Spark jobs
-#       and no shuffle for either sink.
+#       and no shuffle for either sink; graft.streaming.BoundaryJobsSpec —
+#       each loop boundary kind (MinHash delta and compaction; assignment
+#       and IVF-PQ delta, drift-retrain and census cut) launches its
+#       pinned Spark job count; and graft.operators.TrainerJobsSpec — the
+#       fixed-point k-means and PQ trainers launch theirs (the exactness
+#       guard rides an aggregate they already run). A job added to any of
+#       these paths fails here with the new count.
 # A deliberately-dangling roster entry (e.g. add "q999_nope" to
 # ScaleProbe.DefaultProbes) fails step (b) — that is the self-test.
 #   (c) the full gate suite executed + oracle-checked at sf0.001 — the
@@ -51,7 +57,7 @@ if grep -rn "DataFileWriter" src/main/ \
   echo "preflight FAILED: DataFileWriter outside graft.sources.AvroRecordFiles (above) — write record files with AvroRecordFiles.ContainerWriter"
   exit 1
 fi
-sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec graft.engine.RunJobsSpec" 2>&1 | tail -20
+sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec graft.engine.RunJobsSpec graft.streaming.BoundaryJobsSpec graft.operators.TrainerJobsSpec" 2>&1 | tail -20
 OUT=$(mktemp -d /tmp/preflight_sf0001.XXXX)
 LOG=$(mktemp /tmp/preflight_verify.XXXX.log)
 trap 'rm -rf "$OUT" "$LOG"' EXIT

@@ -16,7 +16,7 @@ import scala.util.control.NonFatal
   * declarative Spark plan per job:
   *
   *   planTasks (O2, driver)  → Dataset[TaskSpec], one task per partition
-  *   fetchRaw  (O3, executor)→ flatMap to raw byte files + manifest
+  *   fetchRaw  (O3, executor)→ flatMap to raw byte files (landed gzipped)
   *   parse     (O4, executor)→ flatMap to typed rows
   *   fetchStructured (O5)    → fused O3∘O4 for processed-kind integrations
   *   write records           → one snappy Avro container file per task
@@ -24,9 +24,10 @@ import scala.util.control.NonFatal
   *   onJobCompleted (O7)     → driver callback
   *
   * Scale design: the driver never materializes record data — only the
-  * per-task manifest (size/md5/recordCount, parity with
+  * per-task record-file manifest (size/md5/recordCount, parity with
   * RemoteProcessedDataFile, worker-api/.../proto/RemoteDataFile.scala:20-27)
-  * ever comes back, and even that is written as a parquet manifest table.
+  * ever comes back, one row per task, into the execution log; no
+  * manifest table is written.
   * Raw bytes go executor→storage directly via the Hadoop FS API (works for
   * file:// here and s3a:// on a cluster — the reference's S3 uploads,
   * S3DataFileHandler.scala:62-96).

@@ -11,9 +11,9 @@ import java.time.ZoneOffset
   *   {prefix}/{source}/{yyyy-MM-dd}/job-{uuid}/log/{executionId}.out
   *
   * Source names are slugified to lowercase-dashed form as the reference
-  * does for queue/key naming. At 100 TB this layout is also the physical
-  * partitioning: (source, date, jobId) are the partition columns of every
-  * manifest table, so job-scoped reads prune to one directory.
+  * does for queue/key naming. At 100 TB the (source, date, jobId) key
+  * prefix scopes every file of a job to one directory, so a job-scoped
+  * read lists that directory only.
   */
 final case class StorageLayout(prefix: String) {
   // ships inside executor closures (raw-file landing) — keep it serializable

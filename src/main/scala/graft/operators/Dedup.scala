@@ -33,58 +33,43 @@ object Dedup {
     * verdict #8): the pre-r18 probe (`df.rdd.getNumPartitions`) forced
     * a full second physical plan per query build — invisible at sf0.1,
     * but it doubles driver-side planning cost for the affected paths
-    * at 100 TB plan sizes. For file scans this replicates Spark's
-    * split-packing arithmetic (FilePartition.maxSplitBytes + the
-    * greedy desc-size bin packing) over the FileIndex's cached
-    * listing; for checkpointed inputs it reads the EXISTING RDD's
-    * partition count (no planning — the RDD already exists). Any other
-    * leaf shape (local relations, multi-source joins whose output
-    * width is set by the shuffle, not the scan) returns None and the
-    * caller leaves the input alone — the spread sites only ever feed
-    * single-leaf file/RDD inputs, where the estimate is exact for
-    * splittable formats (all graft fixtures are parquet).
+    * at 100 TB plan sizes. For file scans this runs Spark's own split
+    * and packing (`PartitionedFileUtil.splitFiles` under the format's
+    * `isSplitable`, then `FilePartition.getFilePartitions`) over the
+    * FileIndex's cached listing, so an unsplittable file (gzip CSV or
+    * JSON) counts as one chunk; for checkpointed inputs it reads the
+    * EXISTING RDD's partition count (no planning — the RDD already
+    * exists). Any other leaf shape (local relations, bucketed tables
+    * whose scan width the planner may set by bucket, multi-source joins
+    * whose output width is set by the shuffle, not the scan) returns
+    * None and the caller leaves the input alone.
     */
   private[graft] def planWidth(df: DataFrame): Option[Int] = {
-    import org.apache.spark.sql.execution.LogicalRDD
+    import org.apache.spark.sql.execution.{LogicalRDD, PartitionedFileUtil}
     import org.apache.spark.sql.execution.datasources.{FilePartition,
       HadoopFsRelation, LogicalRelation}
     val sess = df.sparkSession
-    val leaves = df.queryExecution.analyzed.collectLeaves()
     // only a single-leaf plan has a scan-determined width — a join or
     // union's output width is set downstream (shuffle/union arity),
     // exactly the shapes the pre-r18 probe never fired on
-    if (leaves.size != 1) return None
-    val widths = leaves.map {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation =>
-          val openCost = sess.sessionState.conf.filesOpenCostInBytes
-          val lens = fs.location.listFiles(Nil, Nil)
-            .flatMap(_.files).map(_.getLen).filter(_ > 0L)
+    df.queryExecution.analyzed.collectLeaves() match {
+      case Seq(lr: LogicalRelation) => lr.relation match {
+        case fs: HadoopFsRelation if fs.bucketSpec.isEmpty =>
+          val dirs = fs.location.listFiles(Nil, Nil)
           // maxSplitBytes is 0 when openCostInBytes is 0 and
           // minPartitionNum exceeds the input bytes; a zero step would
-          // throw below
-          val split = math.max(1L, FilePartition.maxSplitBytes(sess,
-            lens.map(_ + openCost).sum))
-          // Spark's packing: chunk each (splittable) file at the split
-          // size, sort chunks by size desc, close a bin when the next
-          // chunk would overflow it; every chunk charges len + openCost
-          val chunks = lens.flatMap { len =>
-            (0L until len by split).map(off => math.min(split, len - off))
-          }.sortBy(-_)
-          var parts = 0
-          var acc = 0L
-          chunks.foreach { len =>
-            if (parts == 0 || acc + len > split) { parts += 1; acc = 0L }
-            acc += len + openCost
-          }
-          Some(parts)
+          // throw in splitFiles
+          val split = math.max(1L, FilePartition.maxSplitBytes(sess, dirs))
+          val chunks = dirs.flatMap { d =>
+            d.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+              fs.fileFormat.isSplitable(sess, fs.options, f.getPath), split, d.values))
+          }.sortBy(-_.length)
+          Some(FilePartition.getFilePartitions(sess, chunks, split).size)
         case _ => None
       }
-      case l: LogicalRDD => Some(l.rdd.getNumPartitions)
+      case Seq(l: LogicalRDD) => Some(l.rdd.getNumPartitions)
       case _ => None
     }
-    if (widths.nonEmpty && widths.forall(_.isDefined)) Some(widths.flatten.sum)
-    else None
   }
 
   /** Unsplittable-input spread (r17, guide §2.5): the per-row hash

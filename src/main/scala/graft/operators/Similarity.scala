@@ -397,58 +397,84 @@ object Similarity {
     *  - assignment = argmax of 2c·x − ‖c‖² (⇔ min L2 distance) over
     *    literal integer centroids, first-max ties ([[nearestOfDots]]) —
     *    one codegen'd scan, no join.
-    *  - update = floor(Σx / n) per (cluster, dim): the Long sum is exact,
-    *    the IEEE division of two exact integers is correctly rounded in
-    *    both engines, and floor of it is therefore identical (quotients
-    *    ≤ scale, so the ulp argument has ~1e9 of slack). Empty clusters
-    *    keep their previous centroid.
+    *  - update = [[floorMeans]]: floor(Σx / n) per (cluster, dim).
+    *    Empty clusters keep their previous centroid.
     *
-    * Scale contract: per iteration one cached-scan +
-    * ONE (cid, pos) hash-aggregate whose shuffle carries k·dim partial
-    * sums after map-side combine; centroids live driver-side as plan
-    * literals (k·dim longs). `trainCap` bounds the training set to the
-    * trainCap smallest-id rows (deterministic, oracle-replayable as an
-    * ORDER BY id LIMIT CTE prefix) — quality needs a sample, not the
-    * corpus, and the cap is what keeps the n·M < 2^53 update-sum guard
-    * satisfiable as the corpus grows.
+    * Scale contract ([[lloydFixedPoint]]): per iteration one cached scan
+    * of the `trainCap` smallest-id rows + ONE (cid, pos) hash-aggregate
+    * whose shuffle carries k·dim partial sums after map-side combine;
+    * centroids live driver-side as plan literals (k·dim longs).
     */
   def kmeansTrainFixedPoint(corpus: DataFrame, k: Int, maxIter: Int = 3,
                             scale: Long = 1000000L,
                             trainCap: Int = 100000,
                             idCol: String = "vec_id", vecCol: String = "embedding")
-      : Array[Array[Long]] = {
-    // deterministic built-in trainCap: the training set is the
-    // `trainCap` SMALLEST-id rows —
-    // an ORDER BY id LIMIT prefix the oracle replays as a CTE, planned
-    // as TakeOrderedAndProject (bounded per-partition heaps, one merge,
-    // no global sort). Corpus growth can then neither trip the n·M <
-    // 2^53 guard nor turn each Lloyd iteration into a full-corpus scan
-    // — the capped set is persisted and each iteration re-reads the
-    // cache, not the corpus.
+      : Array[Array[Long]] =
+    lloydFixedPoint("kmeansTrainFixedPoint", corpus, k, maxIter, scale,
+        trainCap, idCol, vecCol)(identity) { (vecs, cents) =>
+      // argmax before the explode: in the explode's own select it would
+      // run once per element instead of once per vector
+      vecs.withColumn("cell", nearestOfDots(fixedScores(cents)))
+        .select(col("cell"), posexplode(col("xd")).as(Seq("p", "x")))
+    }
+
+  /** The Lloyd loop both fixed-point trainers share. The training set
+    * is the `trainCap` SMALLEST-id rows (an ORDER BY id LIMIT prefix the
+    * oracle replays as a CTE, planned as TakeOrderedAndProject), so
+    * corpus growth can neither trip the n·M < 2^53 guard nor make an
+    * iteration scan the corpus: each one re-reads the persisted set.
+    * Init = the `k` smallest-id rows, cut into centroid cells by
+    * `cellsOf`; `eStep` emits one (cell, p, x) row per vector element
+    * for [[floorMeans]]. The first update carries the [[Magnitude]]
+    * guard; with no iteration, one aggregate of its own does.
+    */
+  private def lloydFixedPoint(op: String, corpus: DataFrame, k: Int,
+      maxIter: Int, scale: Long, trainCap: Int, idCol: String,
+      vecCol: String)(cellsOf: Array[Array[Long]] => Array[Array[Long]])(
+      eStep: (DataFrame, Array[Array[Long]]) => DataFrame): Array[Array[Long]] = {
     val vecs = quantized(corpus, scale, idCol, vecCol)
       .orderBy(col("id")).limit(trainCap).persist()
-    requireFixedPointBounds(vecs, scale)
-    def toArr(r: org.apache.spark.sql.Row): Array[Long] =
-      r.getSeq[Double](1).map(_.toLong).toArray
-    var centroids: Array[Array[Long]] =
-      vecs.orderBy(col("id")).limit(k).collect().sortBy(_.getLong(0)).map(toArr)
-    if (centroids.isEmpty) { vecs.unpersist(); return centroids } // empty corpus
-    for (_ <- 0 until maxIter) {
-      val updated = vecs
-        .withColumn("cid", nearestOfDots(fixedScores(centroids)))
-        .select(col("cid"), posexplode(col("xd")).as(Seq("pos", "x")))
-        .groupBy(col("cid"), col("pos"))
-        .agg(sum(col("x").cast("long")).as("s"), count(lit(1)).as("n"))
-        .collect().groupBy(_.getInt(0))
-        .map { case (cid, rows) =>
-          cid -> rows.sortBy(_.getInt(1))
-            .map(r => math.floor(r.getLong(2).toDouble / r.getLong(3)).toLong)
-        }
-      centroids = centroids.indices
-        .map(i => updated.getOrElse(i, centroids(i))).toArray
+    try {
+      if (maxIter <= 0) Magnitude.of(vecs.agg(Magnitude.xd.head, Magnitude.xd.tail: _*)
+        .collect()).check(op, scale)
+      val init = vecs.orderBy(col("id")).limit(k).collect().sortBy(_.getLong(0))
+        .map(_.getSeq[Double](1).map(_.toLong).toArray)
+      if (init.isEmpty) return init
+      var cells = cellsOf(init)
+      for (i <- 0 until maxIter) {
+        val means = floorMeans(eStep(vecs, cells), Seq("cell"),
+          guard = if (i == 0) Some((op, scale)) else None)
+        cells = cells.indices.map(c => means.getOrElse(Seq(c.toLong), cells(c))).toArray
+      }
+      cells
+    } finally vecs.unpersist()
+  }
+
+  /** The fixed-point centroid update every trainer and cut shares. `rows`
+    * holds (keys…, p, x): one row per element x at position p of a
+    * quantized vector. Per key tuple the centroid is floor(Σx / n) per
+    * position, in p order: the Long sum is exact, the IEEE division of
+    * two exact integers is correctly rounded in both engines, and floor
+    * of it is therefore identical (quotients ≤ scale, so the ulp
+    * argument has ~1e9 of slack). One (keys…, p) hash-aggregate; keys
+    * read back as Longs. With a `guard` (op, scale) the same aggregate
+    * carries the rows' [[Magnitude]] (dim = max p + 1, rows = the
+    * counts at p = 0), checked before any centroid is computed.
+    */
+  private def floorMeans(rows: DataFrame, keys: Seq[String],
+                         guard: Option[(String, Long)] = None)
+      : Map[Seq[Long], Array[Long]] = {
+    val nk = keys.length
+    val groups = rows
+      .groupBy(keys.map(col(_).cast("long")) :+ col("p"): _*)
+      .agg(sum(Magnitude.masked(col("x")).cast("long")), count(lit(1)),
+        max(abs(col("x"))), max(col("p") + 1), count(when(col("p") === 0, 1)))
+      .collect()
+    guard.foreach { case (op, scale) => Magnitude.of(groups).check(op, scale) }
+    groups.groupBy(r => (0 until nk).map(r.getLong)).map { case (key, rs) =>
+      key -> rs.sortBy(_.getInt(nk))
+        .map(r => math.floor(r.getLong(nk + 1).toDouble / r.getLong(nk + 2)).toLong)
     }
-    vecs.unpersist()
-    centroids
   }
 
   /** (id, xd) with xd = floor(x·scale) per dim, carried as exact-integer
@@ -462,35 +488,53 @@ object Similarity {
     transform(vec.cast("array<double>"),
       x => floor(x * lit(scale.toDouble)).cast("double"))
 
-  /** The fixed-point trainers' exactness precondition, enforced LOUDLY
-    * (the graph family's 2⁶³-guard convention): every score/sum below
-    * is exact integer arithmetic in doubles ONLY while intermediates
-    * stay under 2⁵³. The score 2c·x − ‖c‖² is bounded by 3·M²·dim
-    * (2·M²·dim for the dot chain plus M²·dim for the norm), so
-    * max|⌊x·scale⌋| must satisfy 3·M²·dim < 2⁵³; the update sums need
-    * n·M < 2⁵³. Out-of-range embeddings (or a scale too large for the
-    * data) must fail with the offending magnitude named, never train
-    * on silently-rounded arithmetic. One aggregate over the (already
-    * eagerly consumed) quantized table — the trainers are driver
-    * loops, so the extra job is one of dozens.
+  /** The fixed-point exactness precondition over quantized rows, enforced
+    * LOUDLY (the graph family's 2⁶³-guard convention): every score/sum
+    * of the trainers and cuts is exact integer arithmetic in doubles
+    * ONLY while intermediates stay under 2⁵³. The score 2c·x − ‖c‖² is
+    * bounded by 3·M²·dim (2·M²·dim for the dot chain plus M²·dim for
+    * the norm), so M = max|⌊x·scale⌋| must satisfy 3·M²·dim < 2⁵³; the
+    * update sums need n·M < 2⁵³. Out-of-range embeddings (or a scale too
+    * large for the data) must fail with the offending magnitude named,
+    * never train on silently-rounded arithmetic. No job of its own: the
+    * statistics ride an aggregate the operator already runs (a trainer's
+    * first [[floorMeans]], a cut's [[listCensus]]). `m` is None when no
+    * row has an element, and nothing is checked.
     */
-  private def requireFixedPointBounds(vecs: DataFrame, scale: Long): Unit = {
-    val r = vecs.agg(
-      max(array_max(transform(col("xd"), x => abs(x)))).as("m"),
-      max(size(col("xd"))).as("dim"),
-      count(lit(1)).as("n")).head()
-    if (!r.isNullAt(0)) {
-      val (m, dim, n) = (r.getDouble(0), r.getInt(1), r.getLong(2))
+  private final case class Magnitude(m: Option[Double], dim: Int, n: Long) {
+    def check(op: String, scale: Long): Unit = m.foreach { m =>
       val mMax = math.sqrt(math.pow(2, 53) / (3.0 * math.max(dim, 1)))
       require(m <= mMax,
-        f"fixed-point trainer: quantized magnitude $m%.0f exceeds the " +
+        f"$op: quantized magnitude $m%.0f exceeds the " +
           f"exactness bound $mMax%.0f for dim=$dim (scale=$scale) — " +
           "2c·x − ‖c‖² scores would pass 2^53 and silently stop being " +
           "integer arithmetic; lower the scale or normalize the vectors")
       require(n.toDouble * m < math.pow(2, 53),
-        s"fixed-point trainer: n=$n rows at magnitude $m overflow the " +
+        s"$op: n=$n rows at magnitude $m overflow the " +
           "2^53-exact update sums; cap the training sample")
     }
+  }
+
+  private object Magnitude {
+    /** Aggregates of (max |x|, max size, rows) over the quantized `xd`. */
+    def xd: Seq[Column] = Seq(max(array_max(transform(col("xd"), x => abs(x)))),
+      max(size(col("xd"))), count(lit(1)))
+
+    /** From aggregate rows ending in (m, dim, n), one row per group. */
+    def of(rows: Array[org.apache.spark.sql.Row]): Magnitude = {
+      val w = rows.headOption.fold(0)(_.length)
+      Magnitude(rows.filterNot(_.isNullAt(w - 3)).map(_.getDouble(w - 3)).maxOption,
+        rows.filterNot(_.isNullAt(w - 2)).map(_.getInt(w - 2)).maxOption.getOrElse(0),
+        rows.map(_.getLong(w - 1)).sum)
+    }
+
+    /** `x`, or null past the loosest bound (dim = 1): such a value fails
+      * the check at any dim, and masked it cannot overflow the Long sum
+      * of an aggregate that carries the check (ANSI mode would raise
+      * that overflow before the named bound).
+      */
+    def masked(x: Column): Column =
+      when(abs(x) <= math.sqrt(math.pow(2, 53) / 3.0), x)
   }
 
   /** The exact-integer score array over a fixed-point codebook:
@@ -597,10 +641,10 @@ object Similarity {
     * (gates s08 and s23). All m subspace argmins in ONE codegen'd
     * kernel pass ([[graft.functions.PqEncode]] over exact-integer doubles — every
     * score ≤ ~1.2e13 ≪ 2^53, so the kernel's float arithmetic IS
-    * integer arithmetic), then ONE (s, cid, pos) hash-aggregate per
-    * iteration carrying exact Long sums; floor-div updates, empty
-    * clusters keep their centroid, init = the `codebookSize`
-    * smallest-id rows sliced per subspace (replayable ORDER BY).
+    * integer arithmetic), then ONE (s, cid, pos) [[floorMeans]]
+    * aggregate per iteration; empty clusters keep their centroid, init =
+    * the `codebookSize` smallest-id rows sliced per subspace
+    * ([[lloydFixedPoint]], replayable ORDER BY).
     */
   def pqTrainFixedPoint(corpus: DataFrame, dim: Int, m: Int = 4,
                         codebookSize: Int = 8, maxIter: Int = 2,
@@ -610,43 +654,23 @@ object Similarity {
       : Array[Array[Array[Long]]] = {
     require(dim % m == 0, s"dim $dim must divide into $m subspaces")
     val sub = dim / m
-    // same deterministic ORDER BY id LIMIT trainCap + persist as
-    // [[kmeansTrainFixedPoint]] — oracle-replayable cap, cached Lloyd
-    val vecs = quantized(corpus, scale, idCol, vecCol)
-      .orderBy(col("id")).limit(trainCap).persist()
-    requireFixedPointBounds(vecs, scale)
-    val initRows = vecs.orderBy(col("id")).limit(codebookSize).collect()
-      .sortBy(_.getLong(0))
-      .map(_.getSeq[Double](1).map(_.toLong).toArray)
-    // empty corpus: empty per-subspace codebooks, nothing to train —
-    // the kmeansTrainFixedPoint convention (search rejects the shape)
-    if (initRows.isEmpty) {
-      vecs.unpersist()
-      return Array.fill(m)(Array.empty[Array[Long]])
-    }
-    var cbs: Array[Array[Array[Long]]] = Array.tabulate(m) { s =>
-      initRows.map(_.slice(s * sub, (s + 1) * sub))
-    }
-    for (_ <- 0 until maxIter) {
-      val updated = vecs
-        .select(col("xd"),
-          posexplode(pqEncodeFixed(cbs, col("xd"))).as(Seq("s", "cid")))
-        .select(col("s"), col("cid"),
+    // cell s·n + c = subspace s of centroid c, n = the init row count;
+    // an empty corpus gives empty per-subspace codebooks, nothing to
+    // train — the kmeansTrainFixedPoint convention (search rejects the
+    // shape)
+    def split(cells: Array[Array[Long]]) = cells.grouped(cells.length / m).toArray
+    val cells = lloydFixedPoint("pqTrainFixedPoint", corpus, codebookSize,
+        maxIter, scale, trainCap, idCol, vecCol) { init =>
+      Array.tabulate(m)(s => init.map(_.slice(s * sub, (s + 1) * sub))).flatten
+    } { (vecs, cells) =>
+      vecs.select(col("xd"), posexplode(pqEncodeFixed(split(cells), col("xd")))
+          .as(Seq("s", "cid")))
+        .select(col("s"), (col("s") * (cells.length / m) + col("cid")).as("cell"),
           posexplode(slice(col("xd"), col("s") * lit(sub) + 1, lit(sub)))
             .as(Seq("pos", "x")))
-        .groupBy(col("s"), col("cid"), col("pos"))
-        .agg(sum(col("x").cast("long")).as("sm"), count(lit(1)).as("n"))
-        .collect().groupBy(r => (r.getInt(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          key -> rows.sortBy(_.getInt(2))
-            .map(r => math.floor(r.getLong(3).toDouble / r.getLong(4)).toLong)
-        }
-      cbs = Array.tabulate(m) { s =>
-        cbs(s).indices.map(c => updated.getOrElse((s, c), cbs(s)(c))).toArray
-      }
+        .select(col("cell"), (col("s") * sub + col("pos")).as("p"), col("x"))
     }
-    vecs.unpersist()
-    cbs
+    if (cells.isEmpty) Array.fill(m)(Array.empty[Array[Long]]) else split(cells)
   }
 
   /** [[pqEncodeCol]] over a fixed-point codebook: the (2c, ‖c‖²)
@@ -736,7 +760,7 @@ object Similarity {
     *     better than it would raw vectors).
     *
     * Residual magnitudes are ≤ 2·M, so the established 2^53 bounds hold
-    * with 4× headroom consumed ([[requireFixedPointBounds]] re-checks
+    * with 4× headroom consumed ([[Magnitude]] re-checks
     * inside the PQ trainer). Both trainers apply the same deterministic
     * `trainCap` id-prefix, replayed by the oracle as one shared CTE.
     *
@@ -1075,7 +1099,7 @@ object Similarity {
     * fixed-point codebook: dist2 = ‖xd‖² − max_j (2c_j·xd − ‖c_j‖²) =
     * ‖xd − c_best‖² in micro-units² — the E-step's score complemented
     * to a distance, every term an integer below 2^53 (‖xd‖² ≤ M²·dim
-    * and the score bound is [[requireFixedPointBounds]]'s), so both
+    * and the score bound is [[Magnitude]]'s), so both
     * engines compute it bit-identically. One codegen'd scan, no join —
     * the textbook "distance trending up" drift measurement over a
     * boundary's DELTA vectors (delta-sized, never the corpus).
@@ -1252,8 +1276,8 @@ object Similarity {
     // enough to overflow the sum is exactly the event it must not
     // mis-measure — out-of-range input fails loud instead. The bound
     // is the ENVELOPE's own (dim·M² < 2⁵³, per-row exactness), not
-    // requireFixedPointBounds's (r16 advice): the trainer guard's
-    // second clause bounds n·M update SUMS that do not exist here,
+    // the trainers' Magnitude guard (r16 advice): its second clause
+    // bounds n·M update SUMS that do not exist here,
     // and would fail loudly on very large corpora whose envelope
     // arithmetic is perfectly exact.
     // ONE aggregate job (r17, guide §1.2 — this ran per boundary as a
@@ -1315,133 +1339,143 @@ object Similarity {
     * guaranteed movement use [[splitListsEven]], whose rank chunks
     * cannot land empty.
     *
-    * Movement: the census is one groupBy(cid).count (bounded nLists
-    * rows to the driver); seeds are 2·|split| bounded rows; each Lloyd
-    * iteration is ONE scan of the split lists' members (codegen'd
-    * per-list argmax over literal sub-centroids — a CASE keyed by cid,
-    * no join) whose update shuffle carries ≤ 2·|split|·dim partials
-    * after map-side combine; un-split rows never enter any of it. Cost
-    * is Θ(Σ size of split lists), never a corpus pass. Every number —
-    * census, decision, seeds, scores, floor-means, final argmax — is
-    * an exact integer, so the DuckDB oracle replays WHICH lists split
-    * AND where every member lands (the s20/s29 standard: decision and
-    * effect both hash-pinned).
-    *
-    * `caseMaxLists` (r14 verdict #6): at or below it the per-row
-    * sub-centroid score pair is a codegen'd CASE over the split-cid
-    * set; above it the scores route through a broadcast join against
-    * the 2·|split| sub-centroid rows — a CASE hundreds of branches
-    * wide would blow past JVM method-size limits into interpreted
-    * fallback. Both routes compute identical exact-integer scores
-    * (RobustnessSpec pins bit-equality at an every-list-splits bar).
+    * Movement: the census is one groupBy(cid) aggregate (bounded nLists
+    * rows to the driver, carrying the exactness guard); seeds are
+    * 2·|split| bounded rows; each Lloyd iteration is ONE scan of the
+    * split lists' members (codegen'd per-list argmax over sub-centroid
+    * array literals indexed by cid — no join, no per-list branch, so
+    * any number of split lists plans the same) whose update shuffle
+    * carries ≤ 2·|split|·dim partials after map-side combine; un-split
+    * rows never enter any of it. Cost is Θ(Σ size of split lists),
+    * never a corpus pass. Every number — census, decision, seeds,
+    * scores, floor-means, final argmax — is an exact integer, so the
+    * DuckDB oracle replays WHICH lists split AND where every member
+    * lands (the s20/s29 standard: decision and effect both hash-pinned).
     */
   def rebalanceLists(corpus: DataFrame, codebook: Array[Array[Long]],
                      policy: RebalancePolicy, maxIter: Int = 2,
                      scale: Long = 1000000L,
-                     idCol: String = "vec_id", vecCol: String = "embedding",
-                     caseMaxLists: Int = 64)
+                     idCol: String = "vec_id", vecCol: String = "embedding")
       : (DataFrame, Array[Array[Long]]) = {
     val k = codebook.length
     require(k > 0, "rebalanceLists: empty codebook — nothing to rebalance")
-    val q = quantized(corpus, scale, idCol, vecCol)
-      .withColumn("cid0", nearestOfDots(fixedScores(codebook)).cast("long"))
-      .persist()
-    requireFixedPointBounds(q.select(col("id"), col("xd")), scale)
-    val sizes = q.groupBy(col("cid0")).count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1))
-    val nTot = sizes.map(_._2).sum
-    val splitCids = sizes.collect {
+    val (q, sizes, _) = listCensus("rebalanceLists", corpus, codebook, scale,
+      idCol, vecCol)
+    splitCut(q, sizes, codebook, policy) { (members, _) =>
+      // seeds: the 2 smallest-id members of each split list (bounded
+      // 2·|split| rows — the id-order init convention of every trainer)
+      val seedRows = members
+        .withColumn("rn", row_number().over(
+          Window.partitionBy(col("cid0")).orderBy(col("id"))))
+        .filter(col("rn") <= 2)
+        .select(col("cid0"), col("rn"), col("xd")).collect()
+      var sub: Map[Long, Array[Array[Long]]] = seedRows
+        .groupBy(_.getLong(0))
+        .map { case (cid, rows) =>
+          cid -> rows.sortBy(_.getInt(1))
+            .map(_.getSeq[Double](2).map(_.toLong).toArray)
+        }
+      // per-row score pair against the row's OWN list's sub-centroids:
+      // [[fixedScores]]' 2c and Σc² doubles in array literals indexed by
+      // cid0 — one lookup per row whatever the split-set size, no join
+      def withSub(df: DataFrame, cents: Map[Long, Array[Array[Long]]]): DataFrame = {
+        val at = col("cid0").cast("int") + 1
+        df.withColumn("part", nearestOfDots(array((0 to 1).map { j =>
+          val c = Seq.tabulate(k)(i => cents.get(i.toLong).fold(Array.empty[Long])(_(j)))
+          dot(col("xd"), element_at(typedLit(c.map(_.map(x => (2 * x).toDouble).toSeq)), at)) -
+            element_at(typedLit(c.map(_.map(x => x.toDouble * x.toDouble).sum)), at)
+        }: _*)))
+      }
+      for (_ <- 0 until maxIter) {
+        val updated = floorMeans(withSub(members, sub)
+          .select(col("cid0"), col("part"), posexplode(col("xd")).as(Seq("p", "x"))),
+          Seq("cid0", "part"))
+        sub = sub.map { case (cid, cents) =>
+          cid -> Array(
+            updated.getOrElse(Seq(cid, 0L), cents(0)),
+            updated.getOrElse(Seq(cid, 1L), cents(1)))
+        }
+      }
+      (withSub(members, sub), sub)
+    }
+  }
+
+  /** The cut both list splitters share, over a [[listCensus]] frame `q`
+    * (unpersisted here): `policy` picks the lists to split, and `cut`
+    * gives each of their members a `part` and each list its part
+    * centroids. Part 0 keeps the list id and replaces its centroid; part
+    * j ≥ 1 gets the dense new id base(cid) + j − 1 in (cid, part) order,
+    * its centroid appended in that order. Returns the movement (one
+    * `(id, old_cid, cid)` row per corpus vector) and the codebook.
+    */
+  private def splitCut(q: DataFrame, census: Map[Long, Long],
+                       codebook: Array[Array[Long]], policy: RebalancePolicy)(
+      cut: (DataFrame, Seq[Long]) => (DataFrame, Map[Long, Array[Array[Long]]]))
+      : (DataFrame, Array[Array[Long]]) = {
+    val k = codebook.length
+    val nTot = census.values.sum
+    val splitCids = census.toSeq.collect {
       case (cid, n) if policy.splits(n, k, nTot) => cid
     }.sorted
-    if (splitCids.isEmpty) {
-      val out = q.select(col("id"), col("cid0").as("old_cid"),
-        col("cid0").as("cid"))
-      q.unpersist() // plan stays valid — the cache is an optimization only
-      return (out, codebook)
-    }
-    val members = q.filter(col("cid0").isin(splitCids: _*))
-    // seeds: the 2 smallest-id members of each split list (bounded
-    // 2·|split| rows — the id-order init convention of every trainer)
-    val seedRows = members
-      .withColumn("rn", row_number().over(
-        Window.partitionBy(col("cid0")).orderBy(col("id"))))
-      .filter(col("rn") <= 2)
-      .select(col("cid0"), col("rn"), col("xd")).collect()
-    var sub: Map[Long, Array[Array[Long]]] = seedRows
-      .groupBy(_.getLong(0))
-      .map { case (cid, rows) =>
-        cid -> rows.sortBy(_.getInt(1))
-          .map(_.getSeq[Double](2).map(_.toLong).toArray)
-      }
-    // per-row score pair against the row's OWN list's sub-centroids.
-    // Two routes, same exact-integer scores either way (r14 verdict #6):
-    // at or below `caseMaxLists` split lists, a codegen'd CASE over the
-    // split-cid set (no join, no shuffle — the hot path for the
-    // handful-of-hot-lists case a census bar produces); above it, a
-    // BROADCAST JOIN against the 2·|split| sub-centroid rows — a CASE
-    // hundreds of branches wide would stress codegen (method-size
-    // limits force interpreted fallback) for zero locality gain. The
-    // join route precomputes the same driver-side doubles fixedScores
-    // embeds (2c and Σc²), so both routes produce bit-identical `sub`
-    // (RobustnessSpec pins it at an every-list-splits bar).
-    def subScores(cents: Map[Long, Array[Array[Long]]]): Column =
-      splitCids.tail.foldLeft(
-        when(col("cid0") === lit(splitCids.head),
-          fixedScores(cents(splitCids.head)))) { (acc, cid) =>
-        acc.when(col("cid0") === lit(cid), fixedScores(cents(cid)))
-      }
-    def withSub(df: DataFrame,
-                cents: Map[Long, Array[Array[Long]]]): DataFrame =
-      if (splitCids.size <= caseMaxLists)
-        df.withColumn("sub", nearestOfDots(subScores(cents)))
-      else {
-        val session = df.sparkSession
-        import session.implicits._
-        val cdf = broadcast(cents.toSeq.map { case (c, arr) =>
-          (c,
-            arr(0).map(x => (2 * x).toDouble).toSeq,
-            arr(0).map(x => x.toDouble * x.toDouble).sum,
-            arr(1).map(x => (2 * x).toDouble).toSeq,
-            arr(1).map(x => x.toDouble * x.toDouble).sum)
-        }.toDF("cid0", "__c0x2", "__cc0", "__c1x2", "__cc1"))
-        val s0 = dot(col("xd"), col("__c0x2")) - col("__cc0")
-        val s1 = dot(col("xd"), col("__c1x2")) - col("__cc1")
-        df.join(cdf, Seq("cid0"))
-          .withColumn("sub", when(s0 >= s1, 0).otherwise(1)) // ties → 0,
-          .drop("__c0x2", "__cc0", "__c1x2", "__cc1") // = first-max
-      }
-    for (_ <- 0 until maxIter) {
-      val updated = withSub(members, sub)
-        .select(col("cid0"), col("sub"), posexplode(col("xd")).as(Seq("pos", "x")))
-        .groupBy(col("cid0"), col("sub"), col("pos"))
-        .agg(sum(col("x").cast("long")).as("s"), count(lit(1)).as("n"))
-        .collect()
-        .groupBy(r => (r.getLong(0), r.getInt(1)))
-        .map { case (key, rows) =>
-          key -> rows.sortBy(_.getInt(2))
-            .map(r => math.floor(r.getLong(3).toDouble / r.getLong(4)).toLong)
-        }
-      sub = sub.map { case (cid, cents) =>
-        cid -> Array(
-          updated.getOrElse((cid, 0), cents(0)),
-          updated.getOrElse((cid, 1), cents(1)))
-      }
-    }
-    val newCidOf: Map[Long, Long] =
-      splitCids.zipWithIndex.map { case (c, i) => c -> (k + i).toLong }.toMap
-    val moved = withSub(members, sub)
-      .select(col("id"), col("cid0").as("old_cid"),
-        when(col("sub") === 0, col("cid0"))
-          .otherwise(element_at(typedLit(newCidOf), col("cid0"))).as("cid"))
-    val untouched = q.filter(!col("cid0").isin(splitCids: _*))
-      .select(col("id"), col("cid0").as("old_cid"), col("cid0").as("cid"))
-    val out = untouched.unionByName(moved)
-    val newCb: Array[Array[Long]] =
-      codebook.zipWithIndex.map { case (c, i) =>
-        if (newCidOf.contains(i.toLong)) sub(i.toLong)(0) else c
-      } ++ splitCids.map(c => sub(c)(1))
-    q.unpersist() // one re-scan when `out` is consumed — the cache only
-    (out, newCb)  // served the census/seed/Lloyd driver loop
+    def stay(df: DataFrame) =
+      df.select(col("id"), col("cid0").as("old_cid"), col("cid0").as("cid"))
+    // the plans stay valid after unpersist: the cache only served the
+    // census and the cut's driver-side passes
+    if (splitCids.isEmpty) { q.unpersist(); return (stay(q), codebook) }
+    val (parts, cents) = cut(q.filter(col("cid0").isin(splitCids: _*)), splitCids)
+    val baseOf: Map[Long, Long] = splitCids
+      .scanLeft(k.toLong) { case (acc, c) => acc + cents(c).length - 1 }
+      .zip(splitCids).map { case (b, c) => c -> b }.toMap
+    val moved = parts.select(col("id"), col("cid0").as("old_cid"),
+      when(col("part") === 0, col("cid0"))
+        .otherwise(element_at(typedLit(baseOf), col("cid0")) + col("part") - 1)
+        .as("cid"))
+    val newCb = codebook.zipWithIndex.map { case (c, i) =>
+      cents.get(i.toLong).fold(c)(_(0))
+    } ++ splitCids.flatMap(c => cents(c).tail)
+    q.unpersist()
+    (stay(q.filter(!col("cid0").isin(splitCids: _*))).unionByName(moved), newCb)
+  }
+
+  /** The list census the coarse-list cuts share: the quantized corpus
+    * (id, xd, cid0) listed by its fresh argmax under `codebook`, or by
+    * the supplied (id, cid) `state` (left join: a corpus row the state
+    * lacks gets a null cid0), persisted, then ONE groupBy(cid0)
+    * aggregate whose rows also carry the [[Magnitude]] guard, checked
+    * here before anything is returned. Returns the persisted frame (the
+    * caller unpersists it), list → size, and the null-cid0 row count.
+    */
+  private def listCensus(op: String, corpus: DataFrame,
+                         codebook: Array[Array[Long]], scale: Long,
+                         idCol: String, vecCol: String,
+                         state: Option[DataFrame] = None)
+      : (DataFrame, Map[Long, Long], Long) = {
+    val x = quantized(corpus, scale, idCol, vecCol)
+    val q = state.fold(x.withColumn("cid0",
+        nearestOfDots(fixedScores(codebook)).cast("long"))) { st =>
+      x.join(st.select(col("id"), col("cid").as("cid0")), Seq("id"), "left")
+    }.persist()
+    val rows = q.groupBy(col("cid0")).agg(Magnitude.xd.head, Magnitude.xd.tail: _*)
+      .collect()
+    Magnitude.of(rows).check(op, scale)
+    val (listed, orphans) = rows.partition(!_.isNullAt(0))
+    (q, listed.map(r => r.getLong(0) -> r.getLong(3)).toMap,
+      orphans.map(_.getLong(3)).sum)
+  }
+
+  /** Fails `op` loudly, naming the count, when `state` holds an id
+    * `corpusIds` lacks: such a row would vanish or be stranded
+    * (`consequence`) — the caller paired a stale corpus with a newer
+    * `rows` table. One anti-join count over id columns only.
+    */
+  private def requireNoGhosts(op: String, state: DataFrame,
+                              corpusIds: DataFrame, rows: String,
+                              consequence: String): Unit = {
+    val ghosts = state.select(col("id"))
+      .join(corpusIds, Seq("id"), "left_anti").count()
+    require(ghosts == 0L,
+      s"$op: $ghosts $rows rows have no corpus vector — $consequence; " +
+        s"the caller paired a stale corpus with a newer $rows")
   }
 
   /** IVF list-skew split, LOAD-BALANCED (gate s33) — the splitter the
@@ -1504,111 +1538,64 @@ object Similarity {
     // each list, or its movement would silently mass-reassign rows the
     // census never tracked. Without `state` (the one-shot gates) the
     // fresh E-step IS the state, by the maintenance theorem.
-    val q = (state match {
-      case None => quantized(corpus, scale, idCol, vecCol)
-        .withColumn("cid0", nearestOfDots(fixedScores(codebook)).cast("long"))
-      case Some(st) => quantized(corpus, scale, idCol, vecCol)
-        .join(st.select(col("id"), col("cid").as("cid0")), Seq("id"), "left")
-    }).persist()
-    requireFixedPointBounds(q.select(col("id"), col("xd")), scale)
+    val (q, census, orphans) = listCensus("splitListsEven", corpus, codebook,
+      scale, idCol, vecCol, state)
     state.foreach { st =>
       // BOTH directions (r14 advice): a corpus row without a state row
-      // would enter the cut with a null list, and a state row without a
-      // corpus row is a seat the census would count but the cut could
-      // never move — either way the caller paired a stale state with a
-      // mismatched corpus. Two bounded counts (assignment-table sized,
-      // never vector payloads), failing loudly with the direction named.
-      val orphans = q.filter(col("cid0").isNull).count()
+      // enters the census as the null list (counted by the census
+      // itself), and a state row without a corpus row is a seat the
+      // census would count but the cut could never move — either way
+      // the caller paired a stale state with a mismatched corpus.
       require(orphans == 0L,
         s"splitListsEven: $orphans corpus rows missing from the supplied " +
           "assignment state — the caller paired a stale state with a " +
           "newer corpus; refusing to silently drop them")
-      val ghosts = st.select(col("id"))
-        .join(q.select(col("id")), Seq("id"), "left_anti").count()
-      require(ghosts == 0L,
-        s"splitListsEven: $ghosts state rows have no corpus vector — " +
-          "the caller paired a stale corpus with a newer state; their " +
-          "seats would be censused but uncuttable")
+      requireNoGhosts("splitListsEven", st, q.select(col("id")), "state",
+        "their seats would be censused but uncuttable")
     }
-    val census = q.groupBy(col("cid0")).count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val nTot = census.values.sum
-    val splitCids = census.toSeq.collect {
-      case (cid, n) if policy.splits(n, k, nTot) => cid
-    }.sorted
-    if (splitCids.isEmpty) {
-      val out = q.select(col("id"), col("cid0").as("old_cid"),
-        col("cid0").as("cid"))
-      q.unpersist()
-      return (out, codebook)
+    splitCut(q, census, codebook, policy) { (members, splitCids) =>
+      val target = (census.values.sum + k - 1) / k // T = ⌈average list size⌉
+      // a list can cross the bar yet have size ≤ T (tiny-corpus shapes:
+      // bar·avg below the ceiling average) — ⌈size/T⌉ would then be ONE
+      // chunk, a "split" that moves nothing while the census stays
+      // crossed, re-triggering a monitor forever. A crossing list always
+      // cuts into at least two chunks; halving strictly shrinks, so the
+      // monitor still terminates.
+      val nChunksOf: Map[Long, Long] =
+        splitCids.map(c =>
+          c -> math.max(2L, (census(c) + target - 1) / target)).toMap
+      // the split axis per list: the dimension with max integer spread
+      // (ties → lower dim) — one bounded aggregate (|split|·dim rows)
+      val axisOf: Map[Long, Int] = members
+        .select(col("cid0"), posexplode(col("xd")).as(Seq("pos", "x")))
+        .groupBy(col("cid0"), col("pos"))
+        .agg((max(col("x")) - min(col("x"))).as("spread"))
+        .collect().groupBy(_.getLong(0))
+        .map { case (cid, rows) =>
+          cid -> rows.map(r => (r.getInt(1), r.getDouble(2)))
+            .minBy { case (pos, spread) => (-spread, pos) }._1
+        }
+      // per-list scalars enter the plan as MAP literals (element_at is one
+      // codegen'd lookup whatever the split-set size — the r14 verdict's
+      // CASE-breadth concern never arises for scalar routing; the chunk
+      // arithmetic keeps the exact float shape the oracle replays:
+      // integer-exact product in double, then double divide, then floor)
+      val ncD = typedLit(nChunksOf.map { case (c, n) => c -> n.toDouble })
+      val czD = typedLit(splitCids.map(c => c -> census(c).toDouble).toMap)
+      val ranked = members
+        .withColumn("ax",
+          element_at(col("xd"), element_at(typedLit(axisOf), col("cid0")) + 1))
+        .withColumn("rk", row_number().over(
+          Window.partitionBy(col("cid0")).orderBy(col("ax"), col("id"))))
+        .withColumn("part",
+          floor((col("rk") - 1) * element_at(ncD, col("cid0")) /
+            element_at(czD, col("cid0"))).cast("long"))
+      // chunk floor-mean centroids (bounded: Σ nChunks ≤ nTot/T + |split|)
+      val cents = floorMeans(ranked.select(col("cid0"), col("part"),
+        posexplode(col("xd")).as(Seq("p", "x"))), Seq("cid0", "part"))
+      (ranked, splitCids.map(c =>
+        c -> (0L until nChunksOf(c)).map(ch => cents(Seq(c, ch))).toArray).toMap)
     }
-    val target = (nTot + k - 1) / k // T = ⌈average list size⌉
-    // a list can cross the bar yet have size ≤ T (tiny-corpus shapes:
-    // bar·avg below the ceiling average) — ⌈size/T⌉ would then be ONE
-    // chunk, a "split" that moves nothing while the census stays
-    // crossed, re-triggering a monitor forever. A crossing list always
-    // cuts into at least two chunks; halving strictly shrinks, so the
-    // monitor still terminates.
-    val nChunksOf: Map[Long, Long] =
-      splitCids.map(c =>
-        c -> math.max(2L, (census(c) + target - 1) / target)).toMap
-    // dense new ids for chunks ≥ 1, in (cid, chunk) order:
-    // newCid = base(cid) + chunk − 1
-    val baseOf: Map[Long, Long] = splitCids
-      .scanLeft(k.toLong) { case (acc, c) => acc + nChunksOf(c) - 1 }
-      .zip(splitCids).map { case (b, c) => c -> b }.toMap
-    val members = q.filter(col("cid0").isin(splitCids: _*))
-    // the split axis per list: the dimension with max integer spread
-    // (ties → lower dim) — one bounded aggregate (|split|·dim rows)
-    val axisOf: Map[Long, Int] = members
-      .select(col("cid0"), posexplode(col("xd")).as(Seq("pos", "x")))
-      .groupBy(col("cid0"), col("pos"))
-      .agg((max(col("x")) - min(col("x"))).as("spread"))
-      .collect().groupBy(_.getLong(0))
-      .map { case (cid, rows) =>
-        cid -> rows.map(r => (r.getInt(1), r.getDouble(2)))
-          .minBy { case (pos, spread) => (-spread, pos) }._1
-      }
-    // per-list scalars enter the plan as MAP literals (element_at is one
-    // codegen'd lookup whatever the split-set size — the r14 verdict's
-    // CASE-breadth concern never arises for scalar routing; the chunk
-    // arithmetic keeps the exact float shape the oracle replays:
-    // integer-exact product in double, then double divide, then floor)
-    val ncD = typedLit(nChunksOf.map { case (c, n) => c -> n.toDouble })
-    val czD = typedLit(splitCids.map(c => c -> census(c).toDouble).toMap)
-    val ranked = members
-      .withColumn("ax",
-        element_at(col("xd"), element_at(typedLit(axisOf), col("cid0")) + 1))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy(col("cid0")).orderBy(col("ax"), col("id"))))
-      .withColumn("chunk",
-        floor((col("rk") - 1) * element_at(ncD, col("cid0")) /
-          element_at(czD, col("cid0"))).cast("long"))
-    val moved = ranked.select(col("id"), col("cid0").as("old_cid"),
-      when(col("chunk") === 0, col("cid0"))
-        .otherwise(element_at(typedLit(baseOf), col("cid0")) +
-          col("chunk") - 1)
-        .as("cid"))
-    val untouched = q.filter(!col("cid0").isin(splitCids: _*))
-      .select(col("id"), col("cid0").as("old_cid"), col("cid0").as("cid"))
-    // chunk floor-mean centroids (bounded: Σ nChunks ≤ nTot/T + |split|)
-    val cents: Map[(Long, Long), Array[Long]] = ranked
-      .select(col("cid0"), col("chunk"),
-        posexplode(col("xd")).as(Seq("pos", "x")))
-      .groupBy(col("cid0"), col("chunk"), col("pos"))
-      .agg(sum(col("x").cast("long")).as("s"), count(lit(1)).as("n"))
-      .collect().groupBy(r => (r.getLong(0), r.getLong(1)))
-      .map { case (key, rows) =>
-        key -> rows.sortBy(_.getInt(2))
-          .map(r => math.floor(r.getLong(3).toDouble / r.getLong(4)).toLong)
-      }
-    val newCb: Array[Array[Long]] =
-      codebook.zipWithIndex.map { case (c, i) =>
-        cents.getOrElse((i.toLong, 0L), c)
-      } ++ splitCids.flatMap(c =>
-        (1L until nChunksOf(c)).map(ch => cents((c, ch))))
-    q.unpersist() // same single-consumption-scan note as rebalanceLists
-    (untouched.unionByName(moved), newCb)
   }
 
   /** IVFADC list-skew rebalance (gate s37, r15) — [[splitListsEven]]
@@ -1722,15 +1709,9 @@ object Similarity {
                     vecCol: String = "embedding",
                     validate: Boolean = true): DataFrame = {
     require(coarseCb.nonEmpty, "encodeAtState: empty coarse codebook")
-    if (validate) {
-      val ghosts = state.select(col("id"))
-        .join(corpus.select(col(idCol).as("id")), Seq("id"), "left_anti")
-        .count() // assignment-table sized, never vector payloads
-      require(ghosts == 0L,
-        s"encodeAtState: $ghosts state rows have no corpus vector — " +
-          "they would silently vanish through the encode's inner join; " +
-          "the caller paired a stale corpus with a newer state")
-    }
+    if (validate)
+      requireNoGhosts("encodeAtState", state, corpus.select(col(idCol).as("id")),
+        "state", "they would silently vanish through the encode's inner join")
     val cbLit = typedLit(coarseCb.map(_.map(_.toDouble).toSeq).toSeq)
     quantized(corpus, scale, idCol, vecCol)
       .join(state.select(col("id"), col("cid").cast("long").as("cid")),
@@ -1787,21 +1768,10 @@ object Similarity {
       : (DataFrame, Array[Array[Long]]) = {
     val k = codebook.length
     require(k > 0, "mergeLists: empty codebook — nothing to merge")
-    val q = quantized(corpus, scale, idCol, vecCol)
-      .withColumn("cid0", nearestOfDots(fixedScores(codebook)).cast("long"))
-      .persist()
-    requireFixedPointBounds(q.select(col("id"), col("xd")), scale)
-    val census = q.groupBy(col("cid0")).count().collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
-    val nTot = census.values.sum
-    val merged = (0L until k.toLong).filter(c => policy.merges(census(c), k, nTot))
-    val survivors = (0L until k.toLong).filterNot(merged.contains)
-    require(survivors.nonEmpty,
-      s"mergeLists: the ${policy.mergeNumer}/${policy.mergeDenom} bar " +
-        "retires every list — there is no codebook left to serve; lower it")
-    val rankOf: Map[Long, Long] =
-      survivors.zipWithIndex.map { case (c, i) => c -> i.toLong }.toMap
-    val survCb: Array[Array[Long]] = survivors.map(c => codebook(c.toInt)).toArray
+    val (q, census, _) = listCensus("mergeLists", corpus, codebook, scale,
+      idCol, vecCol)
+    val (merged, survivors, rankOf, survCb) =
+      mergeDecision("mergeLists", codebook, census, policy)
     val kept = q.filter(col("cid0").isin(survivors: _*))
       .select(col("id"), col("cid0").as("old_cid"),
         element_at(typedLit(rankOf), col("cid0")).as("cid"))
@@ -1813,8 +1783,28 @@ object Similarity {
             // survCb is in survivor-cid order, so the argmax INDEX is
             // already the dense new cid — no second mapping
             nearestOfDots(fixedScores(survCb)).cast("long").as("cid")))
-    q.unpersist() // same single-consumption-scan note as rebalanceLists
+    q.unpersist() // same single-consumption-scan note as splitCut
     (out, survCb)
+  }
+
+  /** The merge decision [[mergeLists]] and [[mergeIvfPqIndex]] share:
+    * against the list census, the lists `policy` retires, the survivors
+    * in cid order, each survivor's dense new cid (its rank) and the
+    * surviving codebook in that order. Fails `op` loudly when the bar
+    * retires every list.
+    */
+  private def mergeDecision(op: String, codebook: Array[Array[Long]],
+                            census: Map[Long, Long], policy: MergePolicy)
+      : (Seq[Long], Seq[Long], Map[Long, Long], Array[Array[Long]]) = {
+    val k = codebook.length
+    val nTot = census.values.sum
+    val (merged, survivors) = (0L until k.toLong)
+      .partition(c => policy.merges(census.getOrElse(c, 0L), k, nTot))
+    require(survivors.nonEmpty,
+      s"$op: the ${policy.mergeNumer}/${policy.mergeDenom} bar " +
+        "retires every list — there is no codebook left to serve; lower it")
+    (merged, survivors, survivors.zipWithIndex.map { case (c, i) => c -> i.toLong }.toMap,
+      survivors.map(c => codebook(c.toInt)).toArray)
   }
 
   /** Apply a [[rebalanceLists]] movement to a cid-PARTITIONED on-disk
@@ -2224,34 +2214,20 @@ object Similarity {
     // re-encode's inner joins, and an index cid outside [0, k) matches
     // neither the survivors filter nor the merged one — either way the
     // caller paired a stale index with a mismatched corpus/codebook.
-    // Two bounded counts (id/cid columns only, never codes payloads).
-    val ghosts = index.select(col("id"))
-      .join(corpus.select(col(idCol).as("id")), Seq("id"), "left_anti")
-      .count()
-    require(ghosts == 0L,
-      s"mergeIvfPqIndex: $ghosts index rows have no corpus vector — " +
-        "their members would silently vanish through the orphan " +
-        "re-encode; the caller paired a stale corpus with a newer index")
-    val strays = index
-      .filter(col("cid").cast("long") < 0L ||
-        col("cid").cast("long") >= k.toLong).count()
+    // One anti-join count (id columns only, never codes payloads); the
+    // strays are the census keys outside [0, k).
+    requireNoGhosts("mergeIvfPqIndex", index, corpus.select(col(idCol).as("id")),
+      "index", "their members would silently vanish through the orphan re-encode")
+    val census = index.groupBy(col("cid").cast("long")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val strays = census.collect { case (c, n) if c < 0L || c >= k => n }.sum
     require(strays == 0L,
       s"mergeIvfPqIndex: $strays index rows sit in lists outside the " +
         s"$k-list codebook — they would match neither the survivor " +
         "carry nor the retire re-encode; the caller paired a stale " +
         "codebook with a newer index")
-    val census = index.groupBy(col("cid").cast("long").as("cid")).count()
-      .collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap.withDefaultValue(0L)
-    val nTot = census.values.sum
-    val merged = (0L until k.toLong).filter(c => policy.merges(census(c), k, nTot))
-    val survivors = (0L until k.toLong).filterNot(merged.contains)
-    require(survivors.nonEmpty,
-      s"mergeIvfPqIndex: the ${policy.mergeNumer}/${policy.mergeDenom} " +
-        "bar retires every list — there is no codebook left to serve")
-    val rankOf: Map[Long, Long] =
-      survivors.zipWithIndex.map { case (c, i) => c -> i.toLong }.toMap
-    val survCb: Array[Array[Long]] = survivors.map(c => coarseCb(c.toInt)).toArray
+    val (merged, survivors, rankOf, survCb) =
+      mergeDecision("mergeIvfPqIndex", coarseCb, census, policy)
     if (merged.isEmpty) return (index, coarseCb)
     val kept = index.filter(col("cid").isin(survivors: _*))
       .select(col("id"),

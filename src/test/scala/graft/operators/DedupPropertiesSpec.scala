@@ -349,4 +349,35 @@ class DedupPropertiesSpec extends SparkSpec {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  test("planWidth: Spark's own split and packing — multi-file parquet and an unsplittable gzip CSV") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_pw_split").toString
+    (1 to 2000).map(i => (i.toLong, s"text body $i ${i * 7919L % 10007}"))
+      .toDF("doc_id", "text").repartition(5).write.parquet(s"$dir/multi")
+    (1 to 20000).map(i => (i.toLong, s"row $i ${i * 7919L % 10007} ${i * 104729L % 1299709}"))
+      .toDF("doc_id", "text").coalesce(1).write
+      .option("compression", "gzip").csv(s"$dir/gz")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prev = spark.conf.getOption(key)
+    try {
+      // far below both inputs' bytes: a splittable file cuts into many
+      // chunks, the gzip file stays one
+      spark.conf.set(key, "4096")
+      val multi = spark.read.parquet(s"$dir/multi")
+      val gz = spark.read.schema("doc_id LONG, text STRING").csv(s"$dir/gz")
+      Dedup.planWidth(multi) shouldBe Some(multi.rdd.getNumPartitions)
+      Dedup.planWidth(gz) shouldBe Some(gz.rdd.getNumPartitions)
+      gz.rdd.getNumPartitions shouldBe 1
+      // a bucketed table's scan width may follow its buckets: no estimate
+      multi.write.bucketBy(4, "doc_id").mode("overwrite").saveAsTable("graft_pw_bucketed")
+      Dedup.planWidth(spark.table("graft_pw_bucketed")) shouldBe None
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS graft_pw_bucketed")
+      prev match {
+        case Some(v) => spark.conf.set(key, v)
+        case None => spark.conf.unset(key)
+      }
+    }
+  }
 }

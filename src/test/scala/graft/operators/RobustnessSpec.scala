@@ -69,18 +69,23 @@ class RobustnessSpec extends SparkSpec {
   test("fixed-point trainers fail loudly past the 2^53 exactness bound") {
     // |x| = 1e10 quantizes to 1e16 micro-units: 2c·x chains would pass
     // 2^53 and the 'integer arithmetic in doubles' theorem would
-    // silently stop holding — the guard must name the magnitude instead
-    val huge = Seq((1L, Array.fill(4)(1.0e10f)), (2L, Array.fill(4)(2.0e10f)))
-      .toDF("vec_id", "embedding")
-    val e1 = intercept[IllegalArgumentException] {
-      Similarity.kmeansTrainFixedPoint(huge, k = 2, maxIter = 1)
+    // silently stop holding — the guard must name the magnitude instead.
+    // |x| = 1e13 quantizes past Long range: the guard's aggregate must
+    // still name it before an ANSI overflow of the update sums can.
+    val cb = Array(Array.fill(4)(0L), Array.fill(4)(1000000L))
+    for (x <- Seq(1.0e10f, 1.0e13f)) {
+      val huge = Seq((1L, Array.fill(4)(x)), (2L, Array.fill(4)(2 * x)))
+        .toDF("vec_id", "embedding")
+      def guarded(op: => Any) =
+        intercept[IllegalArgumentException](op).getMessage should include("exactness bound")
+      guarded(Similarity.kmeansTrainFixedPoint(huge, k = 2, maxIter = 1))
+      guarded(Similarity.kmeansTrainFixedPoint(huge, k = 2, maxIter = 0))
+      guarded(Similarity.pqTrainFixedPoint(huge, dim = 4, m = 2,
+        codebookSize = 2, maxIter = 1))
+      guarded(Similarity.rebalanceLists(huge, cb, Similarity.RebalancePolicy(1L, 1000L)))
+      guarded(Similarity.splitListsEven(huge, cb, Similarity.RebalancePolicy(1L, 1000L)))
+      guarded(Similarity.mergeLists(huge, cb, Similarity.MergePolicy(1L, 2L)))
     }
-    e1.getMessage should include("exactness bound")
-    val e2 = intercept[IllegalArgumentException] {
-      Similarity.pqTrainFixedPoint(huge, dim = 4, m = 2,
-        codebookSize = 2, maxIter = 1)
-    }
-    e2.getMessage should include("exactness bound")
     // and empty input does not trip the guard (null max aggregate)
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     Similarity.kmeansTrainFixedPoint(empty, k = 2, maxIter = 1).length shouldBe 0
@@ -319,25 +324,23 @@ class RobustnessSpec extends SparkSpec {
       QuantileRollup.percentiles(hist, Seq("g"), Seq.empty)
   }
 
-  test("rebalance sub-scores: the CASE and broadcast-join routes are bit-identical at an every-list-splits bar") {
-    // r14 verdict #6: above `caseMaxLists` split lists the per-row
-    // sub-centroid scores route through a broadcast join instead of a
-    // CASE chain. Pin both routes identical where EVERY list splits
-    // (bar 1/1000: any size-≥2 list crosses) — the adversarial policy
-    // whose CASE breadth the threshold exists to cap.
+  test("rebalance sub-scores: one route at an every-list-splits bar") {
+    // r14 verdict #6: the per-row sub-centroid scores must not widen
+    // with the split set. They read array literals indexed by cid, so
+    // an every-list-splits bar (1/1000: any size-≥2 list crosses) plans
+    // the same lookup as one hot list — and stays exact, so the cut is
+    // identical across partitionings.
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val cb = Similarity.kmeansTrainFixedPoint(emb, k = 8, maxIter = 2)
     val bar = Similarity.RebalancePolicy(1L, 1000L)
-    def run(caseMax: Int) = {
-      val (m, ncb) = Similarity.rebalanceLists(emb, cb, bar,
-        maxIter = 1, caseMaxLists = caseMax)
+    def run(corpus: DataFrame) = {
+      val (m, ncb) = Similarity.rebalanceLists(corpus, cb, bar, maxIter = 1)
       (m.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sortBy(_._1).toSeq, ncb.map(_.toSeq).toSeq)
     }
-    val viaCase = run(Int.MaxValue) // every split list through the CASE
-    val viaJoin = run(0)            // every split list through the join
-    viaJoin shouldBe viaCase
-    viaCase._2.length should be > cb.length // the bar really split
+    val one = run(emb.repartition(1))
+    run(emb.repartition(7, col("vec_id"))) shouldBe one
+    one._2.length should be > cb.length // the bar really split
   }
 
   test("quantile rollup: empty input and single-value input both run") {

@@ -81,7 +81,7 @@ class BoundaryJobsSpec extends SparkSpec {
   }
 
   // (delta, drift-retrain, census-cut) jobs per family
-  private val pinned = Map("assign" -> ((25, 40, 67)), "ivfpq" -> ((25, 38, 78)))
+  private val pinned = Map("assign" -> ((25, 38, 63)), "ivfpq" -> ((25, 34, 74)))
 
   for (family <- Seq("assign", "ivfpq"))
     test(s"$family retrain loop: delta, drift-retrain and census-cut boundaries launch their pinned job counts") {
