@@ -21,7 +21,10 @@
 #       pinned Spark job count; and graft.operators.TrainerJobsSpec — the
 #       fixed-point k-means and PQ trainers launch theirs (the exactness
 #       guard rides an aggregate they already run). A job added to any of
-#       these paths fails here with the new count.
+#       these paths fails here with the new count. And
+#       graft.functions.MinHashSigSpec — the codegen'd MinHash signature,
+#       the 60-bit MD5 hash and the word n-grams stay byte-identical to
+#       the column forms they replaced, generated and interpreted.
 # A deliberately-dangling roster entry (e.g. add "q999_nope" to
 # ScaleProbe.DefaultProbes) fails step (b) — that is the self-test.
 #   (c) the full gate suite executed + oracle-checked at sf0.001 — the
@@ -39,7 +42,10 @@
 #       the one-record-codec rule: Avro container files are written only
 #       by graft.sources.AvroRecordFiles, so a `DataFileWriter` anywhere
 #       else under src/main (a second copy of the record-file writer)
-#       fails here.
+#       fails here. And the one-portable-hash rule: the 60-bit MD5 hash
+#       is graft.functions.Md5_64, read off the digest, so a
+#       `conv(substring(md5(` under src/main (the hex-string round trip
+#       it replaced) fails here.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 if grep -rn "SparkSession\.builder" src/ \
@@ -57,7 +63,11 @@ if grep -rn "DataFileWriter" src/main/ \
   echo "preflight FAILED: DataFileWriter outside graft.sources.AvroRecordFiles (above) — write record files with AvroRecordFiles.ContainerWriter"
   exit 1
 fi
-sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec graft.engine.RunJobsSpec graft.streaming.BoundaryJobsSpec graft.operators.TrainerJobsSpec" 2>&1 | tail -20
+if grep -rn "conv(substring(md5(" src/main/; then
+  echo "preflight FAILED: the MD5 hex round trip under src/main (above) — hash with PortableHash.md5_64 (the Md5_64 expression)"
+  exit 1
+fi
+sbt -batch Test/compile "Test/testOnly graft.SparkEntrySpec graft.sources.LocalFsForkSpec graft.engine.RunJobsSpec graft.streaming.BoundaryJobsSpec graft.operators.TrainerJobsSpec graft.functions.MinHashSigSpec" 2>&1 | tail -20
 OUT=$(mktemp -d /tmp/preflight_sf0001.XXXX)
 LOG=$(mktemp /tmp/preflight_verify.XXXX.log)
 trap 'rm -rf "$OUT" "$LOG"' EXIT
@@ -80,4 +90,4 @@ python3 scripts/check.py /root/testdata/sf0.001 "$OUT" \
 #       prove the checker itself still fails on `{}`.
 python3 scripts/roster_check.py --selftest
 python3 scripts/roster_check.py . "$OUT"
-echo "preflight OK: one session builder, one conf broadcast, one record-file writer, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"
+echo "preflight OK: one session builder, one conf broadcast, one record-file writer, one portable hash, Test/compile green, driver contract + probe roster intact, sf0.001 sweep green, correctness-artifact roster tripwire armed"

@@ -95,15 +95,21 @@ object Dedup {
   /** Word-level n-grams of a text column (NON-distinct; texts shorter
     * than n fall back to one whole-text gram). Single source of truth for
     * gram construction — every operator and hand-matched oracle derives
-    * from this definition.
+    * from this definition; [[graft.functions.MinHashSig]] walks the same
+    * grams as byte ranges. The split is bound once per row as the
+    * argument of a one-element `transform`, so the gram lambda reads a
+    * lambda variable instead of re-splitting the text per gram.
     */
   def ngrams(textCol: Column, n: Int): Column =
-    ngramsOfWords(split(textCol, " "), n)
+    element_at(transform(array(split(textCol, " ")),
+      ws => ngramsOfWords(ws, n)), 1)
 
-  /** [[ngrams]] over an already-tokenized words array. Callers that have
-    * materialized the split (a `_ws` column) use this so the expression
-    * references a cheap attribute 4× instead of re-running split() 4× —
-    * the words array is built once per row, not once per reference.
+  /** [[ngrams]] over an already-tokenized words array: gram i is the
+    * words i … i+n−1 joined by one space, so over a split on " " it is
+    * the byte range of those words in the text. `ws` is referenced once
+    * per gram, so it must be cheap to re-read — a column (a materialized
+    * `_ws`) or a lambda variable, never `split(…)` itself, which would
+    * re-tokenize the row once per gram.
     */
   def ngramsOfWords(ws: Column, n: Int): Column =
     when(size(ws) >= n,
@@ -394,27 +400,17 @@ object Dedup {
     * frequency cap — that is a corpus-level statistic a scalar can't see;
     * use [[minhashSignatures]] when the capped universe is wanted). Same
     * [[graft.functions.PortableHash]] family as the index path, but the
-    * k minima fold inside one projection: ZERO shuffle to compute every
+    * k minima fold inside one codegen'd expression
+    * ([[graft.functions.MinHashSig]]: one tokenization, one MD5 per gram,
+    * one loop over the k derived hashes): ZERO shuffle to compute every
     * signature in the corpus, which is also what makes it registrable as
     * the SQL function `graft_minhash_sig`. Null for texts with no
     * shingles is impossible by construction ([[ngrams]] falls back to the
-    * whole text), so the output is always a k-long array.
+    * whole text, a null text to the empty gram), so the output is always
+    * a k-long array.
     */
-  def minhashSigKernel(textCol: Column, shingleN: Int, k: Int): Column = {
-    import graft.functions.PortableHash
-    val hb = transform(shingles(textCol, shingleN),
-      s => PortableHash.md5_64(s) % PortableHash.Mod31)
-    // ONE fold over the shingle hashes carrying all k running minima:
-    // k separate array_min(transform(hb, …)) terms would re-evaluate hb
-    // (shingling + md5) k times — HOF subtrees are interpreted, not CSE'd
-    // — which measured 17× slower at sf0.1. hb is never empty (ngrams
-    // falls back to a whole-text gram), so the MaxValue seed never
-    // survives.
-    val seed = array((0 until k).map(_ => lit(Long.MaxValue)): _*)
-    aggregate(hb, seed, (acc, h) =>
-      zip_with(acc, array((0 until k).map(i => PortableHash.derived(h, i)): _*),
-        (a, d) => least(a, d)))
-  }
+  def minhashSigKernel(textCol: Column, shingleN: Int, k: Int): Column =
+    graft.functions.MinHashSig(textCol, shingleN, k)
 
   private def signaturesFromIndex(idx: DataFrame, k: Int): DataFrame = {
     import graft.functions.PortableHash

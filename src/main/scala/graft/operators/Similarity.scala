@@ -459,16 +459,22 @@ object Similarity {
     * argument has ~1e9 of slack). One (keys…, p) hash-aggregate; keys
     * read back as Longs. With a `guard` (op, scale) the same aggregate
     * carries the rows' [[Magnitude]] (dim = max p + 1, rows = the
-    * counts at p = 0), checked before any centroid is computed.
+    * counts at p = 0), checked before any centroid is computed, and
+    * sums the values [[Magnitude.masked]]. A call without a guard sums
+    * plain values and computes none of that: its rows were already
+    * checked, by a training's first update or by a cut's census.
     */
   private def floorMeans(rows: DataFrame, keys: Seq[String],
                          guard: Option[(String, Long)] = None)
       : Map[Seq[Long], Array[Long]] = {
     val nk = keys.length
+    val stats = guard.fold(Seq(sum(col("x").cast("long")), count(lit(1)))) { _ =>
+      Seq(sum(Magnitude.masked(col("x")).cast("long")), count(lit(1)),
+        max(abs(col("x"))), max(col("p") + 1), count(when(col("p") === 0, 1)))
+    }
     val groups = rows
       .groupBy(keys.map(col(_).cast("long")) :+ col("p"): _*)
-      .agg(sum(Magnitude.masked(col("x")).cast("long")), count(lit(1)),
-        max(abs(col("x"))), max(col("p") + 1), count(when(col("p") === 0, 1)))
+      .agg(stats.head, stats.tail: _*)
       .collect()
     guard.foreach { case (op, scale) => Magnitude.of(groups).check(op, scale) }
     groups.groupBy(r => (0 until nk).map(r.getLong)).map { case (key, rs) =>
@@ -1287,31 +1293,33 @@ object Similarity {
     // before the envelope values are trusted — a violating row makes
     // the require throw and the (garbage) n2 extremes are never used,
     // the same fail-loud contract as the three-job shape.
+    // a row whose Σx² reaches 2⁵³ fails the bound below; masked out of
+    // the Long cast, it cannot raise an ANSI overflow before the named
+    // error (the trainers' Magnitude.masked rule)
+    val n2 = aggregate(col("xd"), lit(0.0d), (acc, x) => acc + x * x)
     val r = quantized(df, scale, idCol, vecCol)
       .select(col("xd"),
-        aggregate(col("xd"), lit(0.0d), (acc, x) => acc + x * x)
-          .cast("long").as("n2"))
+        when(n2 < lit(math.pow(2, 53)), n2).cast("long").as("n2"))
       .agg(
         max(array_max(transform(col("xd"), x => abs(x)))).as("m"),
         max(size(col("xd"))).as("dim"),
         min(col("n2")).as("minN2"), max(col("n2")).as("maxN2")).head()
+    // the bound is checked first: when every row is masked, the n2
+    // extremes are null but the magnitude is not
+    val m = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+    val dim = if (r.isNullAt(1)) 0 else r.getInt(1)
+    require(m * m * math.max(dim, 1) < math.pow(2, 53),
+      f"normEnvelope: quantized magnitude $m%.0f at dim=$dim " +
+        f"(scale=$scale) overflows the 2^53-exact per-row Σx² — " +
+        "the envelope would silently stop being integer " +
+        "arithmetic; lower the scale")
     // emptiness is decided on the n2 extremes, NOT the magnitude bound
     // (r17 advice): a frame whose every vector is EMPTY has null m
     // (array_max of an empty array) but n2 = 0 per row — the fused pass
     // must return Some((0, 0)) exactly like the pre-fusion two-pass
     // shape, so the norm-collapse tripwire widens to zero instead of
     // keeping a stale envelope
-    if (r.isNullAt(2)) None
-    else {
-      val m = if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      val dim = if (r.isNullAt(1)) 0 else r.getInt(1)
-      require(m * m * math.max(dim, 1) < math.pow(2, 53),
-        f"normEnvelope: quantized magnitude $m%.0f at dim=$dim " +
-          f"(scale=$scale) overflows the 2^53-exact per-row Σx² — " +
-          "the envelope would silently stop being integer " +
-          "arithmetic; lower the scale")
-      Some((r.getLong(2), r.getLong(3)))
-    }
+    if (r.isNullAt(2)) None else Some((r.getLong(2), r.getLong(3)))
   }
 
   /** IVF list-skew rebalance (gate s30): split every overloaded

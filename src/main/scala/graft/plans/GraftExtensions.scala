@@ -90,7 +90,7 @@ object GraftExtensions {
     * pure SQL, so signature computation + LSH banding for near-dup
     * candidate generation needs no Scala (see the d13 gate for the full
     * banded pipeline written as one SQL string). shingleN/k must be
-    * literals: the k derived hash functions unroll at plan time.
+    * literals: they are parameters of the one codegen'd expression.
     */
   private def minhashSigBuilder(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
@@ -110,6 +110,7 @@ object GraftExtensions {
     "graft_fingerprint" -> colKernel(TextAnalysis.contentFingerprint),
     "graft_fp_min" -> colKernel(c => TextAnalysis.robustFingerprintMin(c)),
     "graft_fp_max" -> colKernel(c => TextAnalysis.robustFingerprintMax(c)),
+    "graft_md5_64" -> colKernel(graft.functions.PortableHash.md5_64),
     "graft_sign_bits" -> (signBitsBuilder _),
     "graft_minhash_sig" -> (minhashSigBuilder _))
 

@@ -747,8 +747,6 @@ object DedupQueries {
     * 3-shingle sets, semi-joined to candidates.
     */
   private def sqlMinhashSparkSql(spread: Boolean, numPartitions: Int): String = {
-    val md5_64 = (e: String) =>
-      s"CAST(conv(substring(md5(CAST($e AS BINARY)), 1, 15), 16, 10) AS BIGINT)"
     // `spread` (r17, guide §2.5): when the documents scan is
     // unsplittable (single file / row group) the signature kernel runs
     // serially — a REPARTITION hint spreads it; the builder only sets
@@ -765,7 +763,7 @@ object DedupQueries {
       SELECT $hint doc_id, graft_minhash_sig(text, 3, 32) AS sig FROM documents_sql),
     banded AS (
       SELECT doc_id, b,
-             ${md5_64("concat_ws(',', transform(slice(sig, b * 4 + 1, 4), x -> CAST(x AS STRING)))")} AS bh
+             graft_md5_64(concat_ws(',', transform(slice(sig, b * 4 + 1, 4), x -> CAST(x AS STRING)))) AS bh
       FROM sigs LATERAL VIEW explode(sequence(0, 7)) t AS b),
     capped AS (
       SELECT doc_id, b, bh FROM (

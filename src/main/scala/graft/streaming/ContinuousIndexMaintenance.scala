@@ -160,8 +160,10 @@ object ContinuousIndexMaintenance {
     * versions. Only those two name shapes are lineage-owned: stray
     * entries in a caller-supplied dir (checkpoint crumbs, editor
     * droppings) are ignored by resolution and untouched by the vacuum.
+    * Bases are written partitioned by `partitionCols`.
     */
-  private[graft] final class Lineage(spark: SparkSession, val dir: String) {
+  private[graft] final class Lineage(spark: SparkSession, val dir: String,
+                                     partitionCols: Seq[String] = Nil) {
     import org.apache.hadoop.fs.Path
     private val root = new Path(dir)
     private val fs =
@@ -185,8 +187,7 @@ object ContinuousIndexMaintenance {
       }.sorted)
     }
 
-    def writeBase(df: DataFrame, v: Long,
-                  partitionCols: Seq[String] = Nil): Unit = {
+    def writeBase(df: DataFrame, v: Long): Unit = {
       val w = df.write.mode("overwrite")
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(s"$dir/v$v")
@@ -200,22 +201,49 @@ object ContinuousIndexMaintenance {
     def writeDelta(df: DataFrame, v: Long): Unit =
       df.write.mode("overwrite").parquet(s"$dir/d$v")
 
-    def readBase(v: Long): DataFrame = spark.read.parquet(s"$dir/v$v")
+    def readBase(v: Long): DataFrame = read("v", v)
+
+    def readDelta(v: Long): DataFrame = read("d", v)
+
+    // the schema Spark inferred on this lineage's first read of each
+    // artifact kind ("v" base, "d" delta): every artifact of a kind is
+    // written from the same column set, so later reads pass it instead
+    // of launching an inference job per read. It is Spark's own
+    // inference, so a `cid=` partition column stays the INT it infers.
+    private val schemas =
+      scala.collection.mutable.Map.empty[String, org.apache.spark.sql.types.StructType]
+
+    private def read(kind: String, v: Long): DataFrame = {
+      val path = s"$dir/$kind$v"
+      // a partitioned write of zero rows leaves no `col=` directory, and
+      // inference then drops the partition columns: such a base is read
+      // as inferred and its schema is not cached
+      val unpartitioned = kind == "v" && partitionCols.nonEmpty &&
+        !fs.listStatus(new Path(path)).exists(_.getPath.getName
+          .startsWith(partitionCols.head + "="))
+      schemas.get(kind) match {
+        case Some(st) if !unpartitioned => spark.read.schema(st).parquet(path)
+        case _ =>
+          val df = spark.read.parquet(path)
+          if (!unpartitioned) schemas(kind) = df.schema
+          df
+      }
+    }
 
     /** Persist boundary `b` — the compact-or-delta step every lineage
-      * shares: a full `base` (partitioned by `partitionCols`) when
-      * `compact` is set or the chain below b already trails
-      * compactEvery − 1 deltas, else the O(batch) delta of the kernel's
-      * `rows` plus one tombstone per id in `diff`. The decision counts
+      * shares: a full `base` when `compact` is set or the chain below b
+      * already trails compactEvery − 1 deltas, else the O(batch) delta
+      * of the kernel's `rows` plus one tombstone per id in `diff`. The
+      * decision counts
       * on-disk deltas strictly below b — a pure function of disk below
       * b (a boundary's own writes never change it), so redelivery
       * re-decides identically.
       */
     def writeBoundary(b: Long, policy: LineagePolicy, diff: DataFrame,
-        partitionCols: Seq[String] = Nil, compact: Boolean = false)(
+        compact: Boolean = false)(
         base: => DataFrame, rows: => DataFrame): Unit =
       if (compact || chainBelow(b)._2.size + 1 >= policy.compactEvery)
-        writeBase(base, b, partitionCols)
+        writeBase(base, b)
       else writeDelta(deltaRows(rows, diff), b)
 
     /** The composed state strictly below boundary `b`: the latest base
@@ -231,7 +259,7 @@ object ContinuousIndexMaintenance {
       val base = baseV.map(readBase).getOrElse(initial)
       if (deltaVs.isEmpty) base
       else {
-        val deltas = deltaVs.map(v => spark.read.parquet(s"$dir/d$v")
+        val deltas = deltaVs.map(v => readDelta(v)
           .withColumn(Lineage.Ver, lit(v))).reduce(_ unionByName _)
         val winners = deltas.withColumn(Lineage.MaxVer,
             max(col(Lineage.Ver)).over(org.apache.spark.sql.expressions
@@ -831,7 +859,7 @@ object ContinuousIndexMaintenance {
       policy: LineagePolicy = LineagePolicy()) extends StreamLoop[Run] {
     val boundaries = scala.collection.mutable.ArrayBuffer.empty[Boundary]
 
-    private val lin = new Lineage(spark, stateDir)
+    private val lin = new Lineage(spark, stateDir, partitionCols)
 
     def processBatch(batch: DataFrame, batchId: Long): Unit = {
       val (touched, signatured, _) = boundaryCounts(batch, idCol, batchId)
@@ -840,7 +868,7 @@ object ContinuousIndexMaintenance {
       // identical upsert the one-shot maintainer runs; an ordinary
       // boundary persists O(batch): the kernel's rows plus tombstones,
       // the unchanged corpus neither read nor written
-      lin.writeBoundary(batchId, policy, diff, partitionCols)(
+      lin.writeBoundary(batchId, policy, diff)(
         base = IndexMaintenance.upsert(lin.stateBelow(batchId, initialState),
           diff, docs, idCol)(_ => kernel(docs)),
         rows = kernel(docs))
@@ -1042,7 +1070,8 @@ object ContinuousIndexMaintenance {
     val normRecoveredAt = scala.collection.mutable.ArrayBuffer.empty[Long]
 
     private val corpusLin = new Lineage(spark, s"$root/corpus")
-    private val stateLin = new Lineage(spark, s"$root/${quantizer.dir}")
+    private val stateLin =
+      new Lineage(spark, s"$root/${quantizer.dir}", quantizer.partitionCols)
     private val cbLin = new Lineage(spark, s"$root/cb")
     private val censusLin = new Lineage(spark, s"$root/census")
     private val normLin = new Lineage(spark, s"$root/norm")
@@ -1198,7 +1227,7 @@ object ContinuousIndexMaintenance {
         val (tc, sc) = inMode(corpusV, "id")
         val (newCb, newState) = quantizer.retrain(stateBase, tc, sc, vecCol)
         writeCb(newCb, batchId)
-        stateLin.writeBase(newState, batchId, quantizer.partitionCols)
+        stateLin.writeBase(newState, batchId)
         if (recoverNow) normRecoveredAt += batchId
         else retrainedAt += batchId
         // a retrain rewrote every state row, so the incremental census
@@ -1217,8 +1246,8 @@ object ContinuousIndexMaintenance {
         val upserted = IndexMaintenance.upsert(stateBase, diff, docs,
           idCol)(_ => fresh)
         def advance(): Unit =
-          stateLin.writeBoundary(batchId, policy, diff,
-            quantizer.partitionCols)(base = upserted, rows = fresh)
+          stateLin.writeBoundary(batchId, policy, diff)(
+            base = upserted, rows = fresh)
         rebalancePolicy match {
           case None => advance()
           case Some(pol) =>
@@ -1267,7 +1296,7 @@ object ContinuousIndexMaintenance {
               writeCb(newCb, batchId)
               // the cut rewrites the full state by definition — a
               // natural compaction point, landed as a base
-              stateLin.writeBase(newState, batchId, quantizer.partitionCols)
+              stateLin.writeBase(newState, batchId)
               rebalancedAt += batchId
               // post-split census from the movement's mover counts —
               // the split lists' members, never a state scan

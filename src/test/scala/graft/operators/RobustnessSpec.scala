@@ -91,6 +91,18 @@ class RobustnessSpec extends SparkSpec {
     Similarity.kmeansTrainFixedPoint(empty, k = 2, maxIter = 1).length shouldBe 0
   }
 
+  test("normEnvelope names its 2^53 per-row bound before an ANSI overflow of Σx²") {
+    // dim 4 at scale 1e6: |x| = 1e10 quantizes to 1e16, whose Σx² = 4e32
+    // passes Long range; |x| = 1e13 quantizes past Long range itself.
+    // The in-bound row beside it must not hide the out-of-bound one.
+    for (x <- Seq(1.0e10f, 1.0e13f)) {
+      val huge = Seq((1L, Array.fill(4)(1.0f)), (2L, Array.fill(4)(x)))
+        .toDF("vec_id", "embedding")
+      intercept[IllegalArgumentException](Similarity.normEnvelope(huge, 1000000L))
+        .getMessage should include("overflows the 2^53-exact per-row Σx²")
+    }
+  }
+
   test("pqTrainFixedPoint: empty corpus → empty codebooks; search rejects the shape loudly") {
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val cbs = Similarity.pqTrainFixedPoint(empty, dim = 4, m = 2,

@@ -39,6 +39,22 @@ class BoundaryJobsSpec extends SparkSpec {
     (delta, compact) shouldBe ((4, 9))
   }
 
+  test("minhash loop: a compaction over three deltas infers the delta schema once") {
+    val init = Dedup.minhashIndexState(Seq(
+        (1L, "alpha beta gamma delta epsilon"),
+        (2L, "one two three four five six")).toDF("doc_id", "text"),
+      "text", "doc_id").localCheckpoint()
+    val loop = ContinuousIndexMaintenance.minhashLoop(spark, init,
+      "text", "doc_id", 32, 8, 3, tmp("graft_jobs_mh3"),
+      ContinuousIndexMaintenance.LineagePolicy(compactEvery = 4))
+    def batch(id: Long, text: String) =
+      Seq((id, text, "added")).toDF("doc_id", "text", "status")
+    loop.processBatch(batch(3L, "red green blue yellow purple"), 0L)
+    loop.processBatch(batch(4L, "north south east west center"), 1L)
+    loop.processBatch(batch(5L, "new doc body arrives here now"), 2L)
+    jobsOf(loop.processBatch(batch(6L, "one more text to index"), 3L)) shouldBe 9
+  }
+
   // the s34 hand fixture (c0 = origin, c1 = (1,1), c2 far and empty)
   // plus one residual subspace for the IVF-PQ family
   private val cb = Array(Array(0L, 0L), Array(1000000L, 1000000L),
@@ -81,7 +97,7 @@ class BoundaryJobsSpec extends SparkSpec {
   }
 
   // (delta, drift-retrain, census-cut) jobs per family
-  private val pinned = Map("assign" -> ((25, 38, 63)), "ivfpq" -> ((25, 34, 74)))
+  private val pinned = Map("assign" -> ((22, 37, 60)), "ivfpq" -> ((22, 33, 71)))
 
   for (family <- Seq("assign", "ivfpq"))
     test(s"$family retrain loop: delta, drift-retrain and census-cut boundaries launch their pinned job counts") {
